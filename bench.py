@@ -442,6 +442,17 @@ def _ann_train_probe(spark, queries) -> float:
 
 STREAM_ROWS_N = 500_000  # fixed bounded input for the streaming rows
 STREAM_N_USERS = 5_000
+STREAM_GEN_VERSION = 1  # bump whenever _stage_stream_input's generator changes
+
+
+def _stream_input_dir() -> str:
+    """Cache dir of the staged stream inputs, named by every parameter the
+    generator reads, so a changed size or generator never reuses a stale
+    input."""
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"bench_stream_src_n{STREAM_ROWS_N}_u{STREAM_N_USERS}_v{STREAM_GEN_VERSION}",
+    )
 
 
 def _stage_stream_input(spark) -> tuple[str, str]:
@@ -450,7 +461,7 @@ def _stage_stream_input(spark) -> tuple[str, str]:
     Deterministic: pure functions of ``id``."""
     from pyspark.sql import functions as F
 
-    base = os.path.join(tempfile.gettempdir(), "bench_stream_src")
+    base = _stream_input_dir()
     ev_dir = os.path.join(base, "events")
     od_dir = os.path.join(base, "orders")
     marker = os.path.join(base, "_READY")
@@ -683,7 +694,7 @@ def main() -> None:
         # Run-1 (scratch-cold + codegen-compile) time per row; `queries`
         # (the min) remains THE series — see BASELINE.md "Cold vs warm
         # accounting". Dropped from stdout before anything else if the
-        # one-line budget is tight; always present in bench_full.json.
+        # one-line budget is tight, and then kept in bench_full.json.
         "queries_cold": cold,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calibration_sec": calibration,
@@ -703,54 +714,56 @@ def main() -> None:
         # history remains available to readers in the BENCH_r*.json
         # artifacts themselves (which _load_history reads).
         payload["history_totals"] = {k: v["total"] for k, v in history.items()}
-    # One-line budget (see the tail-budget note below): the FULL payload
-    # always lands in bench_full.json; stdout sheds diagnostic-only fields
-    # (history_totals first, then queries_cold) before falling back to the
-    # compact line, so `queries` — the driver's per-row series — never
-    # leaves stdout except in the oversized --wide case.
-    sidecar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_full.json"
-    )
-    full_line = json.dumps(payload)
-    stdout_payload = _shed_for_stdout(payload)
-    if len(json.dumps(stdout_payload)) > 1900:
-        with open(sidecar, "w") as f:
-            f.write(full_line + "\n")
-    line = json.dumps(stdout_payload)
-    # One-line contract: stdout carries exactly ONE JSON line, sized to
-    # fit the driver's ~2000-char tail capture with headroom for trailing
-    # log noise. TAIL-BUDGET FRAGILITY (VERDICT r12 #7): anything the
-    # JVM prints to stdout AFTER this line (log4j ERROR lines from a
-    # late failure — the broken r12 calibration did exactly this)
-    # competes with the payload for that 2000-char window; keep every
-    # fallible step ABOVE this point and let per-step try/except route
-    # diagnostics into payload["errors"], never raw stdout.
-    # Printing the full payload AND a compact fallback would
-    # leave a first-JSON-line parser reading the truncation-prone big
-    # line (ADVICE r6) — so when oversized, the full payload goes to a
-    # sidecar file and only the compact line hits stdout.
-    if len(line) > 1900:
-        # full payload already in the sidecar (written above)
-        print(
-            json.dumps(
-                {
-                    "metric": payload["metric"],
-                    "value": payload["value"],
-                    "unit": payload["unit"],
-                    "sf": payload["sf"],
-                    "calibration_sec": calibration,
-                    "calibration_io_sec": calibration_io,
-                    "n_queries": len(results),
-                    "n_errors": len(errors),
-                    "full_payload": "bench_full.json",
-                }
-            )
-        )
-    else:
-        print(line)
+    print(_stdout_line(
+        payload, os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_full.json")
+    ))
 
 
 STDOUT_LINE_BUDGET = 1900  # driver tail capture is ~2000 chars
+
+
+def _stdout_line(payload: dict, sidecar: str) -> str:
+    """The one JSON line main() prints for ``payload``.
+
+    One-line budget: whenever the FULL payload is over
+    STDOUT_LINE_BUDGET it is written to ``sidecar``, so nothing stdout
+    sheds is lost; stdout sheds diagnostic-only fields (history_totals
+    first, then queries_cold, see _shed_for_stdout) before falling back to
+    the compact line, so `queries` — the driver's per-row series — never
+    leaves stdout except in the oversized --wide case.
+
+    One-line contract: stdout carries exactly ONE JSON line, sized to
+    fit the driver's ~2000-char tail capture with headroom for trailing
+    log noise. TAIL-BUDGET FRAGILITY (VERDICT r12 #7): anything the
+    JVM prints to stdout AFTER this line (log4j ERROR lines from a
+    late failure — the broken r12 calibration did exactly this)
+    competes with the payload for that 2000-char window; keep every
+    fallible step ABOVE this point and let per-step try/except route
+    diagnostics into payload["errors"], never raw stdout.
+    Printing the full payload AND a compact fallback would
+    leave a first-JSON-line parser reading the truncation-prone big
+    line (ADVICE r6) — so when oversized, the full payload goes to the
+    sidecar file and only the compact line hits stdout."""
+    full_line = json.dumps(payload)
+    if len(full_line) > STDOUT_LINE_BUDGET:
+        with open(sidecar, "w") as f:
+            f.write(full_line + "\n")
+    line = json.dumps(_shed_for_stdout(payload))
+    if len(line) <= STDOUT_LINE_BUDGET:
+        return line
+    return json.dumps(
+        {
+            "metric": payload["metric"],
+            "value": payload["value"],
+            "unit": payload["unit"],
+            "sf": payload["sf"],
+            "calibration_sec": payload["calibration_sec"],
+            "calibration_io_sec": payload["calibration_io_sec"],
+            "n_queries": len(payload["queries"]),
+            "n_errors": len(payload.get("errors", {})),
+            "full_payload": os.path.basename(sidecar),
+        }
+    )
 
 
 def _shed_for_stdout(payload: dict) -> dict:
@@ -758,7 +771,7 @@ def _shed_for_stdout(payload: dict) -> dict:
     diagnostic-only fields in a fixed order (history_totals first, then
     queries_cold). `queries` — the driver's per-row series — is never
     shed; an oversized result after shedding falls back to the compact
-    line in main() with the full payload in bench_full.json."""
+    line in _stdout_line with the full payload in bench_full.json."""
     out = dict(payload)
     for shed in ("history_totals", "queries_cold"):
         if len(json.dumps(out)) <= STDOUT_LINE_BUDGET:

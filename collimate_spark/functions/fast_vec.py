@@ -8,10 +8,12 @@ multi-table sign-random-projection (SRP) LSH buckets.
 Determinism: training collects a deterministic vec_id-sampled subset,
 sorts it driver-side, and runs single-threaded numpy with fixed-seed
 PCG64 init — same data in, bit-identical centroids out, every run. The
-trained quantizer is memoized per (table path, k) so repeated query runs
+trained quantizer is memoized per (cache_key, k) so repeated query runs
 within a session reuse identical centroids (in production the quantizer
 is a persisted artifact trained offline; the memo is the in-session
-equivalent).
+equivalent). Operators pass the table's file identity
+(``catalog.table_identity``) as cache_key, so a table rewritten in place
+retrains instead of serving stale centroids.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ KMEANS_SEED = 4251
 KMEANS_ITERS = 25
 SAMPLE_CAP = 32768  # max vectors collected for quantizer training
 
-_QUANTIZER_CACHE: dict[tuple[str, int], np.ndarray] = {}
+_QUANTIZER_CACHE: dict[tuple[object, int], np.ndarray] = {}
 
 
 def _normalize(mat: np.ndarray) -> np.ndarray:
@@ -63,16 +65,17 @@ def train_spherical_kmeans(
     return C
 
 
-def trained_quantizer(spark, df, k: int, cache_key: str) -> np.ndarray:
+def trained_quantizer(spark, df, k: int, cache_key: object) -> np.ndarray:
     """Train (or fetch memoized) centroids for a DataFrame with
     (vec_id, embedding) columns. Sampling is deterministic — a pmod filter
     on xxhash64(vec_id) picked so ≈SAMPLE_CAP rows survive — and the
     collected sample is sorted by vec_id before training, so the result
-    does not depend on partition arrival order."""
+    does not depend on partition arrival order. ``cache_key`` must change
+    whenever ``df``'s data can; None trains without memoizing."""
     import pyspark.sql.functions as F
 
     key = (cache_key, k)
-    hit = _QUANTIZER_CACHE.get(key)
+    hit = _QUANTIZER_CACHE.get(key) if cache_key is not None else None
     if hit is not None:
         return hit
     n = df.count()
@@ -83,7 +86,8 @@ def trained_quantizer(spark, df, k: int, cache_key: str) -> np.ndarray:
     rows = sorted(sample.collect(), key=lambda r: r[0])
     X = np.array([r[1] for r in rows], dtype=np.float64)
     C = train_spherical_kmeans(X, k)
-    _QUANTIZER_CACHE[key] = C
+    if cache_key is not None:
+        _QUANTIZER_CACHE[key] = C
     return C
 
 
@@ -151,7 +155,7 @@ def srp_probe_masks(bits: int = SRP_BITS, radius: int = SRP_PROBE_RADIUS) -> lis
 PQ_M = 8  # subspaces (64-dim -> 8 chunks of 8 dims)
 PQ_KS = 16  # centroids per subspace -> 4-bit codes, m bytes per vector
 
-_PQ_CACHE: dict[tuple[str, int, int], np.ndarray] = {}
+_PQ_CACHE: dict[tuple[object, int, int], np.ndarray] = {}
 
 
 def _train_kmeans_l2(
@@ -186,16 +190,17 @@ def _train_kmeans_l2(
 
 
 def trained_pq_codebooks(
-    spark, df, m: int = PQ_M, ks: int = PQ_KS, cache_key: str = ""
+    spark, df, m: int = PQ_M, ks: int = PQ_KS, cache_key: object = None
 ) -> np.ndarray:
     """Train (or fetch memoized) PQ codebooks, shape (m, ks, dim/m), on the
     same deterministic bounded sample as ``trained_quantizer``. Vectors
     are L2-normalized BEFORE splitting, so squared ADC distance is
-    monotone in cosine (on the unit sphere L2² = 2 − 2·cos)."""
+    monotone in cosine (on the unit sphere L2² = 2 − 2·cos). Memoized per
+    (cache_key, m, ks) under the same rule as ``trained_quantizer``."""
     import pyspark.sql.functions as F
 
     key = (cache_key, m, ks)
-    hit = _PQ_CACHE.get(key)
+    hit = _PQ_CACHE.get(key) if cache_key is not None else None
     if hit is not None:
         return hit
     n = df.count()
@@ -212,7 +217,8 @@ def trained_pq_codebooks(
             for j in range(m)
         ]
     )
-    _PQ_CACHE[key] = books
+    if cache_key is not None:
+        _PQ_CACHE[key] = books
     return books
 
 

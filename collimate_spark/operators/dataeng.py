@@ -363,8 +363,11 @@ def pit_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (boundary rows only) — the r13 blocked-pair one-explode device —
     producing the identical union multiset from one scan, and both
     windows share the same hashpartitioning(user_id) exchange. Plan:
-    4 scans / 4 exchanges / 1 aggregate → 1 scan / 1 exchange / 0
-    aggregates (plans/r14/pit_join_scd2_{before,after}.txt). The SCD2
+    2 scans / 4 exchanges / 1 aggregate → 1 scan / 2 exchanges (the
+    shared user_id hash exchange + the final orderBy's range exchange) /
+    0 aggregates, pinned by test_plans.py's
+    test_pit_join_scd2_single_scan_no_aggregate
+    (plans/r14/pit_join_scd2_{before,after}.txt). The SCD2
     dimension builder itself (scd2_user_segments) is untouched — this
     inlines only what the probe query needs."""
     ev = load_table(spark, "events", sf_dir)

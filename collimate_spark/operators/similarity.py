@@ -36,7 +36,7 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.functions import pandas_udf
 
-from collimate_spark.catalog import load_table
+from collimate_spark.catalog import load_table, table_identity
 from collimate_spark.scratch import scache
 from collimate_spark.functions import fast_vec
 from collimate_spark.functions import vectors as V
@@ -221,7 +221,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned; on the isotropic driver testdata recall ≈ scan fraction for
     any ANN method — see module docstring)."""
     emb = load_table(spark, "embeddings", sf_dir)
-    C = fast_vec.trained_quantizer(spark, emb, IVF_K, cache_key=sf_dir)
+    C = fast_vec.trained_quantizer(
+        spark, emb, IVF_K, cache_key=table_identity("embeddings", sf_dir)
+    )
 
     @pandas_udf(T.IntegerType())
     def assign_udf(s: pd.Series) -> pd.Series:
@@ -333,7 +335,9 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     testable alone.) Approximate by construction → rows-only driver
     check; recall vs brute force asserted in tests/test_similarity.py."""
     emb = load_table(spark, "embeddings", sf_dir)
-    books = fast_vec.trained_pq_codebooks(spark, emb, cache_key=sf_dir)
+    books = fast_vec.trained_pq_codebooks(
+        spark, emb, cache_key=table_identity("embeddings", sf_dir)
+    )
     q_rows = sorted(
         emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").collect(),
         key=lambda r: r[0],
@@ -389,8 +393,9 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-scale ANN index. Rows-only; recall vs brute force on the
     clustered fixture asserted in tests/test_similarity.py."""
     emb = load_table(spark, "embeddings", sf_dir)
-    C = fast_vec.trained_quantizer(spark, emb, IVF_K, cache_key=sf_dir)
-    books = fast_vec.trained_pq_codebooks(spark, emb, cache_key=sf_dir)
+    ident = table_identity("embeddings", sf_dir)
+    C = fast_vec.trained_quantizer(spark, emb, IVF_K, cache_key=ident)
+    books = fast_vec.trained_pq_codebooks(spark, emb, cache_key=ident)
     q_rows = sorted(
         emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding").collect(),
         key=lambda r: r[0],

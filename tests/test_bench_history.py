@@ -15,6 +15,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
@@ -84,13 +86,17 @@ def test_shed_keeps_everything_when_line_fits():
 
 
 def test_shed_drops_history_then_cold_but_never_queries():
-    # Force oversize: enough padding that only dropping BOTH extras fits.
-    p = _payload(pad=1400)
+    def without(p, *keys):
+        return {k: v for k, v in p.items() if k not in keys}
+
+    p = _payload(pad=600)  # fits once history_totals is shed
     out = bench._shed_for_stdout(p)
-    assert "queries" in out and out["queries"] == p["queries"]
-    assert "history_totals" not in out
-    # queries_cold survives only if the line now fits; with this pad it does
-    assert len(json.dumps(out)) <= bench.STDOUT_LINE_BUDGET or "queries_cold" not in out
+    assert out == without(p, "history_totals")
+    assert len(json.dumps(out)) <= bench.STDOUT_LINE_BUDGET
+    p = _payload(pad=1000)  # fits only once queries_cold is shed too
+    out = bench._shed_for_stdout(p)
+    assert out == without(p, "history_totals", "queries_cold")
+    assert len(json.dumps(out)) <= bench.STDOUT_LINE_BUDGET
 
 
 def test_shed_never_touches_the_series_fields():
@@ -99,3 +105,41 @@ def test_shed_never_touches_the_series_fields():
     assert out["queries"] == p["queries"]
     assert out["value"] == p["value"]
     assert "queries_cold" not in out and "history_totals" not in out
+
+
+# --- sidecar: every shed field is persisted -------------------------------
+
+
+def _calibrated(p):
+    return {**p, "calibration_sec": 1.0, "calibration_io_sec": 2.0}
+
+
+def test_sidecar_persists_shed_fields(tmp_path):
+    sidecar = tmp_path / "bench_full.json"
+    p = _calibrated(_payload(pad=600))
+    assert len(json.dumps(p)) > bench.STDOUT_LINE_BUDGET
+    line = bench._stdout_line(p, str(sidecar))
+    assert "history_totals" not in json.loads(line)
+    assert json.loads(sidecar.read_text()) == p
+
+
+def test_sidecar_holds_full_payload_behind_compact_line(tmp_path):
+    sidecar = tmp_path / "bench_full.json"
+    p = _calibrated(_payload(n_queries=220))
+    line = json.loads(bench._stdout_line(p, str(sidecar)))
+    assert line["full_payload"] == "bench_full.json" and line["n_queries"] == 220
+    assert json.loads(sidecar.read_text()) == p
+
+
+def test_no_sidecar_when_payload_fits(tmp_path):
+    sidecar = tmp_path / "bench_full.json"
+    p = _calibrated(_payload())
+    assert json.loads(bench._stdout_line(p, str(sidecar))) == p
+    assert not sidecar.exists()
+
+
+@pytest.mark.parametrize("name", ["STREAM_ROWS_N", "STREAM_N_USERS", "STREAM_GEN_VERSION"])
+def test_stream_input_dir_names_every_generator_parameter(monkeypatch, name):
+    before = bench._stream_input_dir()
+    monkeypatch.setattr(bench, name, getattr(bench, name) + 1)
+    assert bench._stream_input_dir() != before

@@ -1,13 +1,25 @@
-"""events.ts dtype contract: every consumer may rely on one documented
-type (catalog.EVENTS_TS_DTYPE == timestamp_ntz) regardless of the on-disk
+"""Catalog contracts.
+
+events.ts dtype: every consumer may rely on one documented type
+(catalog.EVENTS_TS_DTYPE == timestamp_ntz) regardless of the on-disk
 encoding — round-2's bench-killing regression was a consumer assuming an
-accidental dtype."""
+accidental dtype.
+
+Schema memo: a repeat load of an unchanged table starts no Spark job, and
+a table rewritten in place or read under other Parquet inference confs
+gets the schema inference gives.
+"""
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -57,3 +69,101 @@ def test_legacy_ltz_normalizes_tz_independently(spark):
         assert got["s"] == "2021-03-28 01:30:00.500000"
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+# --- schema memo ---------------------------------------------------------
+
+
+def _jobs_started_by(spark, fn) -> int:
+    """Spark jobs ``fn`` starts on this thread, read from the status tracker.
+    A sentinel job run afterwards in its own group is waited for first:
+    the listener handles job starts in order, so once the sentinel shows,
+    every job ``fn`` started shows too."""
+    sc = spark.sparkContext
+    group, sentinel = f"memo-{uuid.uuid4()}", f"sentinel-{uuid.uuid4()}"
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        sc.setJobGroup(sentinel, sentinel)
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(sentinel):
+        assert time.time() < deadline, "sentinel job never reached the status tracker"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_second_load_of_unchanged_table_starts_no_job(spark, tmp_path):
+    shutil.copy(f"{SF_DIR}/nation.parquet", tmp_path / "nation.parquet")
+    assert _jobs_started_by(spark, lambda: load_table(spark, "nation", str(tmp_path))) >= 1
+    assert _jobs_started_by(spark, lambda: load_table(spark, "nation", str(tmp_path))) == 0
+
+
+def test_table_rewritten_in_place_loads_new_columns(spark, tmp_path):
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert load_table(spark, "t", str(tmp_path)).columns == ["a"]
+    assert load_table(spark, "t", str(tmp_path)).columns == ["a"]
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    df = load_table(spark, "t", str(tmp_path))
+    assert df.columns == ["a", "b"]
+    assert sorted(map(tuple, df.collect())) == [(1, "x"), (2, "y"), (3, "z")]
+
+
+def test_inference_conf_toggle_gives_inferred_schema(spark, tmp_path):
+    # parquet timestamp[us] without UTC adjustment: NTZ or LTZ by conf
+    pq.write_table(
+        pa.table({"ts": pa.array([0, 10**6], pa.timestamp("us"))}), tmp_path / "t.parquet"
+    )
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        for value, dtype in (("true", "timestamp_ntz"), ("false", "timestamp"),
+                             ("true", "timestamp_ntz")):
+            spark.conf.set(conf, value)
+            got = load_table(spark, "t", str(tmp_path))
+            assert got.schema == spark.read.parquet(str(tmp_path / "t.parquet")).schema
+            assert dict(got.dtypes)["ts"] == dtype
+            ev = load_table(spark, "events", SF_DIR)
+            assert dict(ev.dtypes)["ts"] == EVENTS_TS_DTYPE
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_memoized_load_rows_match_uncached_read(spark):
+    for name in ("lineitem", "events"):
+        load_table(spark, name, SF_DIR)
+        memo = load_table(spark, name, SF_DIR)
+        plain = spark.read.parquet(os.path.join(SF_DIR, f"{name}.parquet"))
+        if name == "events":
+            plain = _normalize_events_ts(plain)
+        assert memo.schema == plain.schema
+        assert sorted(memo.collect()) == sorted(plain.collect())
+
+
+def test_concurrent_first_loads_share_one_consistent_memo(spark, tmp_path):
+    from concurrent.futures import ThreadPoolExecutor
+
+    from collimate_spark import catalog
+
+    names = ("nation", "region", "customer", "orders", "lineitem")
+    for n in names:  # fresh paths: every thread races on a memo miss
+        shutil.copy(f"{SF_DIR}/{n}.parquet", tmp_path / f"{n}.parquet")
+    want = {n: spark.read.parquet(str(tmp_path / f"{n}.parquet")).schema for n in names}
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(load_table, spark, n, str(tmp_path)) for n in names * 8]
+            got = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(prev)
+    assert [df.schema for df in got] == [want[n] for n in names * 8]
+    for n in names:
+        resolved, files = catalog.table_identity(n, str(tmp_path))
+        entries = [v for k, v in catalog._SCHEMA_MEMO.items() if k[0] == resolved]
+        assert len(entries) == 1 and entries[0][0] == files

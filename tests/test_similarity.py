@@ -15,7 +15,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from collimate_spark.catalog import load_table
+from collimate_spark.catalog import load_table, table_identity
 from collimate_spark.functions import fast_vec
 from collimate_spark.functions import vectors as V
 from collimate_spark.operators.similarity import (
@@ -24,6 +24,7 @@ from collimate_spark.operators.similarity import (
     TOP_K,
     ann_bruteforce_topk,
     ann_ivf_topk,
+    ann_ivfpq_topk,
     ann_lsh_topk,
     ann_pq_topk,
     centroids,
@@ -177,13 +178,55 @@ def test_lsh_recall_floor_driver_data(spark, sf_dir):
 
 def test_quantizer_deterministic(spark, sf_dir):
     emb = load_table(spark, "embeddings", sf_dir)
-    fast_vec._QUANTIZER_CACHE.pop((sf_dir, IVF_K), None)
-    c1 = fast_vec.trained_quantizer(spark, emb, IVF_K, cache_key=sf_dir)
-    fast_vec._QUANTIZER_CACHE.pop((sf_dir, IVF_K), None)
-    c2 = fast_vec.trained_quantizer(spark, emb, IVF_K, cache_key=sf_dir)
+    ident = table_identity("embeddings", sf_dir)
+    fast_vec._QUANTIZER_CACHE.pop((ident, IVF_K), None)
+    c1 = fast_vec.trained_quantizer(spark, emb, IVF_K, cache_key=ident)
+    fast_vec._QUANTIZER_CACHE.pop((ident, IVF_K), None)
+    c2 = fast_vec.trained_quantizer(spark, emb, IVF_K, cache_key=ident)
     assert np.array_equal(c1, c2)
     assert c1.shape == (IVF_K, DIM)
     assert np.allclose(np.linalg.norm(c1, axis=1), 1.0)
+
+
+def test_vector_caches_retrain_after_rewrite_in_place(spark, tmp_path, monkeypatch):
+    """The IVF quantizer and PQ codebook memos are keyed on the embeddings
+    table's file identity, not its directory: rebuilding over an unchanged
+    table trains nothing, and a table rewritten in place retrains both."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    trained = {"ivf": 0, "pq": 0}
+
+    def counting(kind, fn):
+        def wrapped(*a, **k):
+            trained[kind] += 1
+            return fn(*a, **k)
+        return wrapped
+
+    monkeypatch.setattr(
+        fast_vec, "train_spherical_kmeans", counting("ivf", fast_vec.train_spherical_kmeans)
+    )
+    # PQ training runs one k-means per subspace
+    monkeypatch.setattr(fast_vec, "_train_kmeans_l2", counting("pq", fast_vec._train_kmeans_l2))
+
+    def write(n, seed):
+        X = np.random.Generator(np.random.PCG64(seed)).standard_normal((n, 16))
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(range(n), pa.int64()),
+                "embedding": pa.array(X.tolist(), pa.list_(pa.float32())),
+                "label": pa.array([i % 4 for i in range(n)], pa.int32()),
+            }),
+            tmp_path / "embeddings.parquet",
+        )
+
+    write(200, 1)
+    ann_ivfpq_topk(spark, str(tmp_path))
+    ann_ivfpq_topk(spark, str(tmp_path))
+    assert trained == {"ivf": 1, "pq": fast_vec.PQ_M}
+    write(240, 2)  # rewritten in place: same path, new contents
+    ann_ivfpq_topk(spark, str(tmp_path))
+    assert trained == {"ivf": 2, "pq": 2 * fast_vec.PQ_M}
 
 
 def test_centroids_shape(spark, sf_dir):
@@ -221,7 +264,7 @@ def test_kmeans_lloyd_self_consistent_and_monotone(spark, sf_dir):
 
     out = kmeans_lloyd_clusters(spark, sf_dir).collect()
     n_total = sum(r["n_members"] for r in out)
-    from collimate_spark.catalog import load_table
+    from collimate_spark.catalog import load_table, table_identity
 
     assert n_total == load_table(spark, "embeddings", sf_dir).count()
     assert all(r["inertia"] >= 0 for r in out)
@@ -258,7 +301,7 @@ def test_hll_weekly_estimates_within_tolerance(spark, sf_dir):
     4·rse audit bound (the bit the driver oracle hashes as 1)."""
     import pyspark.sql.functions as F
 
-    from collimate_spark.catalog import load_table
+    from collimate_spark.catalog import load_table, table_identity
     from collimate_spark.operators.udx import hll_sketch_partitioned
 
     rows = {r["week"]: r for r in hll_sketch_partitioned(spark, sf_dir).collect()}
