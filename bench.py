@@ -398,10 +398,10 @@ def bench_ingest(spark, runs_out: list | None = None) -> float:
     # Spark's csv() writes part files without .csv extension handling via
     # read_raw's extension dispatch — point ingest at the directory with
     # explicit csv part files. Min of 3 full passes, the SAME min-of-3
-    # methodology as the headline queries (run 1 pays whole-stage-codegen
-    # compile of the ~140-expression profile aggregate; r10 fresh-JVM
-    # re-measures spread 2.3-3.3 s at min-of-2 — this row needs the same
-    # host-noise robustness as the rest of the headline set).
+    # methodology as the headline queries (run 1 pays the code generation
+    # of the profile's fixed-width grouped aggregate and the write; r10
+    # fresh-JVM re-measures spread 2.3-3.3 s at min-of-2 — this row needs
+    # the same host-noise robustness as the rest of the headline set).
     from collimate_spark.ingest import apply_manifest, profile
 
     times = []

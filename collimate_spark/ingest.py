@@ -27,8 +27,11 @@ Re-expresses the reference converter's observable behavior
 
 Scale design: the input is never materialized on the driver (the
 reference's readFileSync, index.js:552, is the anti-pattern); inference
-runs as ONE Spark aggregation job over the scan window, application is one
-narrow select (no shuffle), the write is a distributed Parquet write.
+unpivots the scan window to one (column, seed, value) row per cell and runs
+ONE grouped aggregation over it (the same 14 aggregates at any width, so
+neither the plan nor its driver-side build grows with the column count),
+application is one narrow select (no shuffle), the write is a distributed
+Parquet write.
 """
 
 from __future__ import annotations
@@ -89,6 +92,21 @@ PROFILE_SAMPLE_SEED = 4251
 
 _INT_RE = r"^[+-]?\d+$"
 _INT_PAT = re.compile(_INT_RE)
+
+# first-record seed classes (see profile), as the unpivoted ``seed`` column
+_SEED_CODES = {"int": 0, "float": 1, "str": 2}
+
+# Per date-format field, a regex admitting every string the field parses
+# under Spark's strict java.time parser: ``yyyy`` is 4 or more digits
+# with an optional sign (EXCEEDS_PAD: ``-8911`` and ``+75997`` parse);
+# ``M`` and ``d`` are any number of digits (``2021-003-4`` parses) whose
+# value the strict resolver bounds to 1-12 and 1-31, and a sign never
+# yields a valid one (``+`` is rejected, ``-`` gives minus zero or < 1).
+_DATE_FIELD_RES = {
+    "yyyy": r"[+-]?\d{4,}",
+    "M": r"0*(?:[1-9]|1[0-2])",
+    "d": r"0*(?:[1-9]|[12]\d|3[01])",
+}
 
 
 def sanitize(name: str) -> str:
@@ -187,11 +205,23 @@ def read_raw(spark: SparkSession, path: str) -> DataFrame:
         # multiLine; .jsonl/.ndjson is one record per line (splittable).
         df = spark.read.option("multiLine", ext == ".json").json(path)
         # normalize all leaf values to string for uniform inference
-        return df.select([F.col(c).cast("string").alias(c) for c in df.columns])
+        return df.select([exact_col(c).cast("string").alias(c) for c in df.columns])
     raise ValueError(
         f"unrecognized extension {ext!r}: expected .csv, .tsv, .json, "
         ".jsonl, or .ndjson (optionally .gz-compressed)"
     )
+
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def exact_col(name: str) -> F.Column:
+    """The column named exactly ``name``: backtick-quoted, so a dot in a
+    header (``Price (USD.)``, ``v1.2 name``) is part of the name, not
+    struct-field access."""
+    return F.col(_sql_ident(name))
 
 
 def _null_normalized(col: F.Column) -> F.Column:
@@ -238,6 +268,91 @@ def _tune_split_size(spark: SparkSession, total_bytes: int) -> None:
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
 
 
+def date_probe(v: F.Column, fmt: str) -> F.Column:
+    """``try_to_date(v, fmt)`` behind a regex shape gate. The gate admits
+    a superset of what ``fmt`` parses (see _DATE_FIELD_RES), so the count
+    of non-NULL probes equals the bare parse's, while values of another
+    shape never reach the parser, whose failures cost a caught exception."""
+    sep = "-" if "-" in fmt else "/"
+    shape = sep.join(_DATE_FIELD_RES[f] for f in fmt.split(sep))
+    return F.when(v.rlike(f"^{shape}$"), F.try_to_date(v, fmt))
+
+
+def _first_record_seeds(df: DataFrame) -> dict[str, str]:
+    """Per-column type hypothesis from the first record (reference
+    semantics, index.js:157-217): the widening lattice means a seed-str
+    column can never narrow back to numeric, and date formats are only
+    ever probed for seed-str columns — so numeric-seeded columns skip the
+    6-format date parse and string-seeded columns skip the int/double
+    casts."""
+    head = df.first()
+    seeds: dict[str, str] = {}
+    for c in df.columns:
+        v = head[c] if head is not None else None
+        if v is None or v in NULL_TOKENS:
+            seeds[c] = "int"  # reference: null seeds int32
+        elif _INT_PAT.match(v):
+            seeds[c] = "int"
+        else:
+            try:
+                float(v)
+                seeds[c] = "float"
+            except ValueError:
+                seeds[c] = "str"
+    return seeds
+
+
+def inference_stats(
+    window: DataFrame, seeds: dict[str, str], parse_dates: bool
+) -> DataFrame:
+    """The profile's one aggregation, one row per column index ``i``.
+
+    The window is unpivoted once to a (column index, seed, value) row per
+    cell, then grouped by ``i`` under a fixed set of aggregates: rows,
+    non-null count, HLL distinct, int-pattern count and long min/max,
+    double-castable count, length-8..10 count and one count per date
+    format. Each is gated on the row's seed (int stats for int seeds, the
+    double cast for numeric seeds, date probes for string seeds when
+    ``parse_dates``), so the plan's width and its per-cell work do not
+    grow with the column count. The gates nest as CASE WHENs: an AND
+    conjunct does not guarantee evaluation order."""
+    # one SQL expression, not one Column per cell: each py4j Column call
+    # costs the driver about a millisecond, which grows with the width
+    cells = window.selectExpr(
+        "inline(array({}))".format(
+            ", ".join(
+                f"named_struct('i', {i}, 'seed', {_SEED_CODES[seeds[c]]}, 'v', {_sql_ident(c)})"
+                for i, c in enumerate(window.columns)
+            )
+        )
+    ).select("i", "seed", _null_normalized(F.col("v")).alias("v"))
+    v, seed = F.col("v"), F.col("seed")
+    int_like = F.when(seed == _SEED_CODES["int"], v.rlike(_INT_RE))
+    ival = F.when(int_like, v.try_cast("long"))
+    date_seed = F.lit(parse_dates) & (seed == _SEED_CODES["str"])
+    date_len = F.length(v).between(8, 10)
+
+    def date_candidate(x: F.Column) -> F.Column:
+        return F.when(date_seed, F.when(date_len, x))
+
+    return cells.groupBy("i").agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count(v).alias("nn"),
+        F.approx_count_distinct(v).alias("dist"),
+        F.count(F.when(int_like, 1)).alias("int"),
+        F.min(ival).alias("imin"),
+        F.max(ival).alias("imax"),
+        F.count(
+            F.when(seed != _SEED_CODES["str"], F.when(v.try_cast("double").isNotNull(), 1))
+        ).alias("dbl"),
+        F.count(date_candidate(F.lit(1))).alias("dlen"),
+        *[
+            F.count(date_candidate(date_probe(v, fmt))).alias(f"fmt{k}")
+            for k, fmt in enumerate(DATE_FORMATS)
+        ],
+    )
+
+
 def profile(
     spark: SparkSession,
     df: DataFrame,
@@ -246,15 +361,16 @@ def profile(
     sample_fraction: float | None = None,
 ) -> Manifest:
     """Infer per-column logical types + categorical flags in ONE
-    aggregation job over the scan window.
+    aggregation over the scan window (``inference_stats``).
 
-    Per column the job computes: non-null-token count, int-pattern count,
+    Per column it computes: non-null-token count, int-pattern count,
     double-castable count, int min/max, per-format date-parse successes,
-    length-8-10 count, approx distinct — all as built-in aggregates, so
-    inference cost is a single distributed pass regardless of width.
+    length-8-10 count, approx distinct — all as built-in aggregates over
+    the unpivoted window, grouped by column, so inference is a single
+    distributed pass whose plan is the same size at any width.
 
     Scan-window policy: small inputs (< AUTO_SAMPLE_MIN_BYTES) are
-    profiled in full — one agg job, no separate count, strictly more
+    profiled in full — one agg, no separate count, strictly more
     correct than any window. At or above that size the profile runs on a
     seeded Bernoulli ``df.sample`` of PROFILE_SAMPLE_FRACTION — the
     distributed analog of the reference's max(1000, 0.3·N)-row scan
@@ -270,7 +386,8 @@ def profile(
     """
     if not df.columns:
         return Manifest()
-    _tune_split_size(spark, _local_input_bytes(df))
+    input_bytes = _local_input_bytes(df)
+    _tune_split_size(spark, input_bytes)
     n_total: int | None = None
     if scan_rows is not None:
         n = df.count()
@@ -286,7 +403,7 @@ def profile(
         manifest.categorical_threshold = categorical_threshold(n, scanned)
         window = df.limit(scanned) if scanned < n else df
     else:
-        if sample_fraction is None and _local_input_bytes(df) >= AUTO_SAMPLE_MIN_BYTES:
+        if sample_fraction is None and input_bytes >= AUTO_SAMPLE_MIN_BYTES:
             sample_fraction = PROFILE_SAMPLE_FRACTION
         if sample_fraction is not None and 0 < sample_fraction < 1:
             n_total = df.count()
@@ -302,96 +419,40 @@ def profile(
             manifest = Manifest()
             window = df  # full-data profile; n comes out of the same agg job
 
-    # Seed per-column hypotheses from the first record (reference semantics,
-    # index.js:157-217): the widening lattice means a seed-str column can
-    # never narrow back to numeric, and date formats are only ever probed
-    # for seed-str columns — so numeric-seeded columns skip the 6-format
-    # date parse and string-seeded columns skip the int/double casts. On a
-    # wide fact table this removes most of the profile-agg work.
-    head = df.first()
-    seeds: dict[str, str] = {}
-    for c in df.columns:
-        v = head[c] if head is not None else None
-        if v is None or v in NULL_TOKENS:
-            seeds[c] = "int"  # reference: null seeds int32
-        elif _INT_PAT.match(v):
-            seeds[c] = "int"
-        else:
-            try:
-                float(v)
-                seeds[c] = "float"
-            except ValueError:
-                seeds[c] = "str"
-
-    aggs = [F.count(F.lit(1)).alias("__n_rows")]
-    for c in df.columns:
-        v = _null_normalized(F.col(c))
-        seed = seeds[c]
-        aggs.extend(
-            [
-                F.count(v).alias(f"{c}__nn"),
-                F.approx_count_distinct(v).alias(f"{c}__dist"),
-                (F.count(F.lit(1)) - F.count(v)).alias(f"{c}__nulls"),
-            ]
-        )
-        if seed == "int":
-            aggs.extend(
-                [
-                    F.count(F.when(v.rlike(_INT_RE), 1)).alias(f"{c}__int"),
-                    F.min(F.when(v.rlike(_INT_RE), v.try_cast("long"))).alias(f"{c}__imin"),
-                    F.max(F.when(v.rlike(_INT_RE), v.try_cast("long"))).alias(f"{c}__imax"),
-                ]
-            )
-        if seed in ("int", "float"):
-            aggs.append(
-                F.count(F.when(v.try_cast("double").isNotNull(), 1)).alias(f"{c}__dbl")
-            )
-        if seed == "str" and parse_dates:
-            aggs.append(F.count(F.when(F.length(v).between(8, 10), 1)).alias(f"{c}__dlen"))
-            for i, fmt in enumerate(DATE_FORMATS):
-                # nest the parse under the length gate so non-candidate
-                # strings (wrong length) never pay the 6 format probes —
-                # an AND conjunct does not guarantee evaluation order
-                aggs.append(
-                    F.count(
-                        F.when(
-                            F.length(v).between(8, 10), F.try_to_date(v, fmt)
-                        )
-                    ).alias(f"{c}__fmt{i}")
-                )
-    stats = window.agg(*aggs).collect()[0].asDict()
+    seeds = _first_record_seeds(df)
+    stats = {r["i"]: r for r in inference_stats(window, seeds, parse_dates).collect()}
+    # every column groups the same rows, so any group's count is the
+    # window's; an empty window yields no groups at all
+    n_window = next(iter(stats.values()))["rows"] if stats else 0
 
     if scan_rows is None and n_total is not None:
         # sampled profile: true row count from the count job, scanned
         # count from the sample agg itself
-        scanned = stats["__n_rows"]
-        if scanned == 0:
+        if n_window == 0:
             # pathological sample miss — fall back to a full profile
             return profile(spark, df, parse_dates=parse_dates, sample_fraction=0)
-        manifest.n_scanned = scanned
-        manifest.categorical_threshold = categorical_threshold(n_total, scanned)
+        manifest.n_scanned = n_window
+        manifest.categorical_threshold = categorical_threshold(n_total, n_window)
     elif scan_rows is None:
-        n = stats["__n_rows"]
-        manifest.n_rows = n
-        manifest.n_scanned = n
-        manifest.categorical_threshold = categorical_threshold(n, n)
-        if n == 0:
+        manifest.n_rows = n_window
+        manifest.n_scanned = n_window
+        manifest.categorical_threshold = categorical_threshold(n_window, n_window)
+        if n_window == 0:
             manifest.columns = [
                 ColumnProfile(c, sanitize(c), "int32", False, 0) for c in df.columns
             ]
             return manifest
 
-    for c in df.columns:
-        nn = stats[f"{c}__nn"]
-        dist = stats[f"{c}__dist"]
-        nulls = stats[f"{c}__nulls"]
+    for i, c in enumerate(df.columns):
+        st = stats[i]
+        nn = st["nn"]
         seed = seeds[c]
         date_format = None
         if nn == 0:
             # all-null column seeds as int (reference: null → int32)
             logical = "int32"
-        elif seed == "int" and stats[f"{c}__int"] == nn:
-            imin, imax = stats[f"{c}__imin"], stats[f"{c}__imax"]
+        elif seed == "int" and st["int"] == nn:
+            imin, imax = st["imin"], st["imax"]
             # values too big even for long parse to NULL via try_cast; treat
             # any parse failure among int-patterned values as string
             if imin is None or imax is None:
@@ -402,15 +463,13 @@ def profile(
                 # deviation: reference demotes >2^31-1 to str (and misses
                 # the lower bound entirely, index.js:169); we keep int64
                 logical = "int64"
-        elif seed in ("int", "float") and stats[f"{c}__dbl"] == nn:
+        elif seed in ("int", "float") and st["dbl"] == nn:
             logical = "float64"
         elif seed == "str":
             logical = "str"
-            if parse_dates and stats[f"{c}__dlen"] == nn:
+            if parse_dates and st["dlen"] == nn:
                 survivors = [
-                    fmt
-                    for i, fmt in enumerate(DATE_FORMATS)
-                    if stats[f"{c}__fmt{i}"] == nn
+                    fmt for k, fmt in enumerate(DATE_FORMATS) if st[f"fmt{k}"] == nn
                 ]
                 # single-consistent-format rule: normalize only when
                 # exactly one format parses every scanned value
@@ -424,10 +483,10 @@ def profile(
                 original_name=c,
                 sane_name=sanitize(c),
                 logical_type=logical,
-                categorical=dist <= manifest.categorical_threshold,
-                distinct_estimate=dist,
+                categorical=st["dist"] <= manifest.categorical_threshold,
+                distinct_estimate=st["dist"],
                 date_format=date_format,
-                null_tokens_seen=nulls,
+                null_tokens_seen=st["rows"] - nn,
             )
         )
     return manifest
@@ -496,7 +555,7 @@ def apply_manifest(df: DataFrame, manifest: Manifest) -> DataFrame:
     audit(), not silent sentinel corruption like index.js:467-471)."""
     cols = []
     for p in manifest.columns:
-        v = _null_normalized(F.col(p.original_name))
+        v = _null_normalized(exact_col(p.original_name))
         if p.logical_type in _CAST_TYPES:
             v = v.try_cast(_CAST_TYPES[p.logical_type])
         elif p.logical_type == "date":
@@ -511,7 +570,7 @@ def audit(df: DataFrame, manifest: Manifest, typed: DataFrame) -> dict[str, int]
     reference would have silently zeroed)."""
     aggs = []
     for p in manifest.columns:
-        raw_nn = F.count(_null_normalized(F.col(p.original_name)))
+        raw_nn = F.count(_null_normalized(exact_col(p.original_name)))
         aggs.append(raw_nn.alias(f"{p.sane_name}__raw"))
     raw = df.agg(*aggs).collect()[0].asDict()
     typed_counts = typed.agg(
@@ -530,7 +589,8 @@ def ingest(
     scan_rows: int | None = None,
     sample_fraction: float | None = None,
 ) -> tuple[DataFrame, Manifest]:
-    """Full pipeline: read → profile (one agg job) → apply (narrow)."""
+    """Full pipeline: read → profile (one narrow grouped agg) → apply
+    (narrow)."""
     df = read_raw(spark, path)
     manifest = profile(
         spark, df, parse_dates=parse_dates, scan_rows=scan_rows,
@@ -643,7 +703,12 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("file")
     ap.add_argument("-d", "--date", action="store_true", help="detect+normalize dates")
     ap.add_argument("-i", "--index", action="store_true", help="write manifest.json")
-    ap.add_argument("-v", "--verbose", action="store_true", help="phase timings")
+    ap.add_argument(
+        "-v",
+        "--verbose",
+        action="store_true",
+        help="print phase timings and row counts as one JSON line on stderr",
+    )
     ap.add_argument("-o", "--output", default=None, help="output dir (default: input basename)")
     ap.add_argument(
         "-p",
@@ -681,13 +746,12 @@ def main(argv: list[str] | None = None) -> None:
 
     spark = get_session("collimate_spark_ingest")
     t0 = time.time()
-    typed, manifest = ingest(
-        spark, args.file, parse_dates=args.date, sample_fraction=args.sample
-    )
-    if args.verbose:
-        print(f"profile: {time.time() - t0:.2f}s", file=sys.stderr)
+    raw = read_raw(spark, args.file)
+    t1 = time.time()
+    manifest = profile(spark, raw, parse_dates=args.date, sample_fraction=args.sample)
+    t2 = time.time()
+    typed = apply_manifest(raw, manifest)
     outdir = args.output or os.path.splitext(os.path.basename(args.file))[0]
-    t0 = time.time()
     parts = args.partition_by.split(",") if args.partition_by else None
     if args.cluster_by:
         from collimate_spark.sources.storage import write_range_clustered
@@ -704,7 +768,14 @@ def main(argv: list[str] | None = None) -> None:
             write_manifest=args.index, partition_cols=parts, dict_codes=args.dict_codes,
         )
     if args.verbose:
-        print(f"write: {time.time() - t0:.2f}s", file=sys.stderr)
+        phases = {
+            "read_raw_s": round(t1 - t0, 3),
+            "profile_s": round(t2 - t1, 3),
+            "write_s": round(time.time() - t2, 3),
+            "n_rows": manifest.n_rows,
+            "n_scanned": manifest.n_scanned,
+        }
+        print(json.dumps(phases), file=sys.stderr)
     print(outdir)
 
 
@@ -754,9 +825,10 @@ def ingest_typed_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: exercises index.js type inference (157-217),
     null-token set (60-67), date formats (102-111), categorical model
     (22-57), sanitize (497-508) through the distributed pipeline.
-    Scale: the profile is ONE aggregation job over the scan, the apply
-    is a narrow projection, and the facts are a second single agg —
-    no driver materialization beyond the per-column scalar row."""
+    Scale: the profile is ONE grouped aggregation over the unpivoted
+    scan, the apply is a narrow projection, and the facts are a second
+    single agg — no driver materialization beyond the per-column scalar
+    rows."""
     from collimate_spark.catalog import load_table
 
     orders = load_table(spark, "orders", sf_dir)

@@ -28,7 +28,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from collimate_spark.ingest import NULL_TOKENS, sanitize
+from collimate_spark.ingest import _null_normalized, exact_col, sanitize
 
 
 def stream_ingest(
@@ -46,9 +46,9 @@ def stream_ingest(
     raw = reader.format(fmt).load(indir)
     cols = []
     for f_ in schema.fields:
-        c = F.col(f_.name)
+        c = exact_col(f_.name)
         if isinstance(f_.dataType, T.StringType):
-            c = F.when(c.isin(*NULL_TOKENS), F.lit(None)).otherwise(c)
+            c = _null_normalized(c)
         cols.append(c.alias(sanitize(f_.name)))
     return raw.select(*cols)
 
@@ -77,9 +77,9 @@ def stream_ingest_with_quarantine(
     )
     cols = []
     for f_ in schema.fields:
-        c = F.col(f_.name)
+        c = exact_col(f_.name)
         if isinstance(f_.dataType, T.StringType):
-            c = F.when(c.isin(*NULL_TOKENS), F.lit(None)).otherwise(c)
+            c = _null_normalized(c)
         cols.append(c.alias(sanitize(f_.name)))
     cols.append(F.col("_quarantine"))
     return raw.select(*cols)

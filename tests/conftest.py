@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import time
+import uuid
 
 import pytest
 
@@ -22,3 +24,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_started_by(spark):
+    """``jobs_started_by(fn)``: the Spark jobs ``fn`` starts on this
+    thread, read from the status tracker. A sentinel job run afterwards in
+    its own group is waited for first: the listener handles job starts in
+    order, so once the sentinel shows, every job ``fn`` started shows
+    too."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group, sentinel = f"jobs-{uuid.uuid4()}", f"sentinel-{uuid.uuid4()}"
+        try:
+            sc.setJobGroup(group, group)
+            fn()
+            sc.setJobGroup(sentinel, sentinel)
+            sc.parallelize([1], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        tracker = sc.statusTracker()
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(sentinel):
+            assert time.time() < deadline, "sentinel job never reached the status tracker"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count

@@ -15,8 +15,6 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -74,33 +72,10 @@ def test_legacy_ltz_normalizes_tz_independently(spark):
 # --- schema memo ---------------------------------------------------------
 
 
-def _jobs_started_by(spark, fn) -> int:
-    """Spark jobs ``fn`` starts on this thread, read from the status tracker.
-    A sentinel job run afterwards in its own group is waited for first:
-    the listener handles job starts in order, so once the sentinel shows,
-    every job ``fn`` started shows too."""
-    sc = spark.sparkContext
-    group, sentinel = f"memo-{uuid.uuid4()}", f"sentinel-{uuid.uuid4()}"
-    try:
-        sc.setJobGroup(group, group)
-        fn()
-        sc.setJobGroup(sentinel, sentinel)
-        sc.parallelize([1], 1).count()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup(sentinel):
-        assert time.time() < deadline, "sentinel job never reached the status tracker"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(group))
-
-
-def test_second_load_of_unchanged_table_starts_no_job(spark, tmp_path):
+def test_second_load_of_unchanged_table_starts_no_job(spark, tmp_path, jobs_started_by):
     shutil.copy(f"{SF_DIR}/nation.parquet", tmp_path / "nation.parquet")
-    assert _jobs_started_by(spark, lambda: load_table(spark, "nation", str(tmp_path))) >= 1
-    assert _jobs_started_by(spark, lambda: load_table(spark, "nation", str(tmp_path))) == 0
+    assert jobs_started_by(lambda: load_table(spark, "nation", str(tmp_path))) >= 1
+    assert jobs_started_by(lambda: load_table(spark, "nation", str(tmp_path))) == 0
 
 
 def test_table_rewritten_in_place_loads_new_columns(spark, tmp_path):

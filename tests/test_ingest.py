@@ -6,14 +6,21 @@ from __future__ import annotations
 
 import json
 import os
+import random
 
+import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from collimate_spark.ingest import (
     DATE_FORMATS,
+    _first_record_seeds,
     apply_manifest,
     audit,
     categorical_threshold,
+    date_probe,
+    inference_stats,
     ingest,
     profile,
     read_raw,
@@ -371,3 +378,186 @@ def test_query_cli_in_process(spark, capsys):
     ]
     assert 1 <= len(out) <= 2
     assert "p50" in out[0] or len(out[0]) > 1  # real columns came through
+
+
+# --- profile: one grouped aggregation over the unpivoted window ---
+
+GOLDEN_FILE = os.path.join(os.path.dirname(__file__), "data", "ingest_golden_manifests.json")
+# the benchmark's messy-CSV column kinds (int32, int64, float, null
+# tokens, free text, all six date formats), plus lattice edge cases
+GOLDEN_HEADERS = (
+    " Order ID ", "Big-Count", "Unit Price %", "R&D Qty", "user@host", "Category",
+    "Notes", "Ship Date (ISO)", "Due/Date", "EU-Date", "EU Slash Date", "US-Date",
+    "US Slash Date", "Mixed", "Widen", "Blank", "Ambiguous",
+)
+GOLDEN_DATE_ORDERS = ("y-m-d", "y/m/d", "d-m-y", "d/m/y", "m-d-y", "m/d/y")
+NULL_TOKEN_CELLS = ("null", "na", "n/a", "none", "-", "")
+# profile() arguments per recorded manifest
+GOLDEN_PATHS = {
+    "full": {"parse_dates": True},
+    "sampled": {"parse_dates": True, "sample_fraction": 0.3},
+    "scan_rows": {"parse_dates": True, "scan_rows": 0},
+    "full_nodates": {},
+}
+
+
+def _golden_rows(n=1500, seed=20261017):
+    rng = random.Random(seed)
+    words = ("ledger", "north", "crate", "amber", "pallet", "quota", "signal", "drift")
+
+    def nullish(v, rate, i):
+        return rng.choice(NULL_TOKEN_CELLS) if i and rng.random() < rate else v
+
+    def date(order, i):
+        parts = {"y": rng.randint(1990, 2029), "m": rng.randint(1, 12), "d": rng.randint(1, 28)}
+        if i == 0:
+            parts["d"] = rng.randint(13, 28)  # first row: day and month cannot swap
+        return order[1].join(str(parts[k]) for k in order[::2])
+
+    rows = []
+    for i in range(n):
+        rows.append([
+            str(i + 1),
+            str(3_000_000_000 + rng.randint(0, 10**9)),
+            "12.5" if i == 0 else f"{rng.uniform(0.5, 999.0):.2f}",
+            nullish(str(rng.randint(0, 499)), 0.05, i),
+            f"u{rng.randint(0, n)}@h{rng.randint(0, 49)}",
+            nullish(rng.choice(("alpha", "beta", "gamma", "delta", "epsilon", "zeta")), 0.02, i),
+            " ".join(rng.choice(words) for _ in range(rng.randint(3, 9))),
+            *[nullish(date(o, i), 0.01, i) for o in GOLDEN_DATE_ORDERS],
+            "abc" if i == 700 else str(rng.randint(-50, 50)),
+            f"{i}.5" if i >= 900 else str(i),
+            rng.choice(NULL_TOKEN_CELLS),
+            f"{rng.randint(1, 12)}/{rng.randint(1, 12)}/2021",
+        ])
+    return rows
+
+
+@pytest.fixture(scope="module")
+def golden_raw(spark, tmp_path_factory):
+    path = tmp_path_factory.mktemp("golden") / "golden.csv"
+    lines = [",".join(GOLDEN_HEADERS)] + [",".join(r) for r in _golden_rows()]
+    path.write_text("\n".join(lines) + "\n")
+    return read_raw(spark, str(path))
+
+
+@pytest.mark.parametrize("path_name", sorted(GOLDEN_PATHS))
+def test_profile_manifest_matches_golden(spark, golden_raw, path_name):
+    """Manifests recorded from the per-column wide aggregation this
+    grouped one replaced, byte for byte: types, date formats, HLL
+    distinct estimates and null-token counts on the full, sampled and
+    reference scan-window paths. The fixture is one input split, so the
+    seeded sample is reproducible."""
+    with open(GOLDEN_FILE) as fh:
+        golden = json.load(fh)[path_name]
+    manifest = profile(spark, golden_raw, **GOLDEN_PATHS[path_name])
+    assert json.dumps(manifest.to_dict(), indent=1) == json.dumps(golden, indent=1)
+
+
+def test_profile_job_count(spark, golden_raw, jobs_started_by):
+    """Full path: the first-record seed job plus the aggregation's two
+    (shuffle map stage and result); the sampled path adds the row count."""
+    assert jobs_started_by(lambda: profile(spark, golden_raw, parse_dates=True)) == 3
+    sampled = jobs_started_by(
+        lambda: profile(spark, golden_raw, parse_dates=True, sample_fraction=0.3)
+    )
+    assert sampled == 5
+
+
+def test_profile_plan_width_is_independent_of_column_count(spark, tmp_path):
+    def n_aggregates(n_cols):
+        header = ",".join(f"c{i}" for i in range(n_cols))
+        first = ",".join(("1", "x", "2021-3-4", "1.5")[i % 4] for i in range(n_cols))
+        raw = read_raw(spark, _write(tmp_path, f"w{n_cols}.csv", f"{header}\n{first}\n"))
+        stats = inference_stats(raw, _first_record_seeds(raw), parse_dates=True)
+        plan = stats._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "Aggregate"
+        return plan.aggregateExpressions().size()
+
+    assert n_aggregates(3) == n_aggregates(60) == 1 + 14  # the key + 14 aggregates
+
+
+SIGNED_YEAR_DATES = ("-8911/5/6", "+75997/6/7", "3/3/-49658", "-8911-5-6", "3-3-+49658")
+# every field value 0-32 in both field orders and with both separators,
+# so a gate that drops a valid month or day fails on every run
+DATE_GRID = tuple(
+    sep.join(parts)
+    for sep in "-/"
+    for a in range(33)
+    for b in range(33)
+    for parts in (("2021", str(a), str(b)), (str(a), str(b), "2021"))
+)
+
+
+@st.composite
+def _date_like(draw):
+    """A year and two small fields in either order, each maybe signed or
+    zero-padded, joined by one separator, sometimes with a stray
+    character appended."""
+
+    def field(values):
+        sign = draw(st.sampled_from(("", "", "", "+", "-")))
+        return sign + draw(st.sampled_from(("", "", "0", "00"))) + str(draw(values))
+
+    year = field(st.integers(0, 99999))
+    a, b = field(st.integers(0, 40)), field(st.integers(0, 40))
+    parts = (year, a, b) if draw(st.booleans()) else (a, b, year)
+    noise = draw(st.sampled_from(("", "", "", " ", "x", "\n")))
+    return draw(st.sampled_from("-/")).join(parts) + noise
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(values=st.lists(st.one_of(_date_like(), st.text(max_size=12)), max_size=40))
+@example(values=["2021-003-4", "13-12-2021", "12-13-2021", "0000-1-1", "-0000-1-1"])
+def test_date_probe_gate_counts_equal_bare_parse(spark, values):
+    """The shape gate admits a superset of what each format parses:
+    per format, the gated probe counts exactly the bare try_to_date's
+    non-NULL results (a gate can only drop values, so equal counts mean
+    equal per value)."""
+    df = spark.createDataFrame(
+        [(v,) for v in [*values, *SIGNED_YEAR_DATES, *DATE_GRID]], "v string"
+    )
+    v = F.col("v")
+    row = df.agg(
+        *[F.count(F.try_to_date(v, fmt)).alias(f"bare{k}") for k, fmt in enumerate(DATE_FORMATS)],
+        *[F.count(date_probe(v, fmt)).alias(f"gated{k}") for k, fmt in enumerate(DATE_FORMATS)],
+    ).first()
+    for k, fmt in enumerate(DATE_FORMATS):
+        assert row[f"bare{k}"] >= 1, fmt
+        assert row[f"gated{k}"] == row[f"bare{k}"], fmt
+
+
+def test_dotted_headers_resolve_by_exact_name(spark, tmp_path):
+    """A dot in a header is part of the name, not struct access."""
+    path = _write(tmp_path, "dots.csv", "Price (USD.),v1.2 name,a`b\n1.5,x,1\n2.5,-,2\n")
+    raw = read_raw(spark, path)
+    manifest = profile(spark, raw)
+    assert _types(manifest) == {"Price (USD.)": "float64", "v1.2 name": "str", "a`b": "int32"}
+    typed = apply_manifest(raw, manifest)
+    assert typed.columns == ["price_usd", "v1_2_name", "a_b"]
+    assert typed.filter("v1_2_name IS NULL").count() == 1
+    assert audit(raw, manifest, typed) == {"price_usd": 0, "v1_2_name": 0, "a_b": 0}
+
+    js = _write(tmp_path, "dots.jsonl", '{"v1.2": 3, "x": "y"}\n')
+    _, manifest_j = ingest(spark, js)
+    assert _types(manifest_j) == {"v1.2": "int32", "x": "str"}
+
+
+def test_cli_verbose_prints_one_json_line(spark, tmp_path, capsys, monkeypatch):
+    from collimate_spark.ingest import main
+
+    monkeypatch.setattr("collimate_spark.session.get_session", lambda *a, **k: spark)
+    path = _write(tmp_path, "cli.csv", "a,b\n1,x\n2,y\n3,z\n")
+    outdir = str(tmp_path / "store")
+    main([path, "-v", "-o", outdir])
+    out, err = capsys.readouterr()
+    assert out.strip() == outdir
+    (line,) = err.strip().splitlines()
+    phases = json.loads(line)
+    assert sorted(phases) == ["n_rows", "n_scanned", "profile_s", "read_raw_s", "write_s"]
+    assert phases["n_rows"] == phases["n_scanned"] == 3
+    assert all(phases[k] >= 0 for k in ("read_raw_s", "profile_s", "write_s"))

@@ -60,6 +60,30 @@ def test_stream_ingest_to_parquet(spark, tmp_path):
     assert spark.read.parquet(outdir).count() == 3
 
 
+def test_stream_ingest_dotted_field_names(spark, tmp_path):
+    """A dot in a frozen-schema field name is part of the name, not
+    struct access, on both stream ingest paths."""
+    from collimate_spark.streaming.pipeline import stream_ingest_with_quarantine
+
+    schema = T.StructType(
+        [T.StructField("v1.2 id", T.LongType()), T.StructField("Price (USD.)", T.StringType())]
+    )
+    indir = str(tmp_path / "in")
+    os.makedirs(indir)
+    with open(os.path.join(indir, "c1.csv"), "w") as fh:
+        fh.write("v1.2 id,Price (USD.)\n1,2.5\n2,n/a\n")
+    for i, stream in enumerate(
+        (stream_ingest(spark, indir, schema), stream_ingest_with_quarantine(spark, indir, schema))
+    ):
+        q = stream.writeStream.format("memory").queryName(f"dotted_{i}").start()
+        try:
+            q.processAllAvailable()
+            got = spark.sql(f"SELECT v1_2_id, price_usd FROM dotted_{i} ORDER BY v1_2_id").collect()
+        finally:
+            q.stop()
+        assert [tuple(r) for r in got] == [(1, "2.5"), (2, None)]
+
+
 def _run_events_stream(spark, tmp_path, transform, chunks):
     """Drive a transformed file-source stream into a memory sink, feeding
     chunks across separate micro-batches (processAllAvailable between
