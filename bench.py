@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -489,12 +490,34 @@ def _stage_stream_input(spark) -> tuple[str, str]:
     return ev_dir, od_dir
 
 
-def bench_streaming(spark, cold: dict) -> dict[str, float]:
+def progress_split(progress) -> dict:
+    """A streaming run's ``recentProgress`` split, in Spark's field names:
+    the ``durationMs`` phases and the state operators' ``commitTimeMs``
+    summed over its micro-batches, their ``numRowsTotal`` and
+    ``memoryUsedBytes`` after the last one."""
+    last = progress[-1]["stateOperators"] if progress else []
+    return {
+        "batches": len(progress),
+        "numInputRows": sum(p["numInputRows"] for p in progress),
+        "durationMs": {
+            k: sum(p["durationMs"].get(k, 0) for p in progress)
+            for k in ("addBatch", "getBatch", "queryPlanning", "walCommit")
+        },
+        "stateOperators": {
+            "commitTimeMs": sum(o["commitTimeMs"] for p in progress for o in p["stateOperators"]),
+            "numRowsTotal": sum(o["numRowsTotal"] for o in last),
+            "memoryUsedBytes": sum(o["memoryUsedBytes"] for o in last),
+        },
+    }
+
+
+def bench_streaming(spark, cold: dict, progress: dict) -> dict[str, float]:
     """Bounded micro-bench rows for the streaming pipelines (--wide only,
     VERDICT r13 #8): fixed-row-count file-source streams, availableNow
     trigger, noop streaming sink, min-of-2 (cold run recorded like every
     other row). Each run gets a FRESH checkpoint so no state is reused
-    across runs."""
+    across runs, and deletes it afterwards. ``progress`` gets the
+    ``progress_split`` of each row's reported (fastest) run."""
     import uuid
 
     from collimate_spark.streaming import pipeline as sp
@@ -521,22 +544,27 @@ def bench_streaming(spark, cold: dict) -> dict[str, float]:
     out: dict[str, float] = {}
     ck_base = os.path.join(tempfile.gettempdir(), "bench_stream_ck")
     for name, build in pipelines.items():
-        times = []
+        times, splits = [], []
         for _ in range(2):
             ck = os.path.join(ck_base, f"{name}_{uuid.uuid4().hex[:8]}")
-            df = build()
-            t0 = time.time()
-            q = (
-                df.writeStream.format("noop")
-                .option("checkpointLocation", ck)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            times.append(time.time() - t0)
+            try:
+                df = build()
+                t0 = time.time()
+                q = (
+                    df.writeStream.format("noop")
+                    .option("checkpointLocation", ck)
+                    .outputMode("append")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+                times.append(time.time() - t0)
+                splits.append(progress_split(q.recentProgress))
+            finally:
+                shutil.rmtree(ck, ignore_errors=True)
         out[name] = round(min(times), 3)
         cold[name] = round(times[0], 3)
+        progress[name] = splits[times.index(min(times))]
     return out
 
 
@@ -641,13 +669,15 @@ def main() -> None:
             # steady-state timings are unaffected.
             clear_scratch()
 
+    stream_progress: dict[str, dict] = {}
     if "--wide" in sys.argv:
         # Streaming pipelines get bench rows only in the --wide sidecar
         # (VERDICT r13 #8): bounded input (fixed row count staged once,
         # untimed), availableNow trigger, noop streaming sink, min-of-2.
-        # The headline set and its total are untouched.
+        # The headline set and its total are untouched; each row's
+        # progress split goes to the sidecar alone.
         try:
-            stream_rows = bench_streaming(spark, cold)
+            stream_rows = bench_streaming(spark, cold, stream_progress)
             results.update(stream_rows)
         except Exception:
             errors["_streaming"] = traceback.format_exc(limit=3)
@@ -703,6 +733,8 @@ def main() -> None:
         "calibration_io_post_sec": calibration_io_post,
         "ann_train_sec": payload_ann_train,
     }
+    if stream_progress:
+        payload["streaming_progress"] = stream_progress
     if errors:
         payload["errors"] = errors
     history = _load_history()
@@ -720,17 +752,19 @@ def main() -> None:
 
 
 STDOUT_LINE_BUDGET = 1900  # driver tail capture is ~2000 chars
+SIDECAR_ONLY = ("streaming_progress",)  # never on stdout
 
 
 def _stdout_line(payload: dict, sidecar: str) -> str:
     """The one JSON line main() prints for ``payload``.
 
-    One-line budget: whenever the FULL payload is over
-    STDOUT_LINE_BUDGET it is written to ``sidecar``, so nothing stdout
-    sheds is lost; stdout sheds diagnostic-only fields (history_totals
-    first, then queries_cold, see _shed_for_stdout) before falling back to
-    the compact line, so `queries` — the driver's per-row series — never
-    leaves stdout except in the oversized --wide case.
+    One-line budget: whenever the line is not the FULL payload, the full
+    payload is written to ``sidecar``, so nothing stdout sheds is lost;
+    stdout never carries the SIDECAR_ONLY fields and sheds
+    diagnostic-only fields (history_totals first, then queries_cold, see
+    _shed_for_stdout) before falling back to the compact line, so
+    `queries` — the driver's per-row series — never leaves stdout except
+    in the oversized --wide case.
 
     One-line contract: stdout carries exactly ONE JSON line, sized to
     fit the driver's ~2000-char tail capture with headroom for trailing
@@ -745,34 +779,35 @@ def _stdout_line(payload: dict, sidecar: str) -> str:
     line (ADVICE r6) — so when oversized, the full payload goes to the
     sidecar file and only the compact line hits stdout."""
     full_line = json.dumps(payload)
-    if len(full_line) > STDOUT_LINE_BUDGET:
+    line = json.dumps(_shed_for_stdout(payload))
+    if len(line) > STDOUT_LINE_BUDGET:
+        line = json.dumps(
+            {
+                "metric": payload["metric"],
+                "value": payload["value"],
+                "unit": payload["unit"],
+                "sf": payload["sf"],
+                "calibration_sec": payload["calibration_sec"],
+                "calibration_io_sec": payload["calibration_io_sec"],
+                "n_queries": len(payload["queries"]),
+                "n_errors": len(payload.get("errors", {})),
+                "full_payload": os.path.basename(sidecar),
+            }
+        )
+    if line != full_line:
         with open(sidecar, "w") as f:
             f.write(full_line + "\n")
-    line = json.dumps(_shed_for_stdout(payload))
-    if len(line) <= STDOUT_LINE_BUDGET:
-        return line
-    return json.dumps(
-        {
-            "metric": payload["metric"],
-            "value": payload["value"],
-            "unit": payload["unit"],
-            "sf": payload["sf"],
-            "calibration_sec": payload["calibration_sec"],
-            "calibration_io_sec": payload["calibration_io_sec"],
-            "n_queries": len(payload["queries"]),
-            "n_errors": len(payload.get("errors", {})),
-            "full_payload": os.path.basename(sidecar),
-        }
-    )
+    return line
 
 
 def _shed_for_stdout(payload: dict) -> dict:
-    """Fit the payload to the one-line stdout budget by shedding
-    diagnostic-only fields in a fixed order (history_totals first, then
-    queries_cold). `queries` — the driver's per-row series — is never
-    shed; an oversized result after shedding falls back to the compact
-    line in _stdout_line with the full payload in bench_full.json."""
-    out = dict(payload)
+    """Fit the payload to the one-line stdout budget: drop the
+    SIDECAR_ONLY fields, then shed diagnostic-only fields in a fixed
+    order (history_totals first, then queries_cold). `queries` — the
+    driver's per-row series — is never shed; an oversized result after
+    shedding falls back to the compact line in _stdout_line with the full
+    payload in bench_full.json."""
+    out = {k: v for k, v in payload.items() if k not in SIDECAR_ONLY}
     for shed in ("history_totals", "queries_cold"):
         if len(json.dumps(out)) <= STDOUT_LINE_BUDGET:
             break

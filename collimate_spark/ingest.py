@@ -28,7 +28,7 @@ Re-expresses the reference converter's observable behavior
 Scale design: the input is never materialized on the driver (the
 reference's readFileSync, index.js:552, is the anti-pattern); inference
 unpivots the scan window to one (column, seed, value) row per cell and runs
-ONE grouped aggregation over it (the same 14 aggregates at any width, so
+ONE grouped aggregation over it (the same 15 aggregates at any width, so
 neither the plan nor its driver-side build grows with the column count),
 application is one narrow select (no shuffle), the write is a distributed
 Parquet write.
@@ -309,12 +309,12 @@ def inference_stats(
 
     The window is unpivoted once to a (column index, seed, value) row per
     cell, then grouped by ``i`` under a fixed set of aggregates: rows,
-    non-null count, HLL distinct, int-pattern count and long min/max,
-    double-castable count, length-8..10 count and one count per date
-    format. Each is gated on the row's seed (int stats for int seeds, the
-    double cast for numeric seeds, date probes for string seeds when
-    ``parse_dates``), so the plan's width and its per-cell work do not
-    grow with the column count. The gates nest as CASE WHENs: an AND
+    non-null count, HLL distinct, int-pattern count, long-castable count
+    and long min/max, double-castable count, length-8..10 count and one
+    count per date format. Each is gated on the row's seed (int stats for
+    int seeds, the double cast for numeric seeds, date probes for string
+    seeds when ``parse_dates``), so the plan's width and its per-cell work
+    do not grow with the column count. The gates nest as CASE WHENs: an AND
     conjunct does not guarantee evaluation order."""
     # one SQL expression, not one Column per cell: each py4j Column call
     # costs the driver about a millisecond, which grows with the width
@@ -340,6 +340,7 @@ def inference_stats(
         F.count(v).alias("nn"),
         F.approx_count_distinct(v).alias("dist"),
         F.count(F.when(int_like, 1)).alias("int"),
+        F.count(ival).alias("long"),
         F.min(ival).alias("imin"),
         F.max(ival).alias("imax"),
         F.count(
@@ -364,10 +365,11 @@ def profile(
     aggregation over the scan window (``inference_stats``).
 
     Per column it computes: non-null-token count, int-pattern count,
-    double-castable count, int min/max, per-format date-parse successes,
-    length-8-10 count, approx distinct — all as built-in aggregates over
-    the unpivoted window, grouped by column, so inference is a single
-    distributed pass whose plan is the same size at any width.
+    long-castable count, double-castable count, int min/max, per-format
+    date-parse successes, length-8-10 count, approx distinct — all as
+    built-in aggregates over the unpivoted window, grouped by column, so
+    inference is a single distributed pass whose plan is the same size at
+    any width.
 
     Scan-window policy: small inputs (< AUTO_SAMPLE_MIN_BYTES) are
     profiled in full — one agg, no separate count, strictly more
@@ -453,9 +455,10 @@ def profile(
             logical = "int32"
         elif seed == "int" and st["int"] == nn:
             imin, imax = st["imin"], st["imax"]
-            # values too big even for long parse to NULL via try_cast; treat
-            # any parse failure among int-patterned values as string
-            if imin is None or imax is None:
+            # values too big even for long parse to NULL via try_cast, and
+            # min/max skip NULLs; treat any parse failure among
+            # int-patterned values as string
+            if st["long"] < nn:
                 logical = "str"
             elif INT32_MIN <= imin and imax <= INT32_MAX:
                 logical = "int32"

@@ -28,6 +28,23 @@ policy as the operator-level size gates:
 
 scripts/scale_sweep.py sets the env for its cells; on a real cluster both
 belong in cluster conf unconditionally (shuffles there are never MB-sized).
+
+Stream checkpoints: ``get_session`` always runs ``local[N]``, so every
+checkpoint and state store sits on local disk, and they are written through
+Spark's ``FileSystemBasedCheckpointFileManager``. Spark's default for
+``file:`` paths, the ``FileContext`` manager, forks processes when the JVM
+has no ``libhadoop``: each rename runs ``getFileLinkStatus`` on both paths
+twice, and each of those forks a ``readlink``. One bounded
+``windowed_counts`` drain forked 192 ``readlink`` processes and a
+``stream_stream_join`` drain about 600, at about 6 ms each from the driver
+JVM; the state-store commit was most of the join's latency. Through the
+FileSystem manager a rename is one ``File.renameTo`` and no ``readlink``
+runs. The rename guarantees are unchanged on a POSIX disk: Hadoop's local
+``FileContext`` rename is itself check-then-rename ("deals with overwrite
+in a non-atomic way"). Every checksum is still written (Spark's
+``N.delta.crc`` and Hadoop's ``.crc`` files), so the ``chmod`` forks of
+file creation remain. HDFS or object-store checkpoints on a cluster keep
+Spark's default manager (DEPLOY.md).
 """
 
 from __future__ import annotations
@@ -65,6 +82,11 @@ def session_confs(shuffle_partitions: int, scale_mode: bool) -> dict[str, str]:
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
+        # local checkpoints rename without forking (module docstring)
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager"
+        ),
     }
     if scale_mode:
         # Size shuffles by DATA, not by a constant (see module docstring

@@ -4,6 +4,7 @@ import os
 import sys
 import time
 import uuid
+from collections import Counter
 
 import pytest
 
@@ -51,5 +52,32 @@ def jobs_started_by(spark):
             assert time.time() < deadline, "sentinel job never reached the status tracker"
             time.sleep(0.05)
         return len(tracker.getJobIdsForGroup(group))
+
+    return count
+
+
+@pytest.fixture
+def processes_started_by(spark, tmp_path):
+    """``processes_started_by(fn)``: a Counter, keyed by command name, of
+    the OS processes the driver JVM (local mode: every task too) starts
+    while ``fn`` runs, from an in-JVM JFR recording of
+    ``jdk.ProcessStart`` events."""
+    jvm = spark._jvm
+
+    def count(fn) -> Counter:
+        rec = jvm.jdk.jfr.Recording()
+        try:
+            rec.enable("jdk.ProcessStart")
+            rec.start()
+            fn()
+            rec.stop()
+            dump = jvm.java.io.File(str(tmp_path / f"{uuid.uuid4()}.jfr")).toPath()
+            rec.dump(dump)
+        finally:
+            rec.close()
+        events = jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+        return Counter(
+            os.path.basename(e.getString("command").split()[0]) for e in events
+        )
 
     return count

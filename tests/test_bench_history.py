@@ -6,7 +6,8 @@ an errored round (rc != 0) must contribute NOTHING (its partial rows
 would masquerade as a fast round), malformed artifacts must be skipped
 rather than abort the bench, and both the driver's wrapped shape
 ({"rc": 0, "parsed": {...}}) and a raw payload must parse. No Spark
-session involved — these run in milliseconds.
+session involved — these run in milliseconds — except in the one
+streaming-rows test, which drains each bench pipeline over a small input.
 """
 
 from __future__ import annotations
@@ -143,3 +144,53 @@ def test_stream_input_dir_names_every_generator_parameter(monkeypatch, name):
     before = bench._stream_input_dir()
     monkeypatch.setattr(bench, name, getattr(bench, name) + 1)
     assert bench._stream_input_dir() != before
+
+
+# --- streaming rows: progress split in the sidecar, checkpoints removed ---
+
+
+def _progress(n, add, ops):
+    return {
+        "numInputRows": n,
+        "durationMs": {"addBatch": add, "getBatch": 1, "queryPlanning": 2, "walCommit": 3},
+        "stateOperators": [
+            {"commitTimeMs": c, "numRowsTotal": r, "memoryUsedBytes": m} for c, r, m in ops
+        ],
+    }
+
+
+def test_progress_split_sums_phases_and_keeps_last_state():
+    split = bench.progress_split(
+        [_progress(10, 100, [(5, 3, 300), (6, 4, 400)]), _progress(0, 7, [(1, 2, 50), (2, 1, 60)])]
+    )
+    assert split == {
+        "batches": 2,
+        "numInputRows": 10,
+        "durationMs": {"addBatch": 107, "getBatch": 2, "queryPlanning": 4, "walCommit": 6},
+        "stateOperators": {"commitTimeMs": 14, "numRowsTotal": 3, "memoryUsedBytes": 110},
+    }
+    assert bench.progress_split([])["batches"] == 0
+
+
+def test_streaming_progress_goes_to_the_sidecar_only(tmp_path):
+    sidecar = tmp_path / "bench_full.json"
+    p = _calibrated(_payload(cold=False, history=False))
+    line = json.loads(bench._stdout_line({**p, "streaming_progress": {"s": {"batches": 2}}}, str(sidecar)))
+    assert line == p
+    assert json.loads(sidecar.read_text())["streaming_progress"] == {"s": {"batches": 2}}
+
+
+def test_bench_streaming_records_progress_and_removes_checkpoints(spark, tmp_path, monkeypatch):
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(bench, "STREAM_ROWS_N", 2_000)
+    cold, progress = {}, {}
+    rows = bench.bench_streaming(spark, cold, progress)
+    assert set(rows) == set(cold) == set(progress)
+    for name, split in progress.items():
+        joined = name == "streaming_stream_stream_join"
+        assert split["numInputRows"] == 2_000 + (400 if joined else 0), name
+        assert split["batches"] >= 1 and split["durationMs"]["addBatch"] > 0
+    assert progress["streaming_windowed_counts"]["stateOperators"]["numRowsTotal"] > 0
+    assert os.listdir(tmp_path / "bench_stream_ck") == []

@@ -60,6 +60,26 @@ def test_widening_lattice(spark, tmp_path):
     assert out[0].id == 0 and out[150].mixed_is == "abc"
 
 
+def test_int_pattern_beyond_long_range_is_str(spark, tmp_path):
+    """An int-seeded column whose int-pattern values include one that no
+    long holds is typed ``str`` and keeps that value verbatim; the long
+    range's own bounds stay int64. ``try_cast`` NULLs only the overflowing
+    value and min/max skip NULLs, so the range alone cannot see it."""
+    rows = ["id,over,under,edge"]
+    for i in range(200):
+        over = "99999999999999999999" if i == 150 else str(i)
+        under = "-99999999999999999999" if i == 7 else str(-i)
+        edge = ("9223372036854775807", "-9223372036854775808")[i % 2] if i < 2 else str(i)
+        rows.append(f"{i},{over},{under},{edge}")
+    path = _write(tmp_path, "overflow.csv", "\n".join(rows) + "\n")
+    typed, manifest = ingest(spark, path)
+    t = _types(manifest)
+    assert (t["id"], t["over"], t["under"], t["edge"]) == ("int32", "str", "str", "int64")
+    got = {r.id: r for r in typed.collect()}
+    assert got[150].over == "99999999999999999999" and got[7].under == "-99999999999999999999"
+    assert got[0].edge == 9223372036854775807 and got[1].edge == -9223372036854775808
+
+
 # --- F2: null-token set ---
 def test_null_tokens(spark, tmp_path):
     rows = ["i_null,f_null,s_null,case_na"]
@@ -474,7 +494,7 @@ def test_profile_plan_width_is_independent_of_column_count(spark, tmp_path):
         assert plan.nodeName() == "Aggregate"
         return plan.aggregateExpressions().size()
 
-    assert n_aggregates(3) == n_aggregates(60) == 1 + 14  # the key + 14 aggregates
+    assert n_aggregates(3) == n_aggregates(60) == 1 + 15  # the key + 15 aggregates
 
 
 SIGNED_YEAR_DATES = ("-8911/5/6", "+75997/6/7", "3/3/-49658", "-8911-5-6", "3-3-+49658")

@@ -48,3 +48,23 @@ def test_live_test_session_has_no_wide_initial_shuffles(spark):
     """The shared test session was built without scale mode: no stage may
     fan out to 1024 map partitions at bench scale."""
     assert spark.conf.get(_IPN, None) in (None, spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+_CKPT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_checkpoint_manager_is_the_filesystem_one():
+    """Local checkpoints rename through the FileSystem manager in every
+    mode: every session runs local[N]."""
+    for scale_mode in (False, True):
+        assert session_confs(32, scale_mode=scale_mode)[_CKPT_MANAGER] == _FS_CKPT_MANAGER
+
+
+def test_checkpoint_manager_class_resolves_on_the_running_jvm(spark):
+    """The class moved packages across Spark versions, and a name that
+    does not resolve fails every stream start."""
+    assert spark.conf.get(_CKPT_MANAGER) == _FS_CKPT_MANAGER
+    assert spark._jvm.java.lang.Class.forName(_FS_CKPT_MANAGER).getName() == _FS_CKPT_MANAGER

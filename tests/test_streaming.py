@@ -30,6 +30,23 @@ EVENT_SCHEMA = T.StructType(
 )
 
 
+_EV_SCHEMA = T.StructType(
+    [
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+    ]
+)
+_OD_SCHEMA = T.StructType(
+    [
+        T.StructField("o_ts", T.TimestampType()),
+        T.StructField("o_user", T.LongType()),
+        T.StructField("o_amount", T.DoubleType()),
+    ]
+)
+
+
 def _write_chunk(indir, name, rows):
     with open(os.path.join(indir, name), "w") as fh:
         fh.write("event_id,ts,User Name,value\n")
@@ -90,17 +107,9 @@ def _run_events_stream(spark, tmp_path, transform, chunks):
     writes) so watermarks actually advance."""
     indir = str(tmp_path / "ev_in")
     os.makedirs(indir, exist_ok=True)
-    schema = T.StructType(
-        [
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
     _write_chunk_header = "ts,user_id,event_type,value\n"
     stream = (
-        spark.readStream.schema(schema).option("header", True).csv(indir)
+        spark.readStream.schema(_EV_SCHEMA).option("header", True).csv(indir)
     )
     out = transform(stream)
     name = f"mem_{abs(hash(str(tmp_path))) % 10**9}"
@@ -243,13 +252,6 @@ def test_stream_stream_join(spark, tmp_path):
             T.StructField("event_type", T.StringType()),
         ]
     )
-    od_schema = T.StructType(
-        [
-            T.StructField("o_ts", T.TimestampType()),
-            T.StructField("o_user", T.LongType()),
-            T.StructField("o_amount", T.DoubleType()),
-        ]
-    )
     with open(os.path.join(ev_dir, "c0.csv"), "w") as fh:
         fh.write("ts,user_id,event_type\n")
         fh.write("2024-01-01 10:30:00,1,click\n")   # order at 10:00 in range
@@ -259,7 +261,7 @@ def test_stream_stream_join(spark, tmp_path):
         fh.write("o_ts,o_user,o_amount\n")
         fh.write("2024-01-01 10:00:00,1,99.5\n")
     ev = spark.readStream.schema(ev_schema).option("header", True).csv(ev_dir)
-    od = spark.readStream.schema(od_schema).option("header", True).csv(od_dir)
+    od = spark.readStream.schema(_OD_SCHEMA).option("header", True).csv(od_dir)
     joined = stream_stream_join(ev, od, lookback="1 hour", watermark="2 hours")
     q = (
         joined.writeStream.format("memory")
@@ -749,3 +751,85 @@ def test_near_dup_stream_crash_recovery_no_duplicates(spark, tmp_path):
     assert (13, 14, "within_batch") in pairs
     assert (11, 1, "cross_batch") in pairs
     assert (13, 2, "cross_batch") in pairs and (14, 2, "cross_batch") in pairs
+
+
+def _write_events(path, start_min, n):
+    """``n`` events one minute apart from 2024-01-01 00:00 + ``start_min``."""
+    with open(path, "w") as fh:
+        fh.write("ts,user_id,event_type,value\n")
+        for m in range(start_min, start_min + n):
+            fh.write(
+                f"2024-01-01 {m // 60:02d}:{m % 60:02d}:00,{m % 7},"
+                f"{('click', 'view')[m % 2]},{m % 10}.5\n"
+            )
+
+
+def _drain(df, ckpt, fmt="noop", mode="append", name=None):
+    """One ``availableNow`` run of ``df`` on checkpoint ``ckpt``; returns
+    its progress."""
+    writer = df.writeStream.format(fmt).option("checkpointLocation", ckpt).outputMode(mode)
+    if name:
+        writer = writer.queryName(name)
+    q = writer.trigger(availableNow=True).start()
+    assert q.awaitTermination(180), "drain did not finish"
+    assert q.exception() is None
+    return q.recentProgress
+
+
+def test_stateful_drains_fork_no_readlink(spark, tmp_path, processes_started_by):
+    """Checkpoint and state-store renames fork no ``readlink``: on a JVM
+    without libhadoop, Spark's default FileContext checkpoint manager runs
+    one per link-status check, four per rename. File creation still forks
+    ``chmod`` for the checksum files, which shows the recording sees
+    forks at all."""
+    from collimate_spark.streaming.pipeline import stream_stream_join
+
+    ev_dir, od_dir = str(tmp_path / "ev"), str(tmp_path / "od")
+    os.makedirs(ev_dir)
+    os.makedirs(od_dir)
+    _write_events(os.path.join(ev_dir, "e0.csv"), 0, 300)
+    with open(os.path.join(od_dir, "o0.csv"), "w") as fh:
+        fh.write("o_ts,o_user,o_amount\n")
+        for m in range(0, 300, 5):
+            fh.write(f"2024-01-01 {m // 60:02d}:{m % 60:02d}:00,{m % 7},{m}.0\n")
+
+    def ev():
+        return spark.readStream.schema(_EV_SCHEMA).option("header", True).csv(ev_dir)
+
+    def od():
+        return spark.readStream.schema(_OD_SCHEMA).option("header", True).csv(od_dir)
+
+    for name, build in (
+        ("windowed_counts", lambda: windowed_counts(ev())),
+        ("stream_stream_join", lambda: stream_stream_join(ev(), od())),
+    ):
+        ckpt = str(tmp_path / f"ck_{name}")
+        forks = processes_started_by(lambda: _drain(build(), ckpt))
+        assert forks["readlink"] == 0, (name, forks)
+        assert forks["chmod"] > 0, (name, forks)
+
+
+def test_windowed_counts_restart_keeps_state_and_checksums(spark, tmp_path):
+    """Two ``availableNow`` runs on one checkpoint with a file appended
+    between them: the second reads only the new rows, its windows carry
+    the first run's counts forward, and the state store keeps every
+    delta file with Spark's checksum beside it."""
+    indir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    os.makedirs(indir)
+
+    def run(name):
+        stream = spark.readStream.schema(_EV_SCHEMA).option("header", True).csv(indir)
+        return _drain(windowed_counts(stream), ckpt, "memory", "complete", name)
+
+    _write_events(os.path.join(indir, "e0.csv"), 0, 110)
+    run("restart_1")
+    # overlaps the first file's last window and stays inside its watermark
+    _write_events(os.path.join(indir, "e1.csv"), 90, 90)
+    second = run("restart_2")
+    assert sum(p["numInputRows"] for p in second) == 90
+
+    batch = windowed_counts(spark.read.schema(_EV_SCHEMA).option("header", True).csv(indir))
+    assert sorted(spark.table("restart_2").collect()) == sorted(batch.collect())
+
+    state = {f for _, _, files in os.walk(os.path.join(ckpt, "state")) for f in files}
+    assert {"1.delta", "1.delta.crc", "2.delta", "2.delta.crc"} <= state, sorted(state)
