@@ -54,227 +54,10 @@ BENCH_QUERIES = [
     "doc_fingerprint",
 ]
 
-# Wider coverage measured per-round and recorded in BASELINE.md; kept out
-# of the headline set so round-over-round totals stay comparable to the
-# round-1 baseline. Run `python bench.py --wide` to include them.
-EXTRA_QUERIES = [
-    "range_join_events_orders",
-    "dedup_embedding_cosine",
-    "ann_ivf_topk",
-    "text_pii_scrub",
-    "pack_sequences",
-    "decontaminate_ngram",
-    # round 3
-    "q21_waiting_suppliers",
-    "cohort_retention",
-    "hypertable_rollup",
-    "bm25_search",
-    "shard_export_assignment",
-    "quality_filter_pipeline",
-    "curate_corpus",
-    "multimodal_audio_features",
-    "salted_join_hot_key",
-    "asof_join_forward",
-    "dedup_survivor_best_quality",
-    "lm_perplexity_score",
-    "embedding_cluster_cohesion",
-    "ohlc_bars",
-    "time_weighted_average",
-    # round 3, second wave
-    "rolling_median_value",
-    "ewma_value",
-    "anomaly_zscore",
-    "markov_transitions",
-    "scd2_user_segments",
-    "merge_upsert_orders",
-    "winsorize_stats",
-    "skyline_suppliers",
-    "ivm_incremental_agg",
-    "triangle_participation",
-    "pagerank_copurchase",
-    "collocation_pmi",
-    "zipf_slope",
-    "char_entropy",
-    "weighted_sample_documents",
-    "chi2_event_value",
-    "embedding_gram_matrix",
-    "kmeans_lloyd_clusters",
-    "hll_sketch_partitioned",
-    "top_event_paths",
-    "market_basket_rules",
-    "corr_matrix_lineitem",
-    "embedding_dim_stats",
-    "session_window_agg",
-    "yoy_revenue_growth",
-    # round 3, third wave
-    "regr_price_trend",
-    "rfm_segmentation",
-    "pareto_revenue_share",
-    "heavy_hitters_words",
-    "cusum_changepoints",
-    "chunk_documents",
-    "domain_mix_temperature",
-    "ann_pq_topk",
-    "multimodal_video_features",
-    "inverted_index_postings",
-    "pit_join_scd2",
-    "join_null_safe",
-    "quantile_sketch_value",
-    "udtf_parse_props",
-    "set_overlap_join_prefix",
-    "bfs_distances",
-    "price_histogram",
-    "k_anonymity_report",
-    "entity_resolution_customers",
-    "multimodal_image_resize",
-    "multimodal_frame_sample",
-    "grouped_agg_gini",
-    "sliding_distinct_users",
-    "ann_ivfpq_topk",
-    "ann_range_search",
-    "grouped_arrow_profile",
-    "table_profile_lineitem",
-    "benford_first_digit",
-    "embedding_jl_projection",
-    "set_ops_all",
-    "psi_price_drift",
-    "countmin_word_frequencies",
-    "union_by_name_evolution",
-    "variant_props_stats",
-    "xml_roundtrip_stats",
-    "collated_group_count",
-    "listagg_supplier_names",
-    "approx_top_k_words",
-    "try_functions_safety",
-    "map_hof_functions",
-    "conversion_time_quantiles",
-    "bitmap_distinct_counts",
-    "hll_native_distinct",
-    "session_window_dynamic_gap",
-    "rollup_grouping_id",
-    "agg_percentile_disc",
-    "agg_mode_deterministic",
-    "asof_join_nearest",
-    # round 3, ninth wave
-    "kaplan_meier_retention",
-    "ab_test_welch",
-    "mad_outliers",
-    "bloom_prefilter_join",
-    "geo_radius_join_grid",
-    "referential_integrity_report",
-    "attribution_multitouch",
-    "bottomk_sample_per_group",
-    "zorder_cluster_stats",
-    "fifo_allocation",
-    "gdpr_erasure_audit",
-    "dow_seasonality",
-    "acf_daily_events",
-    "train_val_test_split",
-    "join_skew_diagnostics",
-    "bpe_merge_candidates",
-    "longest_daily_streak",
-    "approx_percentile_error",
-    "lang_id_confusion",
-    "corpus_pipeline_funnel",
-    "bootstrap_mean_ci",
-    "concurrent_sessions_timeline",
-    "new_vs_returning_daily",
-    "mutual_information_value",
-    "ingest_typed_profile",
-    "agg_approx_distinct",
-    "ann_lsh_topk",
-    "multimodal_features",
-    "multimodal_image_features",
-    "winnow_fingerprint_pairs",
-    "dedup_containment",
-    "block_dedup_stats",
-    "hll_intersection_users",
-    "order_total_reconciliation",
-    "partition_advisor_orders",
-    "encoding_advisor_lineitem",
-    "multimodal_image_dhash_pairs",
-    "multimodal_audio_fingerprint_pairs",
-    "multimodal_video_scene_cuts",
-    "kcore_membership",
-    "degree_assortativity",
-    # round 5: last two window queries previously outside the wide set
-    "agg_boolean_counting",
-    "window_distribution_ranks",
-    # round 6: window re-verification capstone previously un-benched
-    "dedup_connected_components",
-    # round 7: r1/r2-vintage window re-verifications (VERDICT r6 #1)
-    "q2_cheapest_supplier",
-    "q4_order_priority",
-    "q7_nation_volume",
-    "q11_important_parts",
-    "q12_shipmode_priority",
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q18_large_volume_customers",
-    "q19_discounted_revenue",
-    "q22_idle_rich_customers",
-    "agg_argmax",
-    "agg_cube",
-    "agg_distinct",
-    "agg_grouping_sets",
-    "agg_stats",
-    "agg_percentile",
-    "scalar_conditional",
-    "scalar_date_funcs",
-    "scalar_math_funcs",
-    "scalar_string_funcs",
-    "set_ops",
-    "sort_topk",
-    "subquery_exists",
-    "unpivot_lineitem",
-    "join_full_outer",
-    "join_theta_inequality",
-    # round 8: r2/r3/r4-vintage window re-verifications (VERDICT r7 #3 —
-    # every driver-window query must have a bench row)
-    "join_anti",
-    "join_cross",
-    "join_semi",
-    "sliding_window_agg",
-    "window_lag_lead",
-    "array_agg_sorted",
-    "array_functions",
-    "data_quality_report",
-    "dedup_minhash_lsh_expr",
-    "dedup_ngram_jaccard",
-    "embedding_quantize_int8",
-    "funnel_conversion",
-    "fuzzy_name_match",
-    "interpolate_missing_values",
-    "lang_id_heuristic",
-    "map_functions",
-    "multimodal_metadata",
-    "pandas_udf_scalar",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q20_excess_shippers",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "repetition_metrics",
-    "snapshot_diff",
-    "stratified_sample_documents",
-    "text_length_histogram",
-    "tfidf_top_terms",
-    "udtf_tokenize",
-    # grouped_zscore is the DELIBERATE applyInPandas Arrow-round-trip
-    # demo (per-group overhead over ~100k tiny groups is what its row
-    # measures); grouped_zscore_native is the production JVM window plan
-    # for the same output — read the pair together (r7 VERDICT #6).
-    "grouped_zscore",
-    "grouped_zscore_native",
-    # round 8 mid-round additions (in the r8 driver window)
-    "semdedup_prune",
-    "dup_span_coverage",
-    "date_spine_fill",
-    "pivot_event_counts",
-    "window_range_frame",
-    "window_rank_dense_ntile",
-]
+# Every other registered query, in registration order: measured by
+# `python bench.py --wide` and kept out of the headline set so
+# round-over-round totals stay comparable to the round-1 baseline.
+EXTRA_QUERIES = [n for n in all_queries() if n not in BENCH_QUERIES]
 
 
 def bench_calibration(spark) -> float:
@@ -625,9 +408,11 @@ def main() -> None:
     # Run-1 times per query (VERDICT r13 #2): clear_scratch() runs in the
     # per-QUERY finally below, so run 1 of each query is the scratch-COLD
     # pipeline (it also pays one-time codegen compile) and runs 2..N reuse
-    # the caches run 1 built. `queries` (the min) stays the r1-comparable
-    # series; `queries_cold` makes the warm-path accounting explicit so a
-    # cache-based win can be read against the cold pipeline it replaced.
+    # the caches run 1 built (scache finds each plan cached and registers
+    # nothing new), so `queries` (the min) measures the scratch-WARM path
+    # and stays the r1-comparable series; `queries_cold` makes the
+    # warm-path accounting explicit so a cache-based win can be read
+    # against the cold pipeline it replaced.
     cold: dict[str, float] = {}
 
     # The ingest row runs FIRST (VERDICT r13 #5): at the END of a bench it
@@ -664,9 +449,9 @@ def main() -> None:
             # — release them between queries so a --wide sweep (200+
             # queries, one session) doesn't accumulate spilled blocks for
             # the session lifetime. clear_scratch() is scoped to operator
-            # frames (and exercises the public helper); no cache is
-            # shared across queries (catalog.py never caches), so
-            # steady-state timings are unaffected.
+            # frames (and exercises the public helper); no cached data is
+            # shared across queries (catalog.py memoizes table schemas,
+            # not rows), so steady-state timings are unaffected.
             clear_scratch()
 
     stream_progress: dict[str, dict] = {}

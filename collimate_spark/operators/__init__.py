@@ -11,8 +11,10 @@ the FIRST 50 entries of the merged dict. ``DRIVER_PRIORITY`` pins which 50
 land in that window — the training-data-pipeline operators (dedup /
 similarity / textstats / multimodal / udx) first, then the most
 informative one-per-operator relational / join / window / event queries.
-Everything else (already driver-verified green in round 1) registers
-after slot 50 and stays covered by tests/test_oracle_parity.py.
+Everything else registers after slot 50, in module order, and stays
+covered by tests/test_oracle_parity.py. Nothing else lists the queries:
+bench.py derives its ``--wide`` set from ``all_queries()``, and the
+queries outside the window are its complement.
 
 CACHE-LIFETIME CONTRACT (covers every caching operator — the dedup
 family, market_basket_rules, encoding_advisor_lineitem, asof_join
@@ -51,6 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 # parity-style tested). After this window lands, no registered query's
 # last driver contact is older than r10. Window composition: 46 oracled
 # + 4 no-oracle (declared up front, VERDICT r13 #5).
+# pit_join_scd2 takes the last r10 slot so the driver hash-checks its
+# one-scan rewrite (VERDICT r14 #7).
 DRIVER_PRIORITY: tuple[str, ...] = (
     "embedding_jl_projection",
     "geo_radius_join_grid",
@@ -101,190 +105,9 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "markov_transitions",
     "mutual_information_value",
     "new_vs_returning_daily",
-    "ohlc_bars",
+    "pit_join_scd2",
 )
 
-# Queries registered but outside the 50-slot window — the complement of
-# DRIVER_PRIORITY over the full registered surface. Every entry here has
-# been driver-checked at least once (rounds 1-8) and stays covered by
-# the parity suite at sf0.001 + sf0.01 (tests/test_oracle_parity.py)
-# and the sf0.1 mirror (pytest -m sf01). tests/test_registration.py
-# accepts a north-star query being here instead of in the window — but
-# ONLY here, so the exemption is explicit and reviewed. One entry per
-# line.
-ROTATION_CANDIDATES: tuple[str, ...] = (
-    "ab_test_welch",
-    "acf_daily_events",
-    "agg_argmax",
-    "agg_boolean_counting",
-    "agg_cube",
-    "agg_distinct",
-    "agg_grouping_sets",
-    "agg_mode_deterministic",
-    "agg_percentile",
-    "agg_percentile_disc",
-    "agg_rollup",
-    "agg_stats",
-    "ann_bruteforce_topk",
-    "ann_ivf_topk",
-    "ann_ivfpq_topk",
-    "ann_lsh_topk",
-    "ann_pq_topk",
-    "ann_range_search",
-    "anomaly_zscore",
-    "approx_top_k_words",
-    "array_agg_sorted",
-    "array_functions",
-    "asof_join_forward",
-    "asof_join_nearest",
-    "attribution_multitouch",
-    "benford_first_digit",
-    "bfs_distances",
-    "bitmap_distinct_counts",
-    "block_dedup_stats",
-    "bloom_prefilter_join",
-    "bm25_search",
-    "bootstrap_mean_ci",
-    "bottomk_sample_per_group",
-    "bpe_merge_candidates",
-    "char_entropy",
-    "chi2_event_value",
-    "chunk_documents",
-    "cohort_retention",
-    "collated_group_count",
-    "concurrent_sessions_timeline",
-    "corpus_pipeline_funnel",
-    "countmin_word_frequencies",
-    "curate_corpus",
-    "cusum_changepoints",
-    "data_quality_report",
-    "date_spine_fill",
-    "decontaminate_ngram",
-    "dedup_connected_components",
-    "dedup_containment",
-    "dedup_embedding_cosine",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_expr",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_survivor_best_quality",
-    "doc_fingerprint",
-    "domain_mix_temperature",
-    "dup_span_coverage",
-    "embedding_gram_matrix",
-    "embedding_quantize_int8",
-    "entity_resolution_customers",
-    "fifo_allocation",
-    "funnel_conversion",
-    "fuzzy_name_match",
-    "gdpr_erasure_audit",
-    "grouped_zscore",
-    "grouped_zscore_native",
-    "heavy_hitters_words",
-    "hypertable_rollup",
-    "interpolate_missing_values",
-    "inverted_index_postings",
-    "ivm_incremental_agg",
-    "join_anti",
-    "join_cross",
-    "join_full_outer",
-    "join_left_outer",
-    "join_semi",
-    "join_theta_inequality",
-    "json_extract_events",
-    "kaplan_meier_retention",
-    "kcore_membership",
-    "lang_id_heuristic",
-    "map_functions",
-    "map_hof_functions",
-    "market_basket_rules",
-    "merge_upsert_orders",
-    "multimodal_audio_fingerprint_pairs",
-    "multimodal_frame_sample",
-    "multimodal_image_dhash_pairs",
-    "multimodal_image_resize",
-    "multimodal_metadata",
-    "multimodal_video_scene_cuts",
-    "order_total_reconciliation",
-    "pack_sequences",
-    "pagerank_copurchase",
-    "pandas_udf_scalar",
-    "partition_advisor_orders",
-    "pit_join_scd2",
-    "pivot_event_counts",
-    "psi_price_drift",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_shipmode_priority",
-    "q13_order_count_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_discounted_revenue",
-    "q1_pricing_summary",
-    "q20_excess_shippers",
-    "q21_waiting_suppliers",
-    "q22_idle_rich_customers",
-    "q2_cheapest_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "quality_filter_pipeline",
-    "quantile_sketch_value",
-    "range_join_events_orders",
-    "referential_integrity_report",
-    "repetition_metrics",
-    "rfm_segmentation",
-    "rolling_median_value",
-    "rollup_grouping_id",
-    "salted_join_hot_key",
-    "scalar_conditional",
-    "scalar_date_funcs",
-    "scalar_math_funcs",
-    "scalar_string_funcs",
-    "scd2_user_segments",
-    "session_window_agg",
-    "session_window_dynamic_gap",
-    "set_ops",
-    "set_overlap_join_prefix",
-    "shard_export_assignment",
-    "skyline_suppliers",
-    "sliding_window_agg",
-    "snapshot_diff",
-    "sort_topk",
-    "stratified_sample_documents",
-    "subquery_exists",
-    "text_length_histogram",
-    "text_pii_scrub",
-    "text_quality_metrics",
-    "tfidf_top_terms",
-    "time_weighted_average",
-    "top_event_paths",
-    "try_functions_safety",
-    "tumbling_window_agg",
-    "udtf_tokenize",
-    "union_by_name_evolution",
-    "unpivot_lineitem",
-    "variant_props_stats",
-    "weighted_sample_documents",
-    "window_distribution_ranks",
-    "window_lag_lead",
-    "window_rank_dense_ntile",
-    "window_running_sum",
-    "window_topk_per_group",
-    "winnow_fingerprint_pairs",
-    "winsorize_stats",
-    "xml_roundtrip_stats",
-    "yoy_revenue_growth",
-    "zipf_slope",
-)
 
 def _modules():
     from collimate_spark.operators import (

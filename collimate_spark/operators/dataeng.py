@@ -159,7 +159,8 @@ ORDER BY o_orderstatus
 
 # GK sketch accuracy for every --approx percentile path: rank error
 # <= n / accuracy. 1000 (0.1% rank error) is deliberate, measured at
-# sf10 (60M-row lineitem, 10M-row events, scripts/approx_scale_bench):
+# sf10 (60M-row lineitem, 10M-row events; the probe script is
+# `git show c8a0ddf:scripts/approx_scale_bench.py`):
 # at 10_000 the sketch's per-row insert/compress cost EXCEEDED the
 # exact ObjectHashAggregate's buffering on low-cardinality groups
 # (approx_percentile(10k) 1.14s vs exact 0.69s on 10M rows/5 groups),
@@ -366,8 +367,8 @@ def pit_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     2 scans / 4 exchanges / 1 aggregate → 1 scan / 2 exchanges (the
     shared user_id hash exchange + the final orderBy's range exchange) /
     0 aggregates, pinned by test_plans.py's
-    test_pit_join_scd2_single_scan_no_aggregate
-    (plans/r14/pit_join_scd2_{before,after}.txt). The SCD2
+    test_pit_join_scd2_single_scan_no_aggregate (before/after plans:
+    ``git show c8a0ddf:plans/r14/pit_join_scd2_{before,after}.txt``). The SCD2
     dimension builder itself (scd2_user_segments) is untouched — this
     inlines only what the probe query needs."""
     ev = load_table(spark, "events", sf_dir)

@@ -15,7 +15,10 @@ This module scopes the contract to exactly the operators' own frames:
 
 - ``scache(df)``: cache ``df`` and register it as scratch. Operators use
   it as a drop-in chain suffix: ``df.transform(scache)`` instead of
-  ``df.cache()``.
+  ``df.cache()``. A plan that is already cached (a rebuild of the same
+  query, or a frame the user cached) is returned as is and not
+  registered, so repeat runs share run 1's block and a user's cache is
+  never released.
 - ``clear_scratch()``: unpersist every registered scratch frame and
   forget it. Call between queries — user-cached frames are untouched
   (unlike ``clearCache``). Safe to call while a result DataFrame is
@@ -37,6 +40,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 _SCRATCH: list[DataFrame] = []
@@ -44,16 +48,19 @@ _SCRATCH: list[DataFrame] = []
 
 def scache(df: DataFrame) -> DataFrame:
     """Cache ``df`` and register it for ``clear_scratch()``. Returns the
-    same DataFrame so it composes as ``expr.transform(scache)``."""
+    same DataFrame so it composes as ``expr.transform(scache)``.
+    ``storageLevel`` looks the plan up in the CacheManager: a plan
+    cached already is left to whoever cached it."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     _SCRATCH.append(df)
     return df.cache()
 
 
-def clear_scratch(blocking: bool = False) -> int:
-    """Unpersist every registered operator-internal scratch frame.
-    Returns the number of frames released. User caches are untouched."""
+def _release(mark: int, blocking: bool) -> int:
+    """Unpersist and forget the frames registered after ``mark``."""
     n = 0
-    while _SCRATCH:
+    while len(_SCRATCH) > mark:
         df = _SCRATCH.pop()
         try:
             df.unpersist(blocking)
@@ -61,6 +68,12 @@ def clear_scratch(blocking: bool = False) -> int:
             pass
         n += 1
     return n
+
+
+def clear_scratch(blocking: bool = False) -> int:
+    """Unpersist every registered operator-internal scratch frame.
+    Returns the number of frames released. User caches are untouched."""
+    return _release(0, blocking)
 
 
 @contextmanager
@@ -71,9 +84,4 @@ def scratch_caches(blocking: bool = False):
     try:
         yield
     finally:
-        while len(_SCRATCH) > mark:
-            df = _SCRATCH.pop()
-            try:
-                df.unpersist(blocking)
-            except Exception:  # noqa: BLE001
-                pass
+        _release(mark, blocking)

@@ -2,8 +2,8 @@
 
 The driver's CORRECTNESS gate verifies only the FIRST 50 entries of
 ``queries()`` (round-1 verdict) — these tests pin that the window holds
-exactly the 50 queries we want verified, with every north-star
-(dedup/similarity/text/multimodal/udx) query inside it.
+exactly the 50 queries we want verified, and that bench.py's measured
+set is the registry itself.
 """
 
 from __future__ import annotations
@@ -14,22 +14,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from collimate_spark.operators import DRIVER_PRIORITY, ROTATION_CANDIDATES  # noqa: E402
-
-NORTH_STAR_PREFIXES = (
-    "dedup_",
-    "ann_",
-    "text_",
-    "lang_",
-    "doc_",
-    "winnow_",
-    "multimodal_",
-    "pandas_udf",
-    "udtf_",
-    "map_functions",
-    "array_functions",
-    "agg_approx",
-)
+from collimate_spark.operators import DRIVER_PRIORITY, all_queries  # noqa: E402
 
 
 def test_priority_window_is_exactly_50():
@@ -42,43 +27,20 @@ def test_first_50_queries_match_priority():
     assert tuple(names[:50]) == DRIVER_PRIORITY
 
 
-def test_every_north_star_query_in_window():
-    """North-star queries live in the driver window — or, for operators
-    registered after the round's window froze, in the explicit
-    ROTATION_CANDIDATES queue for the next round. Nothing may be in
-    neither (that would silently skip driver verification forever)."""
-    names = list(entrymod.queries().keys())
-    window = set(names[:50])
-    outside = [
-        n
-        for n in names
-        if n.startswith(NORTH_STAR_PREFIXES)
-        and n not in window
-        and n not in ROTATION_CANDIDATES
-    ]
-    assert not outside, f"north-star queries outside driver window: {outside}"
-
-
-def test_rotation_candidates_are_registered_and_not_windowed():
-    names = list(entrymod.queries().keys())
-    window = set(names[:50])
-    assert not (set(ROTATION_CANDIDATES) & window), "candidate already in window"
-    missing = set(ROTATION_CANDIDATES) - set(names)
-    assert not missing, f"rotation candidates not registered: {missing}"
-
-
 def test_oracles_subset_of_queries():
     q = set(entrymod.queries().keys())
     extra = set(entrymod.oracle_sql().keys()) - q
     assert not extra, f"oracles without queries: {extra}"
 
 
-def test_driver_window_fully_benched():
-    """VERDICT r4 directive #6, made structural: every query in the
-    driver window must be in bench.py's measured set (headline or
-    wide), so no CORRECTNESS window ever exposes an un-benched plan."""
+def test_bench_set_is_the_registry():
+    """bench.py derives its --wide rows from the registry: headline plus
+    extras cover every registered query exactly once, and every headline
+    name is registered."""
     import bench
 
-    covered = set(bench.BENCH_QUERIES) | set(bench.EXTRA_QUERIES)
-    missing = [n for n in DRIVER_PRIORITY if n not in covered]
-    assert not missing, f"window queries not benched: {missing}"
+    registered = set(all_queries())
+    bench_set = bench.BENCH_QUERIES + bench.EXTRA_QUERIES
+    assert len(bench_set) == len(set(bench_set)), "query benched twice"
+    assert set(bench_set) == registered
+    assert set(bench.BENCH_QUERIES) <= registered

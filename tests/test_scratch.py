@@ -67,3 +67,31 @@ def test_clear_scratch_before_materialize_is_safe(spark, sf_dir):
     rows_cached = sorted(map(tuple, dedup_minhash_lsh(spark, sf_dir).collect()))
     clear_scratch(blocking=True)
     assert rows_cleared == rows_cached
+
+
+def test_scache_is_idempotent_across_rebuilds(spark, sf_dir):
+    """Building one query three times (bench.py's min-of-N) re-caches
+    nothing: runs 2-3 find run 1's plan cached, so the registry keeps
+    one handle and Spark never warns "Asked to cache already cached
+    data"."""
+    from collimate_spark.operators.tpch_ext import q15_top_supplier
+
+    clear_scratch(blocking=True)
+    rows = [sorted(map(tuple, q15_top_supplier(spark, sf_dir).collect())) for _ in range(3)]
+    assert len(scratch._SCRATCH) == 1
+    assert rows[0] == rows[1] == rows[2]
+    assert clear_scratch(blocking=True) == 1
+
+
+def test_scache_leaves_user_cached_frame_alone(spark):
+    """A plan the user cached first is theirs: ``scache`` does not
+    register it, so ``clear_scratch()`` leaves it cached."""
+    clear_scratch(blocking=True)
+    user = spark.range(50).withColumn("y", F.col("id") + 1).cache()
+    user.count()
+    twin = spark.range(50).withColumn("y", F.col("id") + 1)
+    assert scache(twin) is twin
+    assert not scratch._SCRATCH
+    assert clear_scratch(blocking=True) == 0
+    assert user.storageLevel.useMemory
+    user.unpersist(blocking=True)
