@@ -11,7 +11,9 @@ notebook "why is this slow" triage.
 
 from __future__ import annotations
 
+import json
 import re
+from collections import Counter
 
 from pyspark.sql import DataFrame
 
@@ -25,98 +27,76 @@ def formatted_plan(df: DataFrame) -> str:
     return sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-def _runtime_lines(plan: str) -> list[str]:
-    """Plan lines with each cached build subtree counted ONCE.
+def plan_graph(df: DataFrame) -> dict:
+    """The physical plan as Spark's own ``SparkPlanInfo`` tree — the graph
+    the SQL UI and the event log draw — decoded from its JSON form.
+    ``fromSparkPlan`` already descends into what runs: an adaptive plan's
+    current plan (never its initial one), query stages, a cached
+    relation's build plan, a reused exchange's target and subqueries."""
+    jvm = df.sparkSession._jvm
+    info = jvm.org.apache.spark.sql.execution.SparkPlanInfo.fromSparkPlan(
+        df._jdf.queryExecution().executedPlan()
+    )
+    scala = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper().registerModule(
+        scala.__getattr__("MODULE$")
+    )
+    return json.loads(mapper.writeValueAsString(info))
 
-    A line nested under an ``InMemoryTableScan`` node is a re-print of a
-    cache's build plan (executed once per cache, not once per reference)
-    — those dedupe globally on content. Every other line counts per
-    occurrence, because identical sibling subtrees OUTSIDE a cache
-    really do execute per branch. Nesting is recovered from the
-    ``toString`` indentation prefix (`` :+-`` gutter width).
 
-    KNOWN UNDERCOUNT CAVEAT: the global content dedup cannot tell "the
-    same cache re-printed" apart from "a DIFFERENT cache whose build
-    contains identical line text" — e.g. two caches that both scan the
-    same parquet with the same pruned schema share a FileScan line, so
-    the second build's scan is counted once though both builds read the
-    file. Per-cache namespacing was attempted (round 6) and is NOT
-    text-recoverable: every reference re-aliases the header expression
-    ids (``InMemoryTableScan [x#1]`` vs ``[x#24]``), and nested-AQE
-    section printing RESETS the gutter depth mid-subtree (a nested
-    ``== Final Plan ==`` prints shallower than its own parent), so
-    neither header lines nor indentation yield a stable cache identity.
-    Counts here are therefore a LOWER bound on distinct cache-build
-    work; the pinned SCAN_CEILINGS are calibrated against this rule."""
-    out: list[str] = []
-    seen_cached: set[str] = set()
-    cache_depths: list[int] = []  # gutter widths of open InMemoryTableScans
-    skip_depths: list[int] = []  # gutter widths of open "== Initial Plan ==" headers
-    for raw in plan.splitlines():
-        content = raw.lstrip(" :+-")
-        depth = len(raw) - len(content)
-        while cache_depths and depth <= cache_depths[-1]:
-            cache_depths.pop()
-        # strict <: section BODY lines print at the SAME gutter depth as
-        # the "== Initial Plan ==" header; the section is always the last
-        # one inside its AdaptiveSparkPlan, so it ends when the tree
-        # returns to a shallower ancestor
-        while skip_depths and depth < skip_depths[-1]:
-            skip_depths.pop()
-        # an executed AdaptiveSparkPlan prints BOTH "== Final Plan ==" and
-        # "== Initial Plan ==" sections; the Initial section is the
-        # pre-AQE plan that never runs once isFinalPlan=true — drop it
-        # wholesale (its distinct expression ids defeat content-dedup)
-        if content.startswith("== Initial Plan =="):
-            skip_depths.append(depth)
-            continue
-        if skip_depths:
-            continue
-        under_cache = bool(cache_depths)
-        if "InMemoryTableScan" in content:
-            cache_depths.append(depth)
-        stripped = raw.strip(" :+-")
-        if under_cache:
-            if stripped in seen_cached:
-                continue
-            seen_cached.add(stripped)
-        out.append(stripped)
-    return out
+def plan_nodes(df: DataFrame) -> list[dict]:
+    """Every physical node of the plan, each counted once.
+
+    A node is identified by the SQL-metric accumulator ids of itself and
+    its subtree. A cached or reused subtree appears under every reader
+    with the same accumulators, so it counts once; identical uncached
+    siblings each own their accumulators, so each counts."""
+    nodes: dict[tuple, dict] = {}
+
+    def visit(node: dict) -> frozenset:
+        accs = frozenset(m["accumulatorId"] for m in node["metrics"]).union(
+            *map(visit, node["children"])
+        )
+        nodes.setdefault((node["nodeName"], accs), node)
+        return accs
+
+    visit(plan_graph(df))
+    return list(nodes.values())
+
+
+# a file-source scan is named "Scan <format> <table or empty>"; RDD and
+# one-row scans ("Scan ExistingRDD", "Scan OneRowRelation") read no file
+_FILE_SCAN = re.compile(r"Scan \S+ |BatchScan")
 
 
 def plan_features(df: DataFrame) -> dict:
-    """Distill the physical plan into scale-relevant counts.
+    """Distill the physical plan into scale-relevant counts, read from the
+    plan graph (see ``plan_nodes``: a node runs once however often it is
+    referenced).
 
-    Keys: n_exchanges (shuffles), n_broadcasts, n_scans,
-    n_codegen_spans, has_cartesian, has_bnl_join (BroadcastNestedLoop —
-    fine for 1-row/dim frames, a red flag between facts), pushed_filters
-    (list), read_schemas (list of pruned scan schemas), exchange_keys
-    (partitioning expressions seen on hash exchanges)."""
-    plan = executed_plan(df)
-    fmt = formatted_plan(df)
-    exchange_keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
-    # toString re-prints a cached relation's ENTIRE build subtree under
-    # every InMemoryTableScan that references it, though the build
-    # executes once — dedupe ONLY lines inside those subtrees (keyed on
-    # content, shared across all InMemoryTableScans of the same cache).
-    # Lines outside any cached subtree count per occurrence: an UNCACHED
-    # subtree shared by two plan branches prints with identical
-    # expression ids too but genuinely executes per branch, so a global
-    # content-dedup would hide exactly the cache-removal regressions the
-    # scan ceilings exist to catch.
-    uniq = _runtime_lines(plan)
+    Keys: ops (Counter of node names), n_exchanges (shuffle and broadcast
+    exchanges), n_broadcasts, n_scans (file scans), n_codegen_spans
+    (WholeStageCodegen stages), has_cartesian, has_bnl_join
+    (BroadcastNestedLoop — fine for 1-row/dim frames, a red flag between
+    facts), pushed_filters (each file scan's pushed filter list)."""
+    nodes = plan_nodes(df)
+    ops = Counter(n["nodeName"] for n in nodes)
+    scans = [n for n in nodes if _FILE_SCAN.match(n["nodeName"])]
     return {
-        "n_exchanges": sum(
-            1 for line in uniq if "Exchange " in line and "Reused" not in line
+        "ops": ops,
+        "n_exchanges": ops["Exchange"] + ops["BroadcastExchange"],
+        "n_broadcasts": ops["BroadcastExchange"],
+        "n_scans": len(scans),
+        "n_codegen_spans": sum(
+            c for name, c in ops.items() if name.startswith("WholeStageCodegen")
         ),
-        "n_broadcasts": sum(1 for line in uniq if "BroadcastExchange" in line),
-        "n_scans": sum(1 for line in uniq if "FileScan" in line or "BatchScan" in line),
-        "n_codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))),
-        "has_cartesian": "CartesianProduct" in plan,
-        "has_bnl_join": "BroadcastNestedLoopJoin" in plan,
-        "pushed_filters": re.findall(r"PushedFilters: \[([^\]]*)\]", fmt),
-        "read_schemas": re.findall(r"ReadSchema: (\S+)", fmt),
-        "exchange_keys": exchange_keys,
+        "has_cartesian": ops["CartesianProduct"] > 0,
+        "has_bnl_join": ops["BroadcastNestedLoopJoin"] > 0,
+        "pushed_filters": [
+            s["metadata"]["PushedFilters"][1:-1]
+            for s in scans
+            if "PushedFilters" in s["metadata"]
+        ],
     }
 
 
@@ -147,10 +127,11 @@ def assert_scalable(
 _PLANS_HEADER = """# Physical-plan audit
 
 Scale-relevant features of every registered query's physical plan at
-sf0.001 (regenerate: `python -m collimate_spark.plans`). Columns:
-shuffles = Exchange nodes (excluding reuse), scans = FileScan/BatchScan
-count, bcast = BroadcastExchange count, wscg = distinct WholeStageCodegen
-spans, cart/bnlj = CartesianProduct / BroadcastNestedLoopJoin present
+sf0.001 (regenerate: `make plans`), counted over the plan graph with
+each node that runs counted once. Columns: shuffles = Exchange and
+BroadcastExchange nodes (a reused exchange counts once), scans = file-scan
+nodes, bcast = BroadcastExchange nodes, wscg = WholeStageCodegen stages,
+cart/bnlj = CartesianProduct / BroadcastNestedLoopJoin present
 (bnlj is legitimate only against 1-row/dimension frames; the blanket test
 tests/test_plans.py::test_no_cartesian_products_anywhere enforces the
 cartesian ban). Oracle = driver-verifiable DuckDB twin registered.
@@ -166,26 +147,16 @@ def regenerate_plans_md(out_path: str, sf_dir: str = "/root/testdata/sf0.001") -
     """Rebuild the PLANS.md audit table over every registered query."""
     import io
 
-    from pyspark.sql import SparkSession
-
     from collimate_spark.operators import all_oracles, all_queries
+    from collimate_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("plan-audit")
-        .getOrCreate()
-    )
+    spark = get_session("plan-audit")
     queries, oracles = all_queries(), all_oracles()
     buf = io.StringIO()
     buf.write(_PLANS_HEADER)
     max_sh, max_q, n_cart = -1, "", 0
     for name in sorted(queries):
         f = plan_features(queries[name](spark, sf_dir))
-        # matches the audit's historical definition: every Exchange node
-        # (broadcast exchanges included; the bcast column isolates those)
         sh = f["n_exchanges"]
         if sh > max_sh:
             max_sh, max_q = sh, name

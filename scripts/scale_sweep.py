@@ -67,12 +67,12 @@ sys.path.insert(0, REPO)
 # The pair-emitting / candidate-join family. Multimodal pair ops are
 # excluded by construction: their asset universe is capped (asset_id <
 # 200) so corpus replication doesn't change their input. The embedding
-# ops (semdedup_prune, dedup_embedding_cosine) are swept separately by
-# scripts/r14_scale_probe.py: since r14 the slices DO replicate
-# embeddings (sign-flip mutation, labels preserved so cluster size
-# grows — see make_sf1.py), but their cost axis is cluster size, not
-# corpus size, so they get their own old-vs-new A/B rather than a row
-# in this linearity screen.
+# ops (semdedup_prune, dedup_embedding_cosine) are not in it either:
+# since r14 the slices DO replicate embeddings (sign-flip mutation,
+# labels preserved so cluster size grows — see make_sf1.py), but their
+# cost axis is cluster size, not corpus size, so they need a
+# cluster-size sweep rather than a row in this linearity screen (none
+# is recorded; OPTIMIZATION_r14.md says why).
 OPS = [
     "dedup_exact",
     "dedup_ngram_jaccard",

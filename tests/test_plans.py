@@ -12,7 +12,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from collimate_spark.catalog import load_table
-from collimate_spark.plans import plan_features
+from collimate_spark.plans import executed_plan, formatted_plan, plan_features
 from collimate_spark.operators.relational import (
     q1_pricing_summary,
     q3_shipping_priority,
@@ -21,17 +21,8 @@ from collimate_spark.operators.relational import (
 )
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _formatted(df) -> str:
-    sc = df.sparkSession.sparkContext
-    return sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
 def test_q1_filter_pushdown_and_pruning(spark, sf_dir):
-    plan = _formatted(q1_pricing_summary(spark, sf_dir))
+    plan = formatted_plan(q1_pricing_summary(spark, sf_dir))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # column pruning: only the 7 needed columns reach the scan
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
@@ -42,26 +33,26 @@ def test_q1_filter_pushdown_and_pruning(spark, sf_dir):
 def test_q1_wholestage_codegen(spark, sf_dir):
     df = q1_pricing_summary(spark, sf_dir)
     df.collect()  # AQE reveals the final plan (and codegen spans) post-run
-    plan = _plan(df)
+    plan = executed_plan(df)
     assert "isFinalPlan=true" in plan
     # "*(n)" prefixes mark WholeStageCodegen spans in the compact plan form
     assert "*(" in plan  # agg pipeline stays JVM-compiled
 
 
 def test_q3_broadcasts_dimension(spark, sf_dir):
-    plan = _plan(q3_shipping_priority(spark, sf_dir))
+    plan = executed_plan(q3_shipping_priority(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
 
 
 def test_q5_star_join_broadcasts(spark, sf_dir):
-    plan = _plan(q5_local_supplier_volume(spark, sf_dir))
+    ops = plan_features(q5_local_supplier_volume(spark, sf_dir))["ops"]
     # every dim join (customer/supplier/nation/region) is broadcast; the
     # only shuffle exchanges are for the fact-fact join + final agg/sort
-    assert plan.count("BroadcastHashJoin") >= 4
+    assert ops["BroadcastHashJoin"] >= 4
 
 
 def test_sort_topk_avoids_global_sort(spark, sf_dir):
-    plan = _plan(sort_topk(spark, sf_dir))
+    plan = executed_plan(sort_topk(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan  # per-partition heap, not full sort
 
 
@@ -70,9 +61,9 @@ def test_q8_star_join_all_broadcast(spark, sf_dir):
     sort-merge join in a star pattern is a plan regression."""
     from collimate_spark.operators.tpch_ext import q8_market_share
 
-    plan = _plan(q8_market_share(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 5
-    assert "SortMergeJoin" not in plan
+    ops = plan_features(q8_market_share(spark, sf_dir))["ops"]
+    assert ops["BroadcastHashJoin"] >= 5
+    assert "SortMergeJoin" not in ops
 
 
 def test_asof_join_partitions_on_composite_key(spark, sf_dir):
@@ -85,7 +76,7 @@ def test_asof_join_partitions_on_composite_key(spark, sf_dir):
     from collimate_spark.operators.joins import asof_join_events_orders
 
     for grain in (True, False):
-        plan = _plan(asof_join_events_orders(spark, sf_dir, day_grain=grain))
+        plan = executed_plan(asof_join_events_orders(spark, sf_dir, day_grain=grain))
         assert "hashpartitioning(bucket" in plan and "gkey" in plan.split("hashpartitioning(bucket", 1)[1][:80]
 
 
@@ -114,7 +105,7 @@ def test_range_join_partitions_on_composite_key(spark, sf_dir):
     an equi-join on bucket alone."""
     from collimate_spark.operators.joins import range_join_events_orders
 
-    plan = _plan(range_join_events_orders(spark, sf_dir))
+    plan = executed_plan(range_join_events_orders(spark, sf_dir))
     join_lines = [l for l in plan.splitlines() if "HashJoin" in l]
     assert join_lines, "range join lost its hash-join shape"
     assert any("bucket" in l and "week" in l for l in join_lines), join_lines
@@ -126,7 +117,7 @@ def test_bm25_topk_avoids_global_sort(spark, sf_dir):
     partition."""
     from collimate_spark.operators.textstats import bm25_search
 
-    plan = _plan(bm25_search(spark, sf_dir))
+    plan = executed_plan(bm25_search(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     # df/avgdl scalars ride as broadcasts, never shuffle the scored side
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
@@ -137,7 +128,7 @@ def test_quality_filter_is_mapper_only(spark, sf_dir):
     the final presentation sort."""
     from collimate_spark.operators.textstats import quality_filter_pipeline
 
-    plan = _plan(quality_filter_pipeline(spark, sf_dir))
+    plan = executed_plan(quality_filter_pipeline(spark, sf_dir))
     # the ONLY exchange is the presentation sort's range partitioning —
     # no hash shuffle (no aggregation/join) anywhere in the gate
     assert plan.count("Exchange") == plan.count("Exchange rangepartitioning"), plan
@@ -149,26 +140,22 @@ def test_cohort_retention_single_fact_scan(spark, sf_dir):
     join-back formulation re-executes the scan subtree per branch."""
     from collimate_spark.operators.events import cohort_retention
 
-    plan = _formatted(cohort_retention(spark, sf_dir))
-    # formatted output lists each scan once in the tree and once in the
-    # details; two mentions == one physical scan
-    assert plan.count("Scan parquet") == 2, plan.count("Scan parquet")
+    assert plan_features(cohort_retention(spark, sf_dir))["n_scans"] == 1
 
 
 def test_q21_single_fact_execution(spark, sf_dir):
     """q21's window form must execute the lineitem+orders subtree once:
-    3 tables -> exactly 3 scans (6 formatted mentions)."""
+    3 tables -> exactly 3 scans."""
     from collimate_spark.operators.tpch_ext import q21_waiting_suppliers
 
-    plan = _formatted(q21_waiting_suppliers(spark, sf_dir))
-    assert plan.count("Scan parquet") == 6, plan.count("Scan parquet")
+    assert plan_features(q21_waiting_suppliers(spark, sf_dir))["n_scans"] == 3
 
 
 def test_projection_prunes_payload_column(spark, sf_dir):
     """Multimodal pattern: metadata-only queries must not read the payload
     bytes — selecting two scalar columns prunes `text` from ReadSchema."""
     docs = load_table(spark, "documents", sf_dir)
-    plan = _formatted(docs.select("doc_id", "lang").filter(F.col("lang") == "en"))
+    plan = formatted_plan(docs.select("doc_id", "lang").filter(F.col("lang") == "en"))
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "text" not in read_schema
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan
@@ -180,7 +167,7 @@ def test_timeseries_windows_share_one_exchange(spark, sf_dir):
     from collimate_spark.operators.timeseries import anomaly_zscore, rolling_median_value
 
     for q in (rolling_median_value, anomaly_zscore):
-        plan = _plan(q(spark, sf_dir))
+        plan = executed_plan(q(spark, sf_dir))
         assert plan.count("Exchange hashpartitioning(user_id") == 1, q.__name__
 
 
@@ -189,7 +176,7 @@ def test_skyline_reduces_before_dominance_join(spark, sf_dir):
     metric table (broadcast NLJ), never on the fact table."""
     from collimate_spark.operators.dataeng import skyline_suppliers
 
-    plan = _plan(skyline_suppliers(spark, sf_dir))
+    plan = executed_plan(skyline_suppliers(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan and "LeftAnti" in plan
     # the join's streamed child is the reduced metric table (an aggregate
     # or its cached form), never the raw lineitem FileScan
@@ -200,7 +187,7 @@ def test_skyline_reduces_before_dominance_join(spark, sf_dir):
 def test_winsorize_broadcasts_bounds(spark, sf_dir):
     from collimate_spark.operators.dataeng import winsorize_stats
 
-    plan = _plan(winsorize_stats(spark, sf_dir))
+    plan = executed_plan(winsorize_stats(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan  # 1-row bounds crossJoin
 
 
@@ -262,7 +249,7 @@ def test_weighted_sample_is_take_ordered(spark, sf_dir):
     local top-k + driver merge), never a global sort."""
     from collimate_spark.operators.curation import weighted_sample_documents
 
-    plan = _plan(weighted_sample_documents(spark, sf_dir))
+    plan = executed_plan(weighted_sample_documents(spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan
 
@@ -270,9 +257,9 @@ def test_weighted_sample_is_take_ordered(spark, sf_dir):
 def test_copurchase_edges_broadcast_part_dims(spark, sf_dir):
     from collimate_spark.operators.graph import _copurchase_edges
 
-    plan = _plan(_copurchase_edges(spark, sf_dir))
+    ops = plan_features(_copurchase_edges(spark, sf_dir))["ops"]
     # both part-dim joins broadcast; the self-join co-partitions on order key
-    assert plan.count("BroadcastHashJoin") >= 2
+    assert ops["BroadcastHashJoin"] >= 2
 
 
 def test_aqe_coalesces_shuffle_partitions(spark, sf_dir):
@@ -286,7 +273,7 @@ def test_aqe_coalesces_shuffle_partitions(spark, sf_dir):
         .count()
     )
     df.collect()
-    plan = _plan(df)
+    plan = executed_plan(df)
     assert "isFinalPlan=true" in plan
     assert "AQEShuffleRead coalesced" in plan
     # dedup_simhash's residual hot-bucket bound (a large exact-dup
@@ -303,7 +290,7 @@ def test_heavy_hitters_broadcasts_candidates(spark, sf_dir):
     shuffle the full exploded token stream at 100 TB."""
     from collimate_spark.operators.stats import heavy_hitters_words
 
-    plan = _plan(heavy_hitters_words(spark, sf_dir))
+    plan = executed_plan(heavy_hitters_words(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
 
 
@@ -314,22 +301,18 @@ def test_rfm_single_fact_scan_and_broadcast_max(spark, sf_dir):
     un-partitioned window over fact rows, never a second fact scan."""
     from collimate_spark.operators.stats import rfm_segmentation
 
-    df = rfm_segmentation(spark, sf_dir)
-    plan = _plan(df)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    # the global max must read the cache, not parquet: exactly one
-    # DISTINCT scan node id in the formatted plan (cache re-prints keep
-    # the same node id; a real second scan would get its own)
-    ids = set(re.findall(r"\((\d+)\) Scan parquet", _formatted(df)))
-    assert len(ids) == 1, ids
-    assert "InMemoryTableScan" in plan
+    f = plan_features(rfm_segmentation(spark, sf_dir))
+    assert f["n_broadcasts"] >= 1 or f["has_bnl_join"]
+    # the global max must read the cache, not parquet
+    assert f["n_scans"] == 1, f["n_scans"]
+    assert f["ops"]["InMemoryTableScan"] >= 1
 
 
 def test_chunk_documents_no_shuffle(spark, sf_dir):
     """Chunking is row-local: scan -> generate -> project, zero Exchange."""
     from collimate_spark.operators.curation import chunk_documents
 
-    plan = _plan(chunk_documents(spark, sf_dir).drop("chunk_idx"))
+    plan = executed_plan(chunk_documents(spark, sf_dir).drop("chunk_idx"))
     # the orderBy is presentation-only; strip it the same way the noop
     # sink would and assert the transform itself has no exchange
     from collimate_spark.catalog import load_table
@@ -342,7 +325,7 @@ def test_chunk_documents_no_shuffle(spark, sf_dir):
     toks = X.tokens(FF.col("text"))
     starts = FF.sequence(FF.lit(0), FF.greatest(FF.size(toks) - 1, FF.lit(0)), FF.lit(CHUNK_STRIDE))
     core = docs.select("doc_id", toks.alias("toks"), FF.posexplode(starts).alias("chunk_idx", "start"))
-    assert "Exchange" not in _plan(core)
+    assert "Exchange" not in executed_plan(core)
 
 
 def test_domain_mix_broadcasts_rates(spark, sf_dir):
@@ -350,7 +333,7 @@ def test_domain_mix_broadcasts_rates(spark, sf_dir):
     corpus scan; the corpus itself is never shuffled before the final agg."""
     from collimate_spark.operators.curation import domain_mix_temperature
 
-    plan = _plan(domain_mix_temperature(spark, sf_dir))
+    plan = executed_plan(domain_mix_temperature(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
 
 
@@ -359,7 +342,7 @@ def test_cusum_windows_share_one_exchange(spark, sf_dir):
     by user_id — Catalyst must reuse ONE hashpartitioning exchange."""
     from collimate_spark.operators.stats import cusum_changepoints
 
-    plan = _plan(cusum_changepoints(spark, sf_dir))
+    plan = executed_plan(cusum_changepoints(spark, sf_dir))
     n_user_exchanges = sum(
         1 for line in plan.splitlines()
         if "Exchange hashpartitioning" in line and "user_id" in line
@@ -375,7 +358,7 @@ def test_inverted_index_collapses_postings_map_side(spark, sf_dir):
     count/sum (no two-phase countDistinct partial over posting rows)."""
     from collimate_spark.operators.textstats import inverted_index_postings
 
-    plan = _plan(inverted_index_postings(spark, sf_dir))
+    plan = executed_plan(inverted_index_postings(spark, sf_dir))
     header = plan.split("\n\n")[0].splitlines()
     # the tree header prints root first, leaves last: the bottom-most
     # Exchange is the FIRST executed, and the map-side partial aggregate
@@ -395,7 +378,7 @@ def test_pit_join_single_user_exchange(spark, sf_dir):
     cartesian) — that is the whole point of the rewrite."""
     from collimate_spark.operators.dataeng import pit_join_scd2
 
-    plan = _plan(pit_join_scd2(spark, sf_dir))
+    plan = executed_plan(pit_join_scd2(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
@@ -406,7 +389,7 @@ def test_set_overlap_broadcasts_frequency_table(spark, sf_dir):
     to join 31 rows)."""
     from collimate_spark.operators.dedup import set_overlap_join_prefix
 
-    plan = _plan(set_overlap_join_prefix(spark, sf_dir))
+    plan = executed_plan(set_overlap_join_prefix(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
 
 
@@ -415,16 +398,16 @@ def test_price_histogram_broadcasts_bounds(spark, sf_dir):
     20-row aggregation shuffles."""
     from collimate_spark.operators.stats import price_histogram
 
-    plan = _plan(price_histogram(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert plan.count("FileScan") == 2  # bounds agg + bucketing pass
+    f = plan_features(price_histogram(spark, sf_dir))
+    assert f["n_broadcasts"] >= 1 or f["has_bnl_join"]
+    assert f["n_scans"] == 2  # bounds agg + bucketing pass
 
 
 def test_plan_features_helper(spark, sf_dir):
-    """plans.plan_features distills the counts the other tests grep for;
+    """plans.plan_features distills the counts the other tests read;
     sanity-check it against a known query shape (q1: one scan, one agg
     shuffle, pushed shipdate filter, codegen spans present)."""
-    from collimate_spark.plans import assert_scalable, plan_features
+    from collimate_spark.plans import assert_scalable
 
     f = plan_features(q1_pricing_summary(spark, sf_dir))
     assert f["n_scans"] == 1
@@ -463,10 +446,9 @@ def test_cached_frame_reuses_inmemory_scan(spark, sf_dir):
     try:
         li.count()  # materialize
         agg = li.groupBy("l_returnflag").count()
-        plan = _plan(agg)
-        assert "InMemoryTableScan" in plan
+        assert plan_features(agg)["ops"]["InMemoryTableScan"] == 1
         # parquet scan happens once (inside the cached relation), not per query
-        assert _plan(li.select("l_partkey")).count("FileScan") <= 1
+        assert plan_features(li.select("l_partkey"))["n_scans"] <= 1
     finally:
         li.unpersist()
 
@@ -504,7 +486,6 @@ def test_no_cartesian_products_anywhere(spark, sf_dir):
     allowing BNL but never Cartesian; the per-operator tests pin the
     stricter shapes."""
     import __spark_entry__ as entrymod
-    from collimate_spark.plans import plan_features
 
     offenders = []
     for name, fn in entrymod.queries().items():
@@ -522,8 +503,7 @@ def test_dynamic_session_single_user_exchange(spark, sf_dir):
     session operator sorts within the same shuffle, no second scan."""
     from collimate_spark.operators.events import session_window_dynamic_gap
 
-    plan = _plan(session_window_dynamic_gap(spark, sf_dir))
-    assert plan.count("FileScan") == 1
+    assert plan_features(session_window_dynamic_gap(spark, sf_dir))["n_scans"] == 1
 
 
 def test_bitmap_distinct_two_level_agg(spark, sf_dir):
@@ -532,9 +512,9 @@ def test_bitmap_distinct_two_level_agg(spark, sf_dir):
     COUNT(DISTINCT) rewrites, which add an Expand node per distinct)."""
     from collimate_spark.operators.udx import bitmap_distinct_counts
 
-    plan = _plan(bitmap_distinct_counts(spark, sf_dir))
-    assert plan.count("FileScan") == 1
-    assert "Expand" not in plan
+    f = plan_features(bitmap_distinct_counts(spark, sf_dir))
+    assert f["n_scans"] == 1
+    assert "Expand" not in f["ops"]
 
 
 def test_conversion_quantiles_no_self_join(spark, sf_dir):
@@ -542,9 +522,9 @@ def test_conversion_quantiles_no_self_join(spark, sf_dir):
     self-join: exactly one scan of the fact table."""
     from collimate_spark.operators.events import conversion_time_quantiles
 
-    plan = _plan(conversion_time_quantiles(spark, sf_dir))
-    assert plan.count("FileScan") == 1
-    assert "Join" not in plan
+    f = plan_features(conversion_time_quantiles(spark, sf_dir))
+    assert f["n_scans"] == 1
+    assert not any("Join" in op for op in f["ops"])
 
 
 def test_bootstrap_single_scan_no_explode(spark, sf_dir):
@@ -554,9 +534,9 @@ def test_bootstrap_single_scan_no_explode(spark, sf_dir):
     over the already-aggregated grid."""
     from collimate_spark.operators.stats import bootstrap_mean_ci
 
-    plan = _plan(bootstrap_mean_ci(spark, sf_dir))
-    assert plan.count("FileScan") == 1
-    assert "Join" not in plan
+    f = plan_features(bootstrap_mean_ci(spark, sf_dir))
+    assert f["n_scans"] == 1
+    assert not any("Join" in op for op in f["ops"])
 
 
 def test_pipeline_funnel_single_scan(spark, sf_dir):
@@ -565,8 +545,7 @@ def test_pipeline_funnel_single_scan(spark, sf_dir):
     only shuffle, the funnel is one aggregate."""
     from collimate_spark.operators.curation import corpus_pipeline_funnel
 
-    plan = _plan(corpus_pipeline_funnel(spark, sf_dir))
-    assert plan.count("FileScan") == 1
+    assert plan_features(corpus_pipeline_funnel(spark, sf_dir))["n_scans"] == 1
 
 
 def test_join_skew_diagnostics_never_materializes_join(spark, sf_dir):
@@ -574,7 +553,6 @@ def test_join_skew_diagnostics_never_materializes_join(spark, sf_dir):
     sized), never on the fact rows: two scans (one per side), and the
     only joins sit above aggregates."""
     from collimate_spark.operators.joins import join_skew_diagnostics
-    from collimate_spark.plans import plan_features
 
     f = plan_features(join_skew_diagnostics(spark, sf_dir))
     assert f["n_scans"] == 2
@@ -586,9 +564,9 @@ def test_bpe_pairs_single_scan_tiny_shuffle(spark, sf_dir):
     groupBy — the two Generates (words, pairs) are row-local."""
     from collimate_spark.operators.textstats import bpe_merge_candidates
 
-    plan = _plan(bpe_merge_candidates(spark, sf_dir))
-    assert plan.count("FileScan") == 1
-    assert "Join" not in plan
+    f = plan_features(bpe_merge_candidates(spark, sf_dir))
+    assert f["n_scans"] == 1
+    assert not any("Join" in op for op in f["ops"])
 
 
 SCAN_CEILINGS = {
@@ -598,14 +576,10 @@ SCAN_CEILINGS = {
     "dedup_ngram_jaccard": 1,
     "set_overlap_join_prefix": 1,
     "degree_assortativity": 4,
-    "kaplan_meier_retention": 2,
-    # 3 is MAD's floor (median, residual median, fence count) — the old
-    # ceiling of 2 was an artifact of plan_features' global line dedup
-    # collapsing the two genuinely-executing dev branches; the honest
-    # cached-subtree-only dedup counts all three
+    "kaplan_meier_retention": 1,  # events once; corpus max from the cache
     "mad_outliers": 3,
     "chi2_event_value": 1,
-    "heavy_hitters_words": 3,
+    "heavy_hitters_words": 2,  # MG sketch pass + exact-verify pass
     "gdpr_erasure_audit": 6,
     "domain_mix_temperature": 2,
     "tfidf_top_terms": 2,
@@ -620,24 +594,32 @@ SCAN_CEILINGS = {
     # (aliased token frame feeds windows and the n_tokens join-back)
     "semdedup_prune": 1,
     "dup_span_coverage": 1,
+    # dimension-sized intermediates referenced twice, scanned once per pass
+    "q15_top_supplier": 2,  # lineitem once + supplier
+    "quantile_sketch_value": 2,  # sketch pass + exact-audit pass
 }
 
 
-@pytest.mark.parametrize("name", sorted(SCAN_CEILINGS))
-def test_scan_ceiling_holds(spark, sf_dir, name):
-    """Unique-FileScan ceilings for the operators whose fact re-scans were
+@pytest.mark.parametrize(
+    "name,executed",
+    [pytest.param(n, False, id=n) for n in sorted(SCAN_CEILINGS)]
+    + [pytest.param(n, True, id=f"{n}-executed") for n in sorted(SCAN_CEILINGS)],
+)
+def test_scan_ceiling_holds(spark, sf_dir, name, executed):
+    """File-scan ceilings for the operators whose fact re-scans were
     eliminated by caching tiny multiply-referenced frames or folding
-    passes; plan_features dedupes cached-build re-prints, so the count is
-    runtime-true."""
+    passes — on the built plan, and again after a noop write has run it
+    (its cached builds then hold their final adaptive plans)."""
     import __spark_entry__ as entrymod
 
-    # cached plans from earlier tests change which subtrees print as
-    # InMemoryRelation — clear for a deterministic count
+    # a cache left by an earlier test turns a build subtree into an
+    # InMemoryTableScan — clear for a deterministic count
     spark.catalog.clearCache()
-    f = plan_features(entrymod.queries()[name](spark, sf_dir))
-    assert f["n_scans"] <= SCAN_CEILINGS[name], (
-        f"{name}: {f['n_scans']} scans > ceiling {SCAN_CEILINGS[name]}"
-    )
+    df = entrymod.queries()[name](spark, sf_dir)
+    if executed:
+        df.write.format("noop").mode("overwrite").save()
+    n = plan_features(df)["n_scans"]
+    assert n <= SCAN_CEILINGS[name], f"{name}: {n} scans > ceiling {SCAN_CEILINGS[name]}"
 
 
 def test_kcore_matches_python_peeling(spark, sf_dir):
@@ -930,60 +912,44 @@ def test_size_gated_broadcast_fallback_identical(spark, sf_dir, name):
                 assert g == w, name
 
 
-def test_runtime_lines_counting_rules():
-    """Pin _runtime_lines' three rules on a synthetic toString plan:
-    (1) lines under an InMemoryTableScan dedupe on content across ALL
-    re-prints of the same cache build; (2) identical sibling subtrees
-    OUTSIDE a cache count per occurrence (they really execute twice);
-    (3) '== Initial Plan ==' sections drop wholesale, while the final
-    plan's lines at the same gutter depth survive.
+def test_plan_features_counts_nodes_that_run(spark, sf_dir):
+    """plan_features counts each node that executes, once: an uncached
+    subtree read by two branches runs twice; a cached one is built once
+    however many branches read it; an executed adaptive plan contributes
+    its final plan only, never a node its initial plan replaced."""
+    from collimate_spark.operators.textstats import lm_perplexity_score
 
-    Also pins the DOCUMENTED undercount caveat (plans.py docstring): a
-    DIFFERENT cache ([z]) whose build shares line text with [x]'s build
-    dedupes against it — cache identity is not text-recoverable (header
-    expr-ids re-alias per reference; nested-AQE sections reset gutter
-    depth), so counts are a lower bound on cache-build work."""
-    from collimate_spark.plans import _runtime_lines
+    x = load_table(spark, "nation", sf_dir)
+    assert plan_features(x.unionByName(x))["n_scans"] == 2
+    cached = x.filter(F.col("n_regionkey") > 0).cache()
+    try:
+        f = plan_features(cached.unionByName(cached))
+        assert f["n_scans"] == 1 and f["ops"]["InMemoryTableScan"] == 2
+    finally:
+        cached.unpersist()
 
-    plan = "\n".join([
-        "AdaptiveSparkPlan isFinalPlan=false",
-        "+- Union",
-        "   :- HashAggregate A",
-        "   :  +- FileScan parquet [shared]",          # uncached branch 1
-        "   :- HashAggregate B",
-        "   :  +- FileScan parquet [shared]",          # identical, executes again
-        "   :- Filter f",
-        "   :  +- InMemoryTableScan [x]",
-        "   :        +- InMemoryRelation [x]",
-        "   :              +- FileScan parquet [cached]",   # build print 1
-        "   :- Project p",
-        "   :  +- InMemoryTableScan [x]",
-        "   :        +- InMemoryRelation [x]",
-        "   :              +- FileScan parquet [cached]",   # re-print, same cache
-        "   :              +- AdaptiveSparkPlan isFinalPlan=true",
-        "   :                 +- == Final Plan ==",
-        "   :                    ResultQueryStage 1",
-        "   :                    +- FileScan parquet [final]",
-        "   :                 +- == Initial Plan ==",
-        "   :                    Exchange never-ran",
-        "   :                    +- FileScan parquet [initial-only]",
-        "   +- Sort s",
-        "      +- InMemoryTableScan [z]",                   # DIFFERENT cache...
-        "            +- InMemoryRelation [z]",
-        "                  +- FileScan parquet [cached]",   # ...same leaf text
-    ])
-    lines = _runtime_lines(plan)
-    scans = [l for l in lines if "FileScan" in l]
-    # two real uncached executions + one cached build + one final-plan scan
-    assert scans.count("FileScan parquet [shared]") == 2
-    # the documented caveat: [z]'s build scan dedupes against [x]'s —
-    # 2 would be the fully-honest count, 1 is the accepted lower bound
-    assert scans.count("FileScan parquet [cached]") == 1
-    assert scans.count("FileScan parquet [final]") == 1
-    assert not any("initial-only" in l for l in lines)
-    assert not any("never-ran" in l for l in lines)
-    # all three InMemoryTableScan references themselves count (cache reads)
-    assert sum(1 for l in lines if "InMemoryTableScan" in l) == 3
+    # no static broadcast: the initial plan sort-merge joins, and AQE
+    # turns it into a broadcast join once the aggregates have run
+    li = load_table(spark, "lineitem", sf_dir).groupBy("l_orderkey").count()
+    orders = load_table(spark, "orders", sf_dir).filter(F.col("o_orderkey") < 100)
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "10MB")
+    try:
+        joined = li.join(orders, li.l_orderkey == orders.o_orderkey)
+        assert "SortMergeJoin" in plan_features(joined)["ops"]
+        joined.collect()
+        assert "SortMergeJoin" in executed_plan(joined)  # the Initial Plan section
+        ops = plan_features(joined)["ops"]
+        assert "SortMergeJoin" not in ops and ops["BroadcastHashJoin"] == 1
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
+
+    # the scoring pass scans documents; both n-gram count caches share
+    # one more scan
+    spark.catalog.clearCache()
+    assert plan_features(lm_perplexity_score(spark, sf_dir))["n_scans"] == 2
 
 
 def test_window_range_frame_uses_incremental_frames(spark, sf_dir):
@@ -993,11 +959,9 @@ def test_window_range_frame_uses_incremental_frames(spark, sf_dir):
     [-5000, 5000] RangeFrame re-aggregates the whole frame per row —
     O(rows x frame_size), the 14.1s -> 1.1s round-7 find — so its
     reappearance is a quadratic-at-scale regression."""
-    import re
-
     from collimate_spark.operators.windows import window_range_frame
 
-    plan = window_range_frame(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(window_range_frame(spark, sf_dir))
     frames = re.findall(r"specifiedwindowframe\(RangeFrame, ([a-z$()]+)", plan)
     assert frames, "no RangeFrame found — operator shape changed?"
     assert all(f.startswith("unboundedpreceding") for f in frames), frames
@@ -1135,33 +1099,8 @@ def test_size_gate_floor_calibrated_for_measured_layout(
         )
 
 
-# ---------------------------------------------------------------------------
 # r13 structural pins: kernels and dimension-sized aggregates must execute
-# once per query, not once per reference (cache re-prints keep their node
-# id in the formatted plan; a real duplicate subtree gets its own).
-#
-# VERSION PIN (ADVICE r13): these regexes rely on EXPLAIN FORMATTED
-# re-printing a cached/shared subtree under its ORIGINAL node id — true on
-# Spark 4.1 (calibrated here) and 3.5, but an undocumented formatting
-# artifact. If a Spark upgrade ever assigns fresh ids to re-printed
-# subtrees, every count below inflates and these pins fail LOUDLY (never
-# silently weaken). The companion InMemoryTableScan >= 2 assertions below
-# check the cache is actually read from both references, independent of
-# the id-reuse behavior.
-
-
-def _distinct_scan_nodes(df) -> set:
-    return set(re.findall(r"\((\d+)\) Scan parquet", _formatted(df)))
-
-
-def _distinct_kernel_nodes(df) -> set:
-    return set(re.findall(r"\((\d+)\) MapInPandas", _formatted(df)))
-
-
-def _imts_mentions(df) -> int:
-    """InMemoryTableScan mentions in the TREE section — one per cache
-    reference, so >= 2 proves both references read the cache."""
-    return _plan(df).count("InMemoryTableScan")
+# once per query, not once per reference.
 
 
 def test_multimodal_pair_kernels_run_once(spark, sf_dir):
@@ -1173,33 +1112,11 @@ def test_multimodal_pair_kernels_run_once(spark, sf_dir):
     )
 
     for fn in (multimodal_image_dhash_pairs, multimodal_audio_fingerprint_pairs):
-        df = fn(spark, sf_dir)
+        ops = plan_features(fn(spark, sf_dir))["ops"]
         # exactly one synth + one hash kernel node; both join sides read
-        # the InMemoryRelation (>= 2 cache reads, ADVICE r13)
-        assert len(_distinct_kernel_nodes(df)) == 2, fn.__name__
-        assert _imts_mentions(df) >= 2, fn.__name__
-
-
-def test_single_fact_scan_via_cached_aggregate(spark, sf_dir):
-    """Queries whose dimension-sized intermediate is referenced twice must
-    scan their fact table once per pass, not once per reference."""
-    from collimate_spark.operators.stats import (
-        heavy_hitters_words,
-        kaplan_meier_retention,
-        quantile_sketch_value,
-    )
-    from collimate_spark.operators.tpch_ext import q15_top_supplier
-
-    # (query, max distinct parquet scan nodes)
-    specs = [
-        (q15_top_supplier, 2),  # lineitem once + supplier
-        (kaplan_meier_retention, 1),  # events once; corpus max from cache
-        (quantile_sketch_value, 2),  # sketch pass once + exact-audit pass
-        (heavy_hitters_words, 2),  # MG sketch pass + exact-verify pass
-    ]
-    for fn, max_scans in specs:
-        got = len(_distinct_scan_nodes(fn(spark, sf_dir)))
-        assert got <= max_scans, f"{fn.__name__}: {got} > {max_scans}"
+        # the InMemoryRelation (>= 2 cache reads)
+        assert ops["MapInPandas"] == 2, fn.__name__
+        assert ops["InMemoryTableScan"] >= 2, fn.__name__
 
 
 def test_pit_join_scd2_single_scan_no_aggregate(spark, sf_dir):
@@ -1211,8 +1128,7 @@ def test_pit_join_scd2_single_scan_no_aggregate(spark, sf_dir):
     final orderBy's range exchange)."""
     from collimate_spark.operators.dataeng import pit_join_scd2
 
-    df = pit_join_scd2(spark, sf_dir)
-    plan = _formatted(df)
-    assert len(_distinct_scan_nodes(df)) == 1
-    assert "HashAggregate" not in plan
-    assert len(set(re.findall(r"\((\d+)\) Exchange", plan))) == 2
+    f = plan_features(pit_join_scd2(spark, sf_dir))
+    assert f["n_scans"] == 1
+    assert "HashAggregate" not in f["ops"]
+    assert f["ops"]["Exchange"] == 2

@@ -48,3 +48,17 @@ def test_superlinear_flag_uses_step_factor():
 def test_d5_slice_chain_carries_step_copies():
     src, salt, copies = (scale_sweep.SLICE_CHAIN["/tmp/sf4000m"] + (10,))[:3]
     assert src == "/tmp/sf1000m" and copies == scale_sweep.D5_STEP
+
+
+def test_baseline_holds_each_sweep_marker_pair_once():
+    """``--update-baseline`` rewrites BASELINE.md between each begin/end
+    marker pair: every pair must appear exactly once, begin before end."""
+    with open(os.path.join(scale_sweep.REPO, "BASELINE.md")) as fh:
+        text = fh.read()
+    begins = [n for n in vars(scale_sweep) if n.endswith("MARK_BEGIN")]
+    assert begins
+    for begin in begins:
+        mb = getattr(scale_sweep, begin)
+        me = getattr(scale_sweep, begin.replace("BEGIN", "END"))
+        assert text.count(mb) == 1 and text.count(me) == 1, (mb, me)
+        assert text.index(mb) < text.index(me), mb

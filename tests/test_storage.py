@@ -8,6 +8,7 @@ import os
 import pyspark.sql.functions as F
 
 from collimate_spark.catalog import load_table
+from collimate_spark.plans import executed_plan, formatted_plan
 from collimate_spark.sources.storage import (
     read_bucketed,
     write_bucketed,
@@ -17,7 +18,7 @@ from collimate_spark.sources.storage import (
 
 def _final_plan(df) -> str:
     df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
+    return executed_plan(df)
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
@@ -51,8 +52,7 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
     path = str(tmp_path / "orders_part")
     write_partitioned(orders, path, ["order_year"])
     back = spark.read.parquet(path).filter(F.col("order_year") == 1995)
-    sc = back.sparkSession.sparkContext
-    plan = sc._jvm.PythonSQLUtils.explainString(back._jdf.queryExecution(), "formatted")
+    plan = formatted_plan(back)
     assert "PartitionFilters: [isnotnull(order_year" in plan
     got = back.count()
     expect = orders.filter(F.year("o_orderdate") == 1995).count()
@@ -119,8 +119,7 @@ def test_orc_roundtrip_pushes_filters(spark, sf_dir, tmp_path):
     back = read_format(spark, path, "orc").filter(F.col("o_orderkey") < 100).select(
         "o_orderkey", "o_totalprice"
     )
-    sc = spark.sparkContext
-    plan = sc._jvm.PythonSQLUtils.explainString(back._jdf.queryExecution(), "formatted")
+    plan = formatted_plan(back)
     # ORC scans must push the predicate and prune to the 2-column projection
     assert "PushedFilters: [IsNotNull(o_orderkey), LessThan(o_orderkey,100)]" in plan
     assert "ReadSchema: struct<o_orderkey:bigint,o_totalprice:double>" in plan
@@ -169,7 +168,7 @@ def test_dynamic_partition_pruning_on_dim_filter(spark, sf_dir, tmp_path):
     ).write.mode("overwrite").parquet(dim_path)
     dim = spark.read.parquet(dim_path).filter(F.col("tag") == "keep")
     joined = fact.join(dim, "order_year").groupBy("order_year").count()
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(joined)
     assert "dynamicpruningexpression" in plan or "dynamicpruning" in plan.lower()
     rows = joined.collect()
     assert len(rows) == 1 and rows[0]["order_year"] == 1995
@@ -238,7 +237,7 @@ def test_read_binary_dir_prunes_content(spark, tmp_path):
     rows = df.select("path", "length").orderBy("length").collect()
     assert [r.length for r in rows] == [100, 101, 102, 103, 104]
     meta_only = df.select("path", "length")
-    plan = meta_only._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(meta_only)
     assert "content" not in plan.lower().split("readschema")[-1][:200]
     full = df.select("content").collect()
     assert sorted(len(r.content) for r in full) == [100, 101, 102, 103, 104]
@@ -322,7 +321,7 @@ def test_cbo_statistics_enable_auto_broadcast(spark, sf_dir, tmp_path):
     spark.sql("ANALYZE TABLE t_nation_stats COMPUTE STATISTICS")
     li = spark.read.parquet(f"{sf_dir}/supplier.parquet")
     joined = li.join(spark.table("t_nation_stats"), li.s_nationkey == F.col("n_nationkey"))
-    plan = joined._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(joined)
     assert "BroadcastHashJoin" in plan, plan[:500]
     stats = spark.sql("DESCRIBE EXTENDED t_nation_stats").collect()
     assert any("Statistics" in str(r) for r in stats)

@@ -12,6 +12,7 @@ import pyspark.sql.types as T
 import pytest
 from pyspark.sql.window import Window
 
+from collimate_spark.plans import executed_plan
 from collimate_spark.streaming.pipeline import (
     deduped_stream,
     sessionized,
@@ -614,7 +615,7 @@ def test_ivf_index_stream_assigns_and_prunes(spark, tmp_path):
     pruned = spark.read.option("basePath", index_dir).parquet(index_dir).filter(
         F.col("cell") == one_cell
     )
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(pruned)
     assert "PartitionFilters: [isnotnull(cell" in plan or "cell#" in plan
     assert pruned.count() == sum(1 for r in rows if r.cell == one_cell)
 
