@@ -5,10 +5,10 @@
 
 PY ?= python3
 
-.PHONY: test pre-driver mirror-sf001 mirror-sf01 mirror-scale-mode bench bench-wide calibrate plans perfbench perfbench-test
+.PHONY: test pre-driver mirror-sf001 mirror-sf01 mirror-scale-mode bench bench-wide calibrate plans perfbench perfbench-test scale-sweep
 
-# The tier-1 suite exactly as ROADMAP.md states it: one Spark core per host
-# core (the session default is local[32]) and no early exit.
+# The tier-1 suite exactly as ROADMAP.md states it: one Spark core per
+# schedulable host core and no early exit.
 test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 	  timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
@@ -63,25 +63,3 @@ perfbench-test:
 scale-sweep:
 	$(PY) scripts/scale_sweep.py --update-baseline
 	$(PY) scripts/scale_sweep.py --surface --update-baseline
-
-# Third-decade follow-up (VERDICT r9 #4): the heavies without a
-# post-partition-fix 1000x number — ingest (first-ever 600M-row CSV
-# cell, size-gated .gz export), asof post-grain-gate, curate_corpus,
-# bm25_search, block_dedup_stats — at /tmp/sf10m -> /tmp/sf100m.
-# Rewrites the decade3-sweep marker section of BASELINE.md.
-scale-sweep-d3:
-	SPARK_GRAFT_DRIVER_MEM=48g $(PY) scripts/scale_sweep.py --decade 3 --update-baseline
-
-# Fourth-decade single-op probes (VERDICT r10 #5): cheap document shapes
-# at 50M docs (documents-only slice — the full table set doesn't fit the
-# box) plus pagerank on its first 10x edge-graph step (lineitem 60M ->
-# 600M rows). Rewrites the decade4-sweep marker section of BASELINE.md.
-scale-sweep-d4:
-	SPARK_GRAFT_DRIVER_MEM=48g $(PY) scripts/scale_sweep.py --decade 4 --update-baseline
-
-# Fifth-decade probes (VERDICT r11 #6): the two flattest decade-4 ops
-# (dedup_exact 6.3x, set_overlap 1.1x) one step further — disk-bounded
-# to a 4x step (200M docs; 500M would not fit the box). Rewrites the
-# decade5-sweep marker section of BASELINE.md.
-scale-sweep-d5:
-	SPARK_GRAFT_DRIVER_MEM=48g $(PY) scripts/scale_sweep.py --decade 5 --update-baseline

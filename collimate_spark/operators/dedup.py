@@ -1167,36 +1167,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rk, sz) travel PACKED into one long through the candidate join
     (UnsafeRow shuffle cost is per FIELD — 8 B each plus header — so
     4→3 fields cuts the billion-row postings shuffle ~25%), and
-    dst-side prunes unpack them with two codegen'd bitwise ops.
-    For boxes where even the slimmed single-pass spill exceeds the disk
-    quota, ``SPARK_GRAFT_CONTAINMENT_BATCHES=N`` (sweep knob, default 1
-    = today's single lazy plan) processes the candidate join in N
-    SHINGLE-salted sub-batches — each batch joins 1/N of the prefix
-    side against 1/N of the postings side (the join key partitions both
-    sides, so no shuffle input repeats across batches and total join
-    work stays ≈ the single pass; src-salting would re-shuffle the full
-    postings side per batch). Shingle-salting is strictly less work
-    than src-salting (r10 measured the two within 1% at N=3). r11
-    staged-probe attribution at the 5M-doc cell (260.6M postings,
-    45.8M vocab): shingle cache + freq count ≈ 56 s, per-doc index
-    build ≈ 52 s — the index is NOT the wall (r10's rank-window-spill
-    hypothesis did not survive the probe; old and new index builds
-    measure within 6% there); ~85% of the cell is the candidate join +
-    distinct + verify shuffles (candidate multiset measured linear at
-    12.3× per 10× docs), which divide per-node on a cluster — eagerly
-    materializing each
-    batch's verified pairs (output-sized, KBs–MBs) and System.gc()-ing
-    between batches so the ContextCleaner releases the previous batch's
-    shuffle files. Peak scratch drops to the shared cache + 1/N of the
-    candidate/verify stages. A pair sharing shingles in k batches is
-    emitted (and re-verified, with the identical exact containment) up
-    to k times, so the read-back applies one OUTPUT-SIZED distinct —
-    the result is provably the same pair set as the single pass."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    dst-side prunes unpack them with two codegen'd bitwise ops."""
     from collimate_spark.operators.graph import _broadcast_threshold_bytes
 
     shingled = _shingle_sets(spark, sf_dir).transform(scache)
@@ -1254,63 +1225,25 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     rk_b = F.shiftright(F.col("meta_b"), 32)
     sz_b = F.col("meta_b").bitwiseAND(F.lit(0xFFFFFFFF))
 
-    def candidate_pairs(prefix_side: DataFrame, postings_side: DataFrame) -> DataFrame:
-        return (
-            prefix_side.join(postings_side, "shingle")
-            .filter(F.col("src") != F.col("dst"))
-            .filter(sz_b >= F.col("mo"))
-            .filter(rk_b <= sz_b - F.col("mo") + 1)
-            .select("src", "dst")
-            .distinct()
-        )
-
+    candidates = (
+        src_prefix.join(dst_postings, "shingle")
+        .filter(F.col("src") != F.col("dst"))
+        .filter(sz_b >= F.col("mo"))
+        .filter(rk_b <= sz_b - F.col("mo") + 1)
+        .select("src", "dst")
+        .distinct()
+    )
     a = shingled.select(F.col("doc_id").alias("src"), F.col("shingles").alias("sh_a"))
     b = shingled.select(F.col("doc_id").alias("dst"), F.col("shingles").alias("sh_b"))
     contain = F.size(F.array_intersect("sh_a", "sh_b")) / F.size("sh_a")
-
-    def verified(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.join(a, "src")
-            .join(b, "dst")
-            .withColumn("c_raw", contain)
-            .filter(F.col("c_raw") >= CONTAINMENT_THRESHOLD)
-            .select("src", "dst", F.round("c_raw", 4).alias("containment"))
-        )
-
-    n_batches = int(os.environ.get("SPARK_GRAFT_CONTAINMENT_BATCHES", "1"))
-    if n_batches > 1:
-        # Scratch dir keyed by (pid, sf_dir, n_batches) and cleared up
-        # front (ADVICE r10): a long-lived process (pytest, bench,
-        # notebook) that calls this twice with a different dataset or a
-        # smaller batch count must not read back stale b=i partitions —
-        # mode('overwrite') only replaces the subdirs the new run
-        # writes. NOTE the returned DataFrame reads this dir LAZILY:
-        # callers must not delete it until the result is materialized,
-        # which is also why there is no eager cleanup after read-back.
-        key = hashlib.md5(
-            f"{os.path.abspath(sf_dir)}|{n_batches}".encode()
-        ).hexdigest()[:12]
-        out_dir = os.path.join(
-            tempfile.gettempdir(), f"collimate_containment_{os.getpid()}_{key}"
-        )
-        shutil.rmtree(out_dir, ignore_errors=True)
-        for i in range(n_batches):
-            sl = F.pmod(F.col("shingle"), F.lit(n_batches)) == i
-            batch = verified(
-                candidate_pairs(src_prefix.filter(sl), dst_postings.filter(sl))
-            )
-            batch.write.mode("overwrite").parquet(os.path.join(out_dir, f"b={i}"))
-            # let the ContextCleaner drop this batch's shuffle files
-            # before the next batch starts (the scale_sweep lesson:
-            # shuffle scratch only frees when the JVM GCs the RDD refs)
-            spark.sparkContext._jvm.System.gc()
-        return (
-            spark.read.parquet(out_dir)
-            .select("src", "dst", "containment")
-            .distinct()  # a pair can verify in several shingle batches
-            .orderBy("src", "dst")
-        )
-    return verified(candidate_pairs(src_prefix, dst_postings)).orderBy("src", "dst")
+    return (
+        candidates.join(a, "src")
+        .join(b, "dst")
+        .withColumn("c_raw", contain)
+        .filter(F.col("c_raw") >= CONTAINMENT_THRESHOLD)
+        .select("src", "dst", F.round("c_raw", 4).alias("containment"))
+        .orderBy("src", "dst")
+    )
 
 
 CONTAINMENT_SQL = f"""

@@ -1,14 +1,15 @@
 """SparkSession factory with scale-aware defaults.
 
 Single place where engine-wide Spark conf is decided so tests, bench, and
-the driver entry point all run the same way. Defaults target local[N] for
-tests but every knob is the one you would set on a 1000-executor cluster:
-AQE (runtime coalescing + skew-join handling), Arrow for the few pandas-UDF
-paths, and shuffle partitions sized to cores locally (on a real cluster AQE
-coalesces from a high initial number).
+the driver entry point all run the same way. Sessions run local[N], N =
+``SPARK_GRAFT_CPUS`` or, when unset, the host's core count. Every knob is
+the one you would set on a cluster: AQE (runtime coalescing + skew-join
+handling), Arrow for the few pandas-UDF paths, and shuffle partitions
+sized to cores locally (on a real cluster AQE coalesces from a high
+initial number).
 
-Scale mode (``SPARK_GRAFT_SCALE_MODE=1``): two knobs that are mandatory at
-decade scale but MEASURED net-negative at bench scale, so they gate on the
+Scale mode (``SPARK_GRAFT_SCALE_MODE=1``): the cluster shuffle confs of
+DEPLOY.md, MEASURED net-negative at bench scale, so they gate on the
 workload instead of riding every session — the same measure-then-pick
 policy as the operator-level size gates:
 
@@ -26,8 +27,9 @@ policy as the operator-level size gates:
   network at cluster scale, but costs measurable CPU on small shuffles
   (doc_fingerprint 0.58->0.74s at sf0.1).
 
-scripts/scale_sweep.py sets the env for its cells; on a real cluster both
-belong in cluster conf unconditionally (shuffles there are never MB-sized).
+``make mirror-scale-mode`` runs the oracle mirror with the gate
+on; on a real cluster both belong in cluster conf unconditionally
+(shuffles there are never MB-sized).
 
 Stream checkpoints: ``get_session`` always runs ``local[N]``, so every
 checkpoint and state store sits on local disk, and they are written through
@@ -91,13 +93,8 @@ def session_confs(shuffle_partitions: int, scale_mode: bool) -> dict[str, str]:
     if scale_mode:
         # Size shuffles by DATA, not by a constant (see module docstring
         # for the measured decade-scale wins and bench-scale costs that
-        # put these behind the gate). SPARK_GRAFT_INITIAL_PARTITIONS
-        # exists for measured A/Bs of the width itself (VERDICT r11 #5:
-        # is the containment 5M-doc cell shuffle-width-bound?) — the
-        # default stays 1024, the value the decade sweeps validated.
-        confs["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = (
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "1024")
-        )
+        # put these behind the gate).
+        confs["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = "1024"
         confs["spark.io.compression.codec"] = "zstd"
         # Parquet OUTPUT codec (guide §6): 20% smaller files (8.6 vs
         # 10.8 MB for sf0.1 lineitem), which at cluster scale compounds
@@ -115,12 +112,13 @@ def session_confs(shuffle_partitions: int, scale_mode: bool) -> dict[str, str]:
 def get_session(app_name: str = "collimate_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract)
-    and ``SPARK_GRAFT_SCALE_MODE=1`` for the decade-scale shuffle knobs.
+    Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract;
+    the host's core count when unset) and ``SPARK_GRAFT_SCALE_MODE=1`` for
+    the cluster shuffle confs.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count()
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     for k, v in session_confs(shuffle_partitions, scale_mode_enabled()).items():
         builder = builder.config(k, v)

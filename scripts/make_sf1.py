@@ -10,7 +10,7 @@ tables are identical views of the sf0.1 parquet.
 
 Output: /tmp/sf1/{table}.parquet — NOT committed, regenerate on demand:
     python scripts/make_sf1.py [src_sf_dir] [out_dir]
-Chain for higher scales (SF_COPIES defaults to 10):
+Each level is 10 copies of its source; chain for the next decade:
     python scripts/make_sf1.py /tmp/sf1 /tmp/sf10   # 100x bench scale
 
 SF_MUTATE=1 (VERDICT r7 directive #2) perturbs every NON-base replica's
@@ -38,7 +38,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-COPIES = int(os.environ.get("SF_COPIES", "10"))
+COPIES = 10
 MUTATE = os.environ.get("SF_MUTATE", "") not in ("", "0")
 # Distinct salt per CHAINED invocation (SF_SALT=q, r, ...): composing two
 # mutation levels with the same salt is commutative — copy (j=1 then i=2)
@@ -46,12 +46,6 @@ MUTATE = os.environ.get("SF_MUTATE", "") not in ("", "0")
 # (~40% of a 100x slice, measured). A per-level salt letter breaks the
 # commutation, keeping chained slices linear-output too.
 SALT = os.environ.get("SF_SALT", "q")
-# SF_TABLES=documents,orders,events limits which fact tables the slice
-# replicates (third-decade slices don't need a 600M-row lineitem when no
-# swept op reads it). Omitted tables are ABSENT from the slice — an op
-# that needs one fails loudly instead of silently reading the wrong
-# scale.
-TABLES_LIMIT = [t for t in os.environ.get("SF_TABLES", "").split(",") if t]
 SCALED = {
     # table -> columns to shift by i * (max+1) per replica
     "lineitem": ["l_orderkey"],
@@ -99,9 +93,6 @@ def main() -> None:
         os.symlink(srcp, dst)
 
     for t, keys in SCALED.items():
-        if TABLES_LIMIT and t not in TABLES_LIMIT:
-            print(f"{t}: skipped (SF_TABLES)", file=sys.stderr)
-            continue
         df = spark.read.parquet(os.path.join(src, f"{t}.parquet"))
         strides = {
             k: r[0] + 1 for k, r in zip(keys, [df.agg(F.max(k)).first() for k in keys])
@@ -147,19 +138,12 @@ def main() -> None:
             un = un.unionByName(p)
         dst = os.path.join(out, f"{t}.parquet")
         # File-count control WITHOUT a full shuffle when the union is
-        # already wide: repartition(32) materializes the whole scaled
-        # table as shuffle blocks first (36 GB of blockmgr scratch for
-        # the 200M-doc fifth-decade slice — more free disk than the box
-        # has, on top of the 32 GB output). coalesce() just glues input
-        # partitions onto 32 write tasks, zero scratch. Narrow unions
-        # (the small bench slices, 8 input files) still need the
-        # shuffle to SPREAD to 32 files for scan parallelism.
-        # SPARK_GRAFT_CPUS caveat (ADVICE r12): coalesce(32) propagates
-        # UPSTREAM — the whole read+mutate+union pipeline runs at ≤32
-        # tasks. Correct output and fine on the default local[32], but
-        # on a wider box (SPARK_GRAFT_CPUS > 32) it silently serializes
-        # the mutation work; raise the constant with the box if slice
-        # builds mysteriously slow down there.
+        # already wide: coalesce() glues input partitions onto 32 write
+        # tasks with zero shuffle scratch, where repartition(32) would
+        # first materialize the whole scaled table as shuffle blocks.
+        # Narrow unions (the small bench slices, 8 input files) still
+        # need the shuffle to SPREAD to 32 files for scan parallelism.
+        # coalesce propagates upstream: a wide build runs at <= 32 tasks.
         nparts = un.rdd.getNumPartitions()
         un = un.coalesce(32) if nparts >= 32 else un.repartition(32)
         un.write.mode("overwrite").parquet(dst)

@@ -196,19 +196,6 @@ def test_connected_components_match_local_union_find(spark, sf_dir):
         assert got[doc][1] == (1 if doc == comp else 0)
 
 
-def test_containment_batched_mode_identical(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_CONTAINMENT_BATCHES (the quota-bound decade knob) must
-    be a pure scratch/latency trade: salted src batches partition the
-    pair space, so the unioned result is row-identical to the single-pass
-    plan."""
-    from collimate_spark.operators.dedup import dedup_containment
-
-    base = sorted(tuple(r) for r in dedup_containment(spark, sf_dir).collect())
-    monkeypatch.setenv("SPARK_GRAFT_CONTAINMENT_BATCHES", "3")
-    batched = sorted(tuple(r) for r in dedup_containment(spark, sf_dir).collect())
-    assert batched == base and len(base) > 0
-
-
 def test_hashed_gram_counting_matches_string_grams(spark):
     """r13: repetition_metrics and dup_span_coverage count distinct
     n-grams/windows via xxhash64 over once-hashed token tuples instead

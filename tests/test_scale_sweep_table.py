@@ -1,14 +1,13 @@
 """Pure-Python guards for the sweep harness's table rendering (ADVICE
 r11): a timed-out cell must render the timeout label and an em-dash for
 its missing rows count — never the literal Python ``None`` — and the
-superlinear flag must be judged against the sweep's actual step factor
-(the disk-bounded fifth-decade step is 4x, where 5x IS superlinear)."""
+superlinear flag must be judged against the sweep's step factor."""
 
 from __future__ import annotations
 
 import importlib.util
 import os
-import sys
+import re
 
 _SPEC = importlib.util.spec_from_file_location(
     "scale_sweep",
@@ -34,25 +33,35 @@ def test_timeout_row_renders_dash_not_none():
 
 
 def test_superlinear_flag_uses_step_factor():
-    rows = [
-        {
+    def table(growth):
+        row = {
             "query": "op",
             "base": {"t": 1.0, "rows": 10},
-            "scaled": {"t": 5.0, "rows": 40},
+            "scaled": {"t": growth, "rows": 100},
         }
-    ]
-    assert "**superlinear**" not in scale_sweep._table(rows, step=10)
-    assert "**superlinear**" in scale_sweep._table(rows, step=4)
+        return scale_sweep._table([row])
+
+    step = scale_sweep.STEP
+    assert f"| {step}x s |" in table(1.0)
+    assert "**superlinear**" not in table(float(step))
+    assert "**superlinear**" in table(step + 0.5)
 
 
-def test_d5_slice_chain_carries_step_copies():
-    src, salt, copies = (scale_sweep.SLICE_CHAIN["/tmp/sf4000m"] + (10,))[:3]
-    assert src == "/tmp/sf1000m" and copies == scale_sweep.D5_STEP
+def test_slice_chain_salts_distinct_and_sources_chained():
+    """Each chained level mutates with its own salt: a salt reused at two
+    levels makes the mutations commute and mints cross-level exact
+    duplicates. Every level builds from the bench slice or another level."""
+    chain = scale_sweep.SLICE_CHAIN
+    salts = [salt for _, salt in chain.values()]
+    assert len(set(salts)) == len(salts), salts
+    for d, (src, _) in chain.items():
+        assert src != d and (src == "/root/testdata/sf0.1" or src in chain), (d, src)
 
 
 def test_baseline_holds_each_sweep_marker_pair_once():
     """``--update-baseline`` rewrites BASELINE.md between each begin/end
-    marker pair: every pair must appear exactly once, begin before end."""
+    marker pair: every pair must appear exactly once, begin before end,
+    and every sweep marker in BASELINE.md must be one the script writes."""
     with open(os.path.join(scale_sweep.REPO, "BASELINE.md")) as fh:
         text = fh.read()
     begins = [n for n in vars(scale_sweep) if n.endswith("MARK_BEGIN")]
@@ -62,3 +71,6 @@ def test_baseline_holds_each_sweep_marker_pair_once():
         me = getattr(scale_sweep, begin.replace("BEGIN", "END"))
         assert text.count(mb) == 1 and text.count(me) == 1, (mb, me)
         assert text.index(mb) < text.index(me), mb
+    known = {v for n, v in vars(scale_sweep).items() if n.endswith(("MARK_BEGIN", "MARK_END"))}
+    in_doc = set(re.findall(r"<!-- [\w-]*-sweep:(?:begin|end) -->", text))
+    assert in_doc <= known, sorted(in_doc - known)

@@ -1,16 +1,19 @@
-"""Session-conf gating (VERDICT r9 directives #6 + #8).
+"""Session confs: the scale-mode gate and the local core count.
 
-The r9 decade-sweep fix (`initialPartitionNum=1024` + zstd shuffle codec)
-was session-global, and the r10 A/B measured it costing real time at bench
+`initialPartitionNum=1024` and the zstd codecs are the cluster confs of
+DEPLOY.md, and the r10 A/B measured them costing real time at bench
 scale (window_running_sum 0.50->0.63s, asof 0.92->1.13s, doc_fingerprint
-0.58->0.74s at sf0.1) — the exact "unchanged code" drift VERDICT r9 asked
-to arbitrate. The knobs now gate on SPARK_GRAFT_SCALE_MODE (set by
-scripts/scale_sweep.py for decade cells); these tests pin the gate so the
-bench/driver sessions and the driver's own vanilla session keep identical
-shuffle behavior at bench scale.
+0.58->0.74s at sf0.1). They gate on SPARK_GRAFT_SCALE_MODE; these tests
+pin the gate so the bench/driver sessions and the driver's own vanilla
+session keep identical shuffle behavior at bench scale. Without
+SPARK_GRAFT_CPUS a session runs one Spark core per host core.
 """
 
 from __future__ import annotations
+
+import os
+import subprocess
+import sys
 
 from collimate_spark.session import session_confs
 
@@ -33,15 +36,26 @@ def test_scale_mode_adds_decade_knobs():
     assert confs[_PQ_CODEC] == "zstd"
 
 
-def test_scale_mode_initial_partitions_overridable(monkeypatch):
-    """SPARK_GRAFT_INITIAL_PARTITIONS exists for shuffle-width A/Bs
-    (VERDICT r11 #5); it must only take effect in scale mode and default
-    back to the validated 1024."""
-    monkeypatch.setenv("SPARK_GRAFT_INITIAL_PARTITIONS", "4096")
-    assert session_confs(32, scale_mode=True)[_IPN] == "4096"
-    assert _IPN not in session_confs(32, scale_mode=False)
-    monkeypatch.delenv("SPARK_GRAFT_INITIAL_PARTITIONS")
-    assert session_confs(32, scale_mode=True)[_IPN] == "1024"
+def test_default_master_uses_host_core_count():
+    """Without SPARK_GRAFT_CPUS the session runs local[os.cpu_count()],
+    not a width tuned for some other host."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    code = (
+        "from collimate_spark.session import get_session\n"
+        "s = get_session('default-master')\n"
+        "print('MASTER=' + s.sparkContext.master)\n"
+        "s.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    masters = [l for l in out.stdout.splitlines() if l.startswith("MASTER=")]
+    assert masters == [f"MASTER=local[{os.cpu_count()}]"], out.stderr[-2000:]
 
 
 def test_live_test_session_has_no_wide_initial_shuffles(spark):
