@@ -1,11 +1,13 @@
 """Arrow-batched numpy implementations of the dedup hash kernels.
 
-The pure-expression forms in functions/text.py are correct but evaluate
-higher-order functions interpreted per array element (~100 ns/element);
-MinHash at k=128 over ~450 shingles/doc is ~60k element-evals per doc —
-the one place in the engine where the built-in-functions rule loses to an
-Arrow-batched numpy kernel by ~10×. These mapInPandas kernels are the
-sanctioned escape hatch (vectorized batch transfer, no per-row Python).
+As Column expressions these hashes evaluate higher-order functions
+interpreted per array element (~100 ns/element); MinHash at k=128 over
+~450 shingles/doc is ~60k element-evals per doc — the one place in the
+engine where the built-in-functions rule loses to an Arrow-batched numpy
+kernel by ~10× (dedup_minhash_lsh vs the expression-form
+dedup_minhash_lsh_expr over functions/text.minhash_band_hash). These
+mapInPandas kernels are the sanctioned escape hatch (vectorized batch
+transfer, no per-row Python).
 
 Determinism: zlib.crc32 / blake2b are stable across platforms and
 processes; affine permutation constants come from a fixed-seed PCG64.
@@ -251,47 +253,7 @@ def minhash_band_sets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
             )
 
 
-SIMHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("simhash", T.LongType()),
-    ]
-)
-
 _BIT_POS = np.arange(64, dtype=np.uint64)
-
-
-def simhash_fingerprints(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(doc_id, text) batches → (doc_id, simhash) 64-bit fingerprints.
-
-    blake2b(digest 8B) per token, vectorized ±1 bit-count over a
-    (n_tokens, 64) matrix, sign → bits → one int64.
-    """
-    for pdf in batches:
-        out_doc, out_sim = [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            toks = text.lower().split()
-            if not toks:
-                out_doc.append(doc_id)
-                out_sim.append(0)
-                continue
-            h = np.fromiter(
-                (
-                    int.from_bytes(blake2b(t.encode(), digest_size=8).digest(), "little")
-                    for t in toks
-                ),
-                dtype=np.uint64,
-                count=len(toks),
-            )
-            bits = ((h[:, None] >> _BIT_POS[None, :]) & np.uint64(1)).astype(np.int64)
-            counts = (2 * bits - 1).sum(axis=0)
-            sig = np.bitwise_or.reduce((counts > 0).astype(np.uint64) << _BIT_POS)
-            out_doc.append(doc_id)
-            out_sim.append(int(sig.astype(np.int64)))
-        yield pd.DataFrame(
-            {"doc_id": pd.Series(out_doc, dtype="int64"), "simhash": pd.Series(out_sim, dtype="int64")}
-        )
-
 
 # Shared bound for the per-task token→digest memos below (ADVICE r11):
 # ~1M entries ≈ 150 MB of dict overhead per Python worker at the
@@ -409,11 +371,11 @@ def winnow_fingerprints(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
     WINNOW_P/WINNOW_B), sliding-window minima via a strided view,
     distinct minima per doc.
 
-    Replaces the pure-expression form for the hot path: nested
-    transform-over-slice HOFs re-evaluate the whole k-gram array per
-    window position (CollapseProject), turning an O(n·w) algorithm into
-    O(n²) interpreted evals — measured 55 s for 500 docs at sf0.01 vs
-    ~1 s here. The hash family is engine-portable, so the pair output
+    Not a Column expression: nested transform-over-slice HOFs
+    re-evaluate the whole k-gram array per window position
+    (CollapseProject), turning an O(n·w) algorithm into O(n²)
+    interpreted evals — measured 55 s for 500 docs at sf0.01 vs ~1 s
+    here. The hash family is engine-portable, so the pair output
     is DuckDB-oracled end-to-end; guarantees are unchanged: any shared
     token run of ≥ w+k-1 yields a shared fingerprint."""
     from hashlib import md5

@@ -1,5 +1,5 @@
 """Sort-based exact percentiles — the scale answer to Spark's
-value-buffering ``percentile`` / ``percentile_disc``.
+value-buffering ``percentile``.
 
 Spark's exact percentile aggregates hold every (value -> count) pair in an
 ObjectHashAggregate buffer: the partial maps are serialized through the
@@ -19,10 +19,9 @@ large"). The same number is computable with data-proportional parallelism:
 Equivalence contract: ``group_percentiles`` reproduces Spark's
 ``percentile(col, q)`` bit-for-bit — position = q·(n−1) and the
 interpolation ``(ceil−pos)·v_lo + (pos−floor)·v_hi`` are the same double
-arithmetic (see the fuzz pin in tests/test_quantile_sketch.py) — and
-``discrete=True`` reproduces ``percentile_disc``'s smallest-value-with-
-cume_dist ≥ q rule. NULL values are ignored; a group whose values are all
-NULL yields NULL (groups are preserved, not dropped).
+arithmetic (see the fuzz pin in tests/test_quantile_sketch.py). NULL
+values are ignored; a group whose values are all NULL yields NULL (groups
+are preserved, not dropped).
 """
 
 from __future__ import annotations
@@ -38,15 +37,13 @@ def group_percentiles(
     group_cols: Sequence[str],
     value_col: str,
     specs: Sequence[tuple[float, str]],
-    *,
-    discrete: bool = False,
 ) -> DataFrame:
     """One row per group with exact percentile columns.
 
     ``specs``: (quantile, output_name) pairs, all over ``value_col``.
     Output: group_cols + one double column per spec. The value column is
-    evaluated as double (matching percentile/percentile_disc's result
-    type for numeric input).
+    evaluated as double (matching percentile's result type for numeric
+    input).
     """
     g = list(group_cols)
     c_nn = F.when(F.col(value_col).isNotNull(), F.count(F.lit(1))).otherwise(F.lit(0))
@@ -63,33 +60,14 @@ def group_percentiles(
     pc = F.col("__cum") - F.col("__c")  # rows strictly before this value
     aggs = []
     for q, name in specs:
-        if discrete:
-            # smallest value whose cume_dist (cum/n) reaches q: the first
-            # row where the running fraction crosses the threshold. The
-            # __n > 0 guard keeps the ANSI division unevaluated for
-            # all-NULL groups (where no row can hit anyway).
-            n_pos = F.col("__n") > 0
-            frac_prev = F.when(n_pos, pc.cast("double") / F.col("__n").cast("double"))
-            frac_here = F.when(
-                n_pos, F.col("__cum").cast("double") / F.col("__n").cast("double")
-            )
-            # pc == 0 admits the group's smallest value (q = 0.0, where
-            # frac_prev < q can never fire).
-            hit = (
-                F.col(value_col).isNotNull()
-                & (frac_here >= F.lit(float(q)))
-                & ((frac_prev < F.lit(float(q))) | (pc == 0))
-            )
-            aggs.append(F.max(F.when(hit, v)).alias(name))
-        else:
-            pos = F.lit(float(q)) * (F.col("__n") - 1).cast("double")
-            lo = F.floor(pos).cast("long")
-            hi = F.ceil(pos).cast("long")
-            # this row holds 0-indexed rank lo  iff  pc <= lo < cum
-            has_lo = F.col(value_col).isNotNull() & (pc <= lo) & (lo < F.col("__cum"))
-            v_hi = F.when(hi < F.col("__cum"), v).otherwise(v_next)
-            val = F.when(hi == lo, v).otherwise(
-                (hi.cast("double") - pos) * v + (pos - lo.cast("double")) * v_hi
-            )
-            aggs.append(F.max(F.when(has_lo, val)).alias(name))
+        pos = F.lit(float(q)) * (F.col("__n") - 1).cast("double")
+        lo = F.floor(pos).cast("long")
+        hi = F.ceil(pos).cast("long")
+        # this row holds 0-indexed rank lo  iff  pc <= lo < cum
+        has_lo = F.col(value_col).isNotNull() & (pc <= lo) & (lo < F.col("__cum"))
+        v_hi = F.when(hi < F.col("__cum"), v).otherwise(v_next)
+        val = F.when(hi == lo, v).otherwise(
+            (hi.cast("double") - pos) * v + (pos - lo.cast("double")) * v_hi
+        )
+        aggs.append(F.max(F.when(has_lo, val)).alias(name))
     return cum.groupBy(*g).agg(*aggs)

@@ -157,62 +157,25 @@ ORDER BY o_orderstatus
 """
 
 
-# GK sketch accuracy for every --approx percentile path: rank error
-# <= n / accuracy. 1000 (0.1% rank error) is deliberate, measured at
-# sf10 (60M-row lineitem, 10M-row events; the probe script is
-# `git show c8a0ddf:scripts/approx_scale_bench.py`):
-# at 10_000 the sketch's per-row insert/compress cost EXCEEDED the
-# exact ObjectHashAggregate's buffering on low-cardinality groups
-# (approx_percentile(10k) 1.14s vs exact 0.69s on 10M rows/5 groups),
-# making the scale mode slower in CPU while it saved memory; at 1000 it
-# is faster than exact (0.61s) AND constant-memory. 0.1% rank error is
-# ample for the consumers: winsorize clamp bounds, MAD fences, p95
-# delta widths, decile summaries.
-APPROX_PCT_ACCURACY = 1_000
-
-
-def winsorize_stats(
-    spark: SparkSession, sf_dir: str, *, approx: bool = False
-) -> DataFrame:
+def winsorize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized (clamped to [p01, p99]) robust statistics of
     ``l_extendedprice`` per return flag. The exact percentile bounds are
     ONE tiny aggregate (two doubles) broadcast back over the fact table
     — the clamp itself is a narrow map, so the whole operator costs one
     full-table agg + one group agg regardless of scale. Exact
-    ``percentile`` matches DuckDB's interpolating ``quantile_cont``.
-
-    ``approx=True`` is the at-scale mode: ``approx_percentile`` (GK
-    sketch, rank error ≤ n/APPROX_PCT_ACCURACY) replaces the exact
-    value-buffering percentile — constant memory instead of an
-    ObjectHashAggregate holding every value. Default stays exact so the
-    DuckDB oracle parity is bit-identical; the approx mode's error is
-    asserted in tests against the GK rank bound (measured 3.2× faster
-    at sf0.1: 2.78s → 0.87s whole-query, min-of-3)."""
+    ``percentile`` matches DuckDB's interpolating ``quantile_cont``."""
     li = load_table(spark, "lineitem", sf_dir)
-    if approx:
-        # ONE array-percentile aggregate: two separate sketch exprs would
-        # each pay their own insert/compress pass
-        both = li.agg(
-            F.expr(
-                "approx_percentile(l_extendedprice, array(0.01, 0.99),"
-                f" {APPROX_PCT_ACCURACY})"
-            ).alias("b")
-        )
-        bounds = both.select(
-            F.element_at("b", 1).alias("p01"), F.element_at("b", 2).alias("p99")
-        )
-    else:
-        # sort-based exact bounds (functions/quantiles.py): bit-equal to
-        # percentile(col, array(0.01, 0.99)) — the array-buffering
-        # ObjectHashAggregate held every value in one final task
-        # (r13 interleaved A/B: 2.98 s -> 2.22 s whole-query min-of-5,
-        # every sample faster)
-        bounds = group_percentiles(
-            li.select("l_extendedprice"),
-            [],
-            "l_extendedprice",
-            [(0.01, "p01"), (0.99, "p99")],
-        )
+    # sort-based exact bounds (functions/quantiles.py): bit-equal to
+    # percentile(col, array(0.01, 0.99)) — the array-buffering
+    # ObjectHashAggregate held every value in one final task
+    # (r13 interleaved A/B: 2.98 s -> 2.22 s whole-query min-of-5,
+    # every sample faster)
+    bounds = group_percentiles(
+        li.select("l_extendedprice"),
+        [],
+        "l_extendedprice",
+        [(0.01, "p01"), (0.99, "p99")],
+    )
     clamped = li.crossJoin(F.broadcast(bounds)).withColumn(
         "wins", F.least(F.greatest(F.col("l_extendedprice"), F.col("p01")), F.col("p99"))
     )
@@ -631,9 +594,7 @@ _ENC_RLE_RUN = 2.0  # avg run length at/above this → run-length
 _ENC_DELTA_BITS = 16  # p95 |adjacent delta| fits → delta encoding
 
 
-def encoding_advisor_lineitem(
-    spark: SparkSession, sf_dir: str, *, approx: bool = False
-) -> DataFrame:
+def encoding_advisor_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pick a physical encoding per column the way the reference picks
     dictionary code widths (index.js's k8/k16 rule), but from measured
     statistics: distinct ratio (→ dictionary), average run length in
@@ -650,18 +611,9 @@ def encoding_advisor_lineitem(
     and the window never needs a global sort), plus one wide aggregate
     with per-column exact distinct counts. Stacked long at the end.
 
-    ``approx=True`` is the at-scale mode: ``approx_percentile`` over the
-    FULL delta stream (no 1/16 sample needed — the GK sketch bounds the
-    buffer itself) replaces the five exact value-buffering percentiles,
-    and ``approx_count_distinct`` replaces the exact distinct expansion.
-    Default stays exact for DuckDB oracle parity; tests assert the
-    approx mode reproduces the exact mode's encoding recommendations
-    (measured 3.1× faster at sf0.1: 4.95s → 1.62s whole-query,
-    min-of-3).
-
-    Exact mode caches the windowed fact stream and does not unpersist
-    it (the returned lineage still reads it) — multi-query sessions
-    should ``spark.catalog.clearCache()`` between queries; see the
+    Caches the windowed fact stream and does not unpersist it (the
+    returned lineage still reads it) — multi-query sessions should
+    ``spark.catalog.clearCache()`` between queries; see the
     cache-lifetime contract in ``operators/__init__``."""
     li = load_table(spark, "lineitem", sf_dir)
     cols = {name: F.expr(sql) for name, sql in _ENC_COLS}
@@ -683,71 +635,54 @@ def encoding_advisor_lineitem(
         flagged = flagged.withColumn(
             f"chg_{n}", (prev.isNull() | (F.col(f"v_{n}") != prev)).cast("long")
         ).withColumn(f"ad_{n}", F.abs(F.col(f"v_{n}") - prev))
-    if approx:
-        # scale mode: GK sketch over the FULL delta stream (bounded
-        # buffer, no sample) + HLL distinct — constant memory per agg,
-        # and no Expand (HLL distinct is a plain aggregate), so ONE agg
-        # over the windowed stream is the right shape
-        aggs = [F.count(F.lit(1)).alias("n_rows")]
-        for n, _ in _ENC_COLS:
-            aggs += [
-                F.approx_count_distinct(f"v_{n}").alias(f"nd_{n}"),
-                F.sum(f"chg_{n}").alias(f"runs_{n}"),
-                F.expr(
-                    f"approx_percentile(ad_{n}, 0.95D, {APPROX_PCT_ACCURACY})"
-                ).alias(f"d95_{n}"),
-            ]
-        wide = flagged.agg(*aggs)
-    else:
-        # exact mode: five COUNT(DISTINCT) in one aggregate plan as an
-        # Expand that replicates the WINDOWED stream 6× — so the stream
-        # is cached and the distinct pass runs as its own agg beside the
-        # runs/percentile agg (no expand there), 1-row results crossJoined
-        # back (measured 4.1s → 2.8s at sf0.1). The exact p95 buffers
-        # every value; a deterministic 1/16 orderkey-keyed sample is
-        # unbiased for the delta distribution and shrinks the five
-        # ObjectHashAggregate buffers 16× — both engines sample
-        # identically so parity is exact.
-        flagged = flagged.transform(scache)
-        aggs = [F.count(F.lit(1)).alias("n_rows")]
-        for n, _ in _ENC_COLS:
-            aggs += [
-                F.sum(f"chg_{n}").alias(f"runs_{n}"),
-                F.expr(
-                    f"percentile(CASE WHEN ord_key % 16 = 0 THEN ad_{n} END, 0.95D)"
-                ).alias(f"d95_{n}"),
-            ]
-        # r13: even alone, 5 COUNT(DISTINCT) on different columns plan as
-        # the multi-distinct Expand — 6 projections of the cached stream
-        # through the first-stage agg (the table_profile anti-pattern).
-        # All five v_ columns are BIGINT, so one posexplode turns each row
-        # into 5 skinny (cid, v) pairs whose two-level dedup agg collapses
-        # duplicates map-side; a 1-row pivot re-attaches the counts.
-        # coalesce(0) matches COUNT(DISTINCT) on an all-NULL column.
-        long_vals = flagged.select(
-            F.posexplode(
-                F.array(*[F.col(f"v_{n}") for n, _ in _ENC_COLS])
-            ).alias("cid", "v")
-        )
-        dist = (
-            long_vals.filter(F.col("v").isNotNull())
-            .groupBy("cid", "v")
-            .agg(F.lit(1))
-            .groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("nd"))
-        )
-        dmap = (
-            dist.groupBy()
-            .pivot("cid", list(range(len(_ENC_COLS))))
-            .agg(F.first("nd"))
-        )
-        nd = dmap.select(
-            *[
-                F.coalesce(F.col(f"{i}").cast("long"), F.lit(0)).alias(f"nd_{n}")
-                for i, (n, _) in enumerate(_ENC_COLS)
-            ]
-        )
-        wide = flagged.agg(*aggs).crossJoin(F.broadcast(nd))
+    # five COUNT(DISTINCT) in one aggregate plan as an Expand that
+    # replicates the WINDOWED stream 6× — so the stream is cached and
+    # the distinct pass runs as its own agg beside the runs/percentile
+    # agg (no expand there), 1-row results crossJoined back (measured
+    # 4.1s → 2.8s at sf0.1). The exact p95 buffers every value; a
+    # deterministic 1/16 orderkey-keyed sample is unbiased for the
+    # delta distribution and shrinks the five ObjectHashAggregate
+    # buffers 16× — both engines sample identically so parity is exact.
+    flagged = flagged.transform(scache)
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    for n, _ in _ENC_COLS:
+        aggs += [
+            F.sum(f"chg_{n}").alias(f"runs_{n}"),
+            F.expr(
+                f"percentile(CASE WHEN ord_key % 16 = 0 THEN ad_{n} END, 0.95D)"
+            ).alias(f"d95_{n}"),
+        ]
+    # r13: even alone, 5 COUNT(DISTINCT) on different columns plan as
+    # the multi-distinct Expand — 6 projections of the cached stream
+    # through the first-stage agg (the table_profile anti-pattern).
+    # All five v_ columns are BIGINT, so one posexplode turns each row
+    # into 5 skinny (cid, v) pairs whose two-level dedup agg collapses
+    # duplicates map-side; a 1-row pivot re-attaches the counts.
+    # coalesce(0) matches COUNT(DISTINCT) on an all-NULL column.
+    long_vals = flagged.select(
+        F.posexplode(
+            F.array(*[F.col(f"v_{n}") for n, _ in _ENC_COLS])
+        ).alias("cid", "v")
+    )
+    dist = (
+        long_vals.filter(F.col("v").isNotNull())
+        .groupBy("cid", "v")
+        .agg(F.lit(1))
+        .groupBy("cid")
+        .agg(F.count(F.lit(1)).alias("nd"))
+    )
+    dmap = (
+        dist.groupBy()
+        .pivot("cid", list(range(len(_ENC_COLS))))
+        .agg(F.first("nd"))
+    )
+    nd = dmap.select(
+        *[
+            F.coalesce(F.col(f"{i}").cast("long"), F.lit(0)).alias(f"nd_{n}")
+            for i, (n, _) in enumerate(_ENC_COLS)
+        ]
+    )
+    wide = flagged.agg(*aggs).crossJoin(F.broadcast(nd))
     stacked = wide.selectExpr(
         "n_rows",
         "stack({}, {}) AS (col_name, n_distinct, n_runs, d95)".format(

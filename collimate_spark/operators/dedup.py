@@ -590,16 +590,14 @@ EMB_COSINE_THRESHOLD = 0.4
 EMB_BLOCK_CAP = 1024  # max cluster members whose pairs one task generates
 
 
-def dedup_embedding_cosine(
-    spark: SparkSession, sf_dir: str, block_cap: int = EMB_BLOCK_CAP
-) -> DataFrame:
+def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup: pairs with cosine ≥ threshold, blocked by the
     ``label`` cluster id (IVF-style partition pruning: only same-cluster
     pairs are compared — the 100 TB answer to all-pairs cosine).
 
     Within-cluster pairing goes through the chunked self-join
     (functions/pairs.bounded_self_pairs), so a cluster larger than
-    ``block_cap`` is split into hash chunks and its pairs spread over
+    ``EMB_BLOCK_CAP`` is split into hash chunks and its pairs spread over
     ⌈s/cap⌉² bounded tasks instead of one quadratic straggler — output is
     identical (the chunk grid covers every unordered pair exactly once);
     only the task shape changes. Cluster sizes come from a broadcast
@@ -619,7 +617,7 @@ def dedup_embedding_cosine(
     # and 4dp output are unchanged. Measured 4.93 s → see
     # OPTIMIZATION_r13.md; the win grows with cluster size.
     scored = blocked_pair_cosines(
-        sized, ["label"], "vec_id", "embedding", "__n", cap=block_cap
+        sized, ["label"], "vec_id", "embedding", "__n", cap=EMB_BLOCK_CAP
     )
     return (
         scored.filter(F.round(F.col("cos_raw"), 6) >= EMB_COSINE_THRESHOLD)

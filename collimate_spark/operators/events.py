@@ -860,27 +860,13 @@ ORDER BY event_type, shape
 """
 
 
-def conversion_time_quantiles(
-    spark: SparkSession, sf_dir: str, *, approx: bool = False
-) -> DataFrame:
+def conversion_time_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-convert distribution: for each user's click → NEXT
     purchase pair (the funnel edge), the delay in seconds, summarized as
     exact quantiles + count per user-decile bucket. Delay computation is
     the forward-as-of carry (one user-partitioned window over the merged
     stream — no self-join); quantiles are exact ``percentile``.
-    Microsecond-exact and tz-independent (timestampdiff, NTZ-safe).
-
-    ``approx=True`` is the at-scale mode: p50/p90 switch to
-    ``approx_percentile`` (GK sketch, rank error ≤ n/accuracy) —
-    constant memory per bucket instead of buffering every delay. Default
-    stays exact so the DuckDB oracle parity is bit-identical; the approx
-    mode's error is asserted in tests against the GK rank bound."""
-    from collimate_spark.operators.dataeng import APPROX_PCT_ACCURACY
-
-    def _pct(col: str, q: float) -> str:
-        if approx:
-            return f"approx_percentile({col}, {q}D, {APPROX_PCT_ACCURACY})"
-        return f"percentile({col}, {q}D)"
+    Microsecond-exact and tz-independent (timestampdiff, NTZ-safe)."""
     ev = load_table(spark, "events", sf_dir)
     stream = ev.filter(F.col("event_type").isin("click", "purchase")).select(
         "user_id", "ts", "event_id", "event_type"
@@ -905,8 +891,8 @@ def conversion_time_quantiles(
         delays.groupBy("user_bucket")
         .agg(
             F.count(F.lit(1)).alias("n_conversions"),
-            F.round(F.expr(_pct("delay_s", 0.5)), 2).alias("p50_s"),
-            F.round(F.expr(_pct("delay_s", 0.9)), 2).alias("p90_s"),
+            F.round(F.expr("percentile(delay_s, 0.5D)"), 2).alias("p50_s"),
+            F.round(F.expr("percentile(delay_s, 0.9D)"), 2).alias("p90_s"),
             F.round(F.max("delay_s"), 2).alias("max_s"),
         )
         .orderBy("user_bucket")

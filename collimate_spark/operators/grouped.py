@@ -185,38 +185,23 @@ ORDER BY l_returnflag
 """
 
 
-def agg_percentile_disc(
-    spark: SparkSession, sf_dir: str, *, approx: bool = False
-) -> DataFrame:
+def agg_percentile_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISCRETE percentiles (percentile_disc == DuckDB quantile_disc):
     returns an actual data value, never an interpolation — the right
     semantics for quantiles of ids/codes/timestamps where interpolated
     values are meaningless. Shown beside agg_percentile (continuous) so
     the disc-vs-cont distinction is a tested contract, not folklore.
 
-    ``approx=True`` is the at-scale mode: both buffers switch to
-    ``approx_percentile`` (Greenwald-Khanna, rank error ≤ n/accuracy,
-    O(accuracy) state per group instead of every value). GK also returns
-    a TRUE data value — never an interpolation — so the approx mode
-    keeps the *disc* contract exactly; only the rank may be off, which
-    tests/test_plans.py::test_agg_percentile_disc_approx_rank_bound
-    asserts. The exact mode's two ObjectHashAggregate value buffers are
-    the documented, oracle-required cost (same posture as
-    winsorize/mad). The sort-based group_percentiles(discrete=True)
-    rewrite was measured here (r13 interleaved A/B) and REJECTED: with
-    only one near-continuous buffer (l_quantity's map is 50 entries) a
-    full dedup+window pass costs more than the buffer it replaces
-    (min-of-5 2.26 s vs 2.06 s); the helper's disc form stays available
-    for multi-quantile single-column sites."""
-    from collimate_spark.operators.dataeng import APPROX_PCT_ACCURACY
-
+    The two ObjectHashAggregate value buffers are the documented,
+    oracle-required cost (same posture as winsorize/mad). A sort-based
+    disc rewrite in the style of functions/quantiles.group_percentiles
+    was measured here (r13 interleaved A/B) and REJECTED: with only one
+    near-continuous buffer (l_quantity's map is 50 entries) a full
+    dedup+window pass costs more than the buffer it replaces (min-of-5
+    2.26 s vs 2.06 s)."""
     li = load_table(spark, "lineitem", sf_dir)
-    if approx:
-        p50 = f"approx_percentile(l_quantity, 0.5D, {APPROX_PCT_ACCURACY})"
-        p90 = f"approx_percentile(l_extendedprice, 0.9D, {APPROX_PCT_ACCURACY})"
-    else:
-        p50 = "percentile_disc(0.5) WITHIN GROUP (ORDER BY l_quantity)"
-        p90 = "percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice)"
+    p50 = "percentile_disc(0.5) WITHIN GROUP (ORDER BY l_quantity)"
+    p90 = "percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice)"
     return (
         li.groupBy("l_returnflag")
         .agg(

@@ -217,8 +217,8 @@ ORDER BY k
 # Above the floor, one cheap groupBy-count reads the true max
 # (bucket, month) occupancy: the r8 sweep measured a month key going
 # 5.5× superlinear at ~1M rows/key (10M one-month events), while ≤500k
-# rows sort comfortably inside one task; tests force both paths and
-# assert identical results.
+# rows sort comfortably inside one task; tests move these two gates to
+# run both paths and assert identical results.
 _ASOF_DAY_MIN_BYTES = 8 << 20
 _ASOF_ROWS_PER_KEY = 500_000
 
@@ -243,9 +243,7 @@ def _auto_asof_day_grain(events: DataFrame) -> bool:
     return (mx or 0) > _ASOF_ROWS_PER_KEY
 
 
-def asof_join_events_orders(
-    spark: SparkSession, sf_dir: str, *, day_grain: bool | None = None
-) -> DataFrame:
+def asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each event, the latest order date at-or-before the
     event's timestamp, matched on a shared bucket key.
 
@@ -255,7 +253,7 @@ def asof_join_events_orders(
     n_buckets × n_grains instead of n_buckets(10), and per-partition row
     counts stay bounded as data grows: a bucket-only key is the classic
     as-of scale-killer (10-way max parallelism, unbounded partitions at
-    100×). The grain AUTO-SELECTS by measured (bucket, month) occupancy
+    100×). The grain is selected by measured (bucket, month) occupancy
     (``_auto_asof_day_grain``): month below the crossover (this
     dataset's bench SFs — 10k rows/key sort instantly and skip the
     day-spine constant), DAY above it (the r8 sweep find: with all
@@ -266,14 +264,13 @@ def asof_join_events_orders(
     Cross-grain correctness comes from that carry-over table: the last
     order timestamp strictly before each grain per bucket, coalesced in
     wherever the within-grain window saw no earlier order. Both paths
-    are hash-identical by construction (tests force each). This is how
-    a trades/quotes as-of join runs at 100 TB; for intraday-dense feeds
-    drop the key one more level (hour) — same carry construction.
+    are hash-identical by construction (tests run each by moving the
+    gate). This is how a trades/quotes as-of join runs at 100 TB; for
+    intraday-dense feeds drop the key one more level (hour) — same carry
+    construction.
     """
     events_raw = load_table(spark, "events", sf_dir)
-    if day_grain is None:
-        day_grain = _auto_asof_day_grain(events_raw)
-    grain = "day" if day_grain else "month"
+    grain = "day" if _auto_asof_day_grain(events_raw) else "month"
     events = events_raw.select(
         (F.col("user_id") % 10).alias("bucket"),
         F.col("ts"),

@@ -923,9 +923,7 @@ ORDER BY event_type
 # Median-absolute-deviation outlier audit (robust alternative to z-score)
 
 
-def mad_outliers(
-    spark: SparkSession, sf_dir: str, *, approx: bool = False
-) -> DataFrame:
+def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier audit per event_type: exact median of ``value``,
     MAD = median(|value - median|), and the count of points beyond the
     conventional 3·1.4826·MAD fence. Unlike ``anomaly_zscore`` this is
@@ -936,38 +934,19 @@ def mad_outliers(
     ``percentile(…, 0.5)`` — Spark's exact interpolating percentile,
     identical semantics to DuckDB ``median`` — with the per-group medians
     broadcast back (group cardinality = #event_types, tiny). The fact
-    table shuffles twice on the same low-cardinality key.
-
-    ``approx=True`` is the at-scale mode: both medians switch to
-    ``approx_percentile`` (GK sketch, rank error ≤ n/accuracy) —
-    constant memory per group instead of an ObjectHashAggregate holding
-    every value. Default stays exact so the DuckDB oracle parity is
-    bit-identical; the approx fence count's deviation is asserted in
-    tests (same pattern as ``winsorize_stats``)."""
-    from collimate_spark.operators.dataeng import APPROX_PCT_ACCURACY
-
-    med_expr = (
-        f"approx_percentile(value, 0.5D, {APPROX_PCT_ACCURACY})"
-        if approx
-        else "percentile(value, 0.5D)"
-    )
-    mad_expr = (
-        f"approx_percentile(absdev, 0.5D, {APPROX_PCT_ACCURACY})"
-        if approx
-        else "percentile(absdev, 0.5D)"
-    )
+    table shuffles twice on the same low-cardinality key."""
     ev = load_table(spark, "events", sf_dir).select("event_type", "value")
     # the per-group median frames are #event_types-sized; cached so the
     # two fact branches referencing dev don't re-run pass one (3 fact
     # scans is MAD's floor: median, residual median, fence count)
     med = ev.groupBy("event_type").agg(
-        F.expr(med_expr).alias("med")
+        F.expr("percentile(value, 0.5D)").alias("med")
     ).transform(scache)
     dev = ev.join(F.broadcast(med), "event_type").withColumn(
         "absdev", F.abs(F.col("value") - F.col("med"))
     )
     mad = dev.groupBy("event_type").agg(
-        F.expr(mad_expr).alias("mad")
+        F.expr("percentile(absdev, 0.5D)").alias("mad")
     ).transform(scache)
     fenced = dev.join(F.broadcast(mad), "event_type")
     return (

@@ -326,9 +326,9 @@ def winnow_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     complementing the order-blind MinHash/Jaccard variants. Candidate
     generation = explode fingerprints + equi-join (never O(n²)).
     Fingerprints come from the Arrow-batched numpy kernel
-    (functions/fast_text.winnow_fingerprints — the expression form in
-    functions/text.py re-evaluates its k-gram array per window under
-    CollapseProject, ~50× slower; it remains the zero-Python fallback).
+    (functions/fast_text.winnow_fingerprints — a Column-expression form
+    re-evaluates its k-gram array per window under CollapseProject,
+    ~50× slower).
     Fully DuckDB-oracled (VERDICT r9 #5): the k-gram hash is an
     engine-portable md5-prefix + Horner polynomial (fast_text.WINNOW_P/
     WINNOW_B), so the oracle replays tokenize → gram-hash → sliding

@@ -167,9 +167,7 @@ def _auto_two_level(orders: DataFrame) -> bool:
     return (mx or 0) > _TWO_LEVEL_ROWS_PER_PARTITION
 
 
-def window_range_frame(
-    spark: SparkSession, sf_dir: str, *, two_level: bool | None = None
-) -> DataFrame:
+def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame: for each order, sum/count of orders within ±5000 in
     totalprice among the same status (value-based frame, not row-based).
 
@@ -198,13 +196,10 @@ def window_range_frame(
     the per-(status, price-bucket) two-level composition of the same
     prefix-difference identity lifts window parallelism to #statuses ×
     #price-buckets, exact-equivalent (decimal arithmetic throughout,
-    proven by tests/test_algebra_properties.py at two SFs). The default
-    ``two_level=None`` AUTO-SELECTS it by measured partition size (see
-    ``_auto_two_level``); pass True/False to force a mode."""
+    proven by tests/test_algebra_properties.py at two SFs), selected by
+    measured partition size (see ``_auto_two_level``)."""
     orders = load_table(spark, "orders", sf_dir)
-    if two_level is None:
-        two_level = _auto_two_level(orders)
-    if two_level:
+    if _auto_two_level(orders):
         return _window_range_frame_two_level(spark, sf_dir)
     # SQL-expression windows: the Python Window.rangeBetween API accepts
     # only integral offsets, and the fractional 0.005 slack is the whole

@@ -28,12 +28,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--format", choices=("jsonl", "csv"), default="jsonl")
     p.add_argument("--explain", action="store_true", help="print the physical plan instead of rows")
     p.add_argument("--list", action="store_true", help="list registered queries")
-    p.add_argument(
-        "--approx",
-        action="store_true",
-        help="use the approx-percentile scale mode where the operator offers "
-        "one (winsorize_stats, encoding_advisor_lineitem); errors otherwise",
-    )
     args = p.parse_args(argv)
 
     from collimate_spark.operators import all_oracles, all_queries
@@ -53,15 +47,7 @@ def main(argv: list[str] | None = None) -> int:
     from collimate_spark.session import get_session
 
     spark = get_session("collimate_query_cli")
-    q = queries[args.name]
-    if args.approx:
-        import inspect
-
-        if "approx" not in inspect.signature(q).parameters:
-            p.error(f"{args.name} has no approx scale mode")
-        df = q(spark, args.sf_dir or DEFAULT_SF_DIR, approx=True)
-    else:
-        df = q(spark, args.sf_dir or DEFAULT_SF_DIR)
+    df = queries[args.name](spark, args.sf_dir or DEFAULT_SF_DIR)
     if args.explain:
         df.explain("formatted")
         return 0

@@ -41,6 +41,7 @@ profile+apply+parquet-write end-to-end via bench.bench_ingest.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -285,26 +286,31 @@ def _update_baseline(table_md: str, base: str, scaled: str, surface: bool) -> No
     print("BASELINE.md section updated", file=sys.stderr)
 
 
-def main() -> None:
-    if len(sys.argv) >= 2 and sys.argv[1] == "--single":
-        run_single(sys.argv[2], sys.argv[3])
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--base", help="base slice directory")
+    ap.add_argument("--scaled", help="scaled slice directory")
+    ap.add_argument("--ops", help="comma-separated registered query names")
+    ap.add_argument("--surface", action="store_true", help="sweep SURFACE_OPS")
+    ap.add_argument("--update-baseline", action="store_true")
+    ap.add_argument(
+        "--single", nargs=2, metavar=("NAME", "SF_DIR"), help=argparse.SUPPRESS
+    )
+    args = ap.parse_args(argv)
+    if args.single:
+        run_single(*args.single)
         return
+    if args.ops and args.update_baseline:
+        ap.error("--update-baseline requires the default op list")
 
-    args = sys.argv[1:]
-    surface = "--surface" in args
-    update = "--update-baseline" in args
-    if surface:
+    if args.surface:
         base, scaled, ops = SURFACE_BASE_DEFAULT, SURFACE_SCALED_DEFAULT, list(SURFACE_OPS)
     else:
         base, scaled, ops = BASE_DEFAULT, SCALED_DEFAULT, list(OPS)
-    if "--base" in args:
-        base = args[args.index("--base") + 1]
-    if "--scaled" in args:
-        scaled = args[args.index("--scaled") + 1]
-    if "--ops" in args:
-        ops = args[args.index("--ops") + 1].split(",")
-        if update:
-            sys.exit("--update-baseline requires the default op list")
+    base = args.base or base
+    scaled = args.scaled or scaled
+    if args.ops:
+        ops = args.ops.split(",")
     _ensure_scaled(base) if base in SLICE_CHAIN else None
     _ensure_scaled(scaled)
 
@@ -318,8 +324,8 @@ def main() -> None:
 
     table_md = _table(rows)
     print("\n" + table_md)
-    if update:
-        _update_baseline(table_md, base, scaled, surface)
+    if args.update_baseline:
+        _update_baseline(table_md, base, scaled, args.surface)
 
 
 if __name__ == "__main__":

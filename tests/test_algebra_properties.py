@@ -123,21 +123,25 @@ def test_morton_interleave_matches_reference(spark, x, y):
     assert got == ref
 
 
-def test_range_frame_two_level_equals_single_level(spark, sf_dir):
+def test_range_frame_two_level_equals_single_level(spark, monkeypatch):
     """The (status, price-bucket) two-level prefix-sum mode of
     window_range_frame must be EXACTLY the single-level prefix-difference
     result — same rows, same doubles, same counts — at two SFs. The
     identity: prefix(<=x) = exclusive-cum(bucket totals < bucket(x)) +
     within-bucket-prefix(<=x), exact because every sum is DECIMAL
-    (association-free recomposition)."""
-    from collimate_spark.operators.windows import window_range_frame
+    (association-free recomposition). Both SFs sit under the two-level
+    gate, so the gate constants are moved to take the two-level path."""
+    from collimate_spark.operators import windows as W
     from collimate_spark.plans import plan_features
 
-    for sf in ("/root/testdata/sf0.001", sf_dir):
-        single = window_range_frame(spark, sf).collect()
-        two_df = window_range_frame(spark, sf, two_level=True)
-        assert single == two_df.collect()
-        assert not plan_features(two_df)["has_cartesian"]
+    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
+        single = W.window_range_frame(spark, sf).collect()
+        with monkeypatch.context() as m:
+            m.setattr(W, "_TWO_LEVEL_MIN_BYTES", 1)
+            m.setattr(W, "_TWO_LEVEL_ROWS_PER_PARTITION", 10)
+            two_df = W.window_range_frame(spark, sf)
+            assert single == two_df.collect()
+            assert not plan_features(two_df)["has_cartesian"]
 
 
 starts_strategy = st.lists(

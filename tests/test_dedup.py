@@ -54,26 +54,6 @@ def test_winnow_pairs_subset_of_jaccard(spark, sf_dir):
     assert len(wp & jac) >= len(wp) * 0.8
 
 
-def test_identical_text_same_simhash_and_signature(spark):
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy dog"),
-         (3, "a completely different sentence about spark engines at scale")],
-        ["doc_id", "text"],
-    )
-    toks = X.tokens(F.col("text"))
-    out = df.select(
-        "doc_id",
-        X.simhash64(toks).alias("sh"),
-        X.minhash_signature(X.word_shingles(toks, 3), 16).alias("sig"),
-    ).collect()
-    by_id = {r.doc_id: r for r in out}
-    assert by_id[1].sh == by_id[2].sh
-    assert by_id[1].sig == by_id[2].sig
-    assert by_id[1].sh != by_id[3].sh
-    assert len(by_id[1].sig) == 16
-
-
 def test_hamming64_matches_popcount(spark):
     import random
 
@@ -83,21 +63,6 @@ def test_hamming64_matches_popcount(spark):
     got = df.select(X.hamming64(F.col("a"), F.col("b")).alias("h"), "a", "b").collect()
     for r in got:
         assert r.h == bin(r.a ^ r.b).count("1")
-
-
-def test_minhash_estimates_jaccard(spark):
-    """MinHash signature agreement rate ≈ true Jaccard (here two texts
-    sharing most trigrams)."""
-    a = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12 w13 w14 w15"
-    b = a + " w16"  # adds one trigram-ish tail
-    df = spark.createDataFrame([(1, a), (2, b)], ["doc_id", "text"])
-    sig = df.select(
-        "doc_id", X.minhash_signature(X.word_shingles(X.tokens(F.col("text")), 3), 128).alias("s")
-    ).collect()
-    s1, s2 = sig[0].s, sig[1].s
-    agree = sum(1 for x, y in zip(s1, s2) if x == y) / 128
-    # true jaccard = 14/15 ≈ 0.933; agreement should be in the same region
-    assert 0.75 <= agree <= 1.0
 
 
 def test_propagate_components_chain_graph(spark):

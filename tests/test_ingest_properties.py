@@ -86,7 +86,7 @@ def _parses_number(s):
         return False
 
 
-def test_chunk_documents_coverage_property(spark):
+def test_chunk_documents_coverage_property(spark, tmp_path):
     """Chunking invariants on adversarial token counts (1, stride-1,
     stride, stride+1, window, window+1, 3·window): every token of every
     doc is covered by >= 1 chunk, no chunk exceeds CHUNK_TOKENS, stride
@@ -106,9 +106,7 @@ def test_chunk_documents_coverage_property(spark):
         (i, " ".join(f"t{i}_{j}" for j in range(n)), "xx", "src", n)
         for i, n in enumerate(sizes)
     ]
-    import tempfile
-
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     spark.createDataFrame(
         rows, "doc_id: long, text: string, lang: string, source: string, n_chars: long"
     ).write.mode("overwrite").parquet(f"{d}/documents.parquet")

@@ -66,35 +66,39 @@ def test_q8_star_join_all_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in ops
 
 
-def test_asof_join_partitions_on_composite_key(spark, sf_dir):
+def test_asof_join_partitions_on_composite_key(spark, sf_dir, monkeypatch):
     """The as-of window must shuffle on (bucket, gkey) — a bucket-only
     key caps parallelism at 10 and lets partitions grow unboundedly with
-    data volume. Forced day grain is the 100 TB shape (month collapsed
-    this dataset's one-month event stream to 10 partitions — the r8
-    sweep's 5.5× slope); hashpartitioning on both columns is the scale
-    contract in EITHER grain."""
-    from collimate_spark.operators.joins import asof_join_events_orders
+    data volume. Day grain (the gate moved to zero) is the 100 TB shape
+    (month collapsed this dataset's one-month event stream to 10
+    partitions — the r8 sweep's 5.5× slope); hashpartitioning on both
+    columns is the scale contract in EITHER grain."""
+    from collimate_spark.operators import joins as J
 
-    for grain in (True, False):
-        plan = executed_plan(asof_join_events_orders(spark, sf_dir, day_grain=grain))
+    for day in (False, True):
+        if day:
+            monkeypatch.setattr(J, "_ASOF_DAY_MIN_BYTES", 0)
+            monkeypatch.setattr(J, "_ASOF_ROWS_PER_KEY", 0)
+        plan = executed_plan(J.asof_join_events_orders(spark, sf_dir))
         assert "hashpartitioning(bucket" in plan and "gkey" in plan.split("hashpartitioning(bucket", 1)[1][:80]
 
 
-def test_asof_join_grain_gate_and_equivalence(spark, sf_dir):
+def test_asof_join_grain_gate_and_equivalence(spark, sf_dir, monkeypatch):
     """The month-vs-day granularity gate (VERDICT r9 #1): bench-scale
     inputs sit under the ``_ASOF_DAY_MIN_BYTES`` (8 MiB) bytes floor so
     the gate picks MONTH with zero jobs, and the two grains are
     result-identical — the gate may only ever trade time, never
     answers."""
-    from collimate_spark.operators.joins import (
-        _auto_asof_day_grain,
-        asof_join_events_orders,
-    )
     from collimate_spark.catalog import load_table
+    from collimate_spark.operators import joins as J
 
-    assert _auto_asof_day_grain(load_table(spark, "events", sf_dir)) is False
-    month = asof_join_events_orders(spark, sf_dir, day_grain=False).collect()
-    day = asof_join_events_orders(spark, sf_dir, day_grain=True).collect()
+    events = load_table(spark, "events", sf_dir)
+    assert J._auto_asof_day_grain(events) is False
+    month = J.asof_join_events_orders(spark, sf_dir).collect()
+    monkeypatch.setattr(J, "_ASOF_DAY_MIN_BYTES", 0)
+    monkeypatch.setattr(J, "_ASOF_ROWS_PER_KEY", 0)
+    assert J._auto_asof_day_grain(events) is True
+    day = J.asof_join_events_orders(spark, sf_dir).collect()
     assert month == day and len(month) > 0
 
 
@@ -189,59 +193,6 @@ def test_winsorize_broadcasts_bounds(spark, sf_dir):
 
     plan = executed_plan(winsorize_stats(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" in plan  # 1-row bounds crossJoin
-
-
-def test_winsorize_approx_mode_within_gk_bound(spark, sf_dir):
-    """The at-scale approx mode: the approx [p01, p99] bounds must sit
-    within the GK rank guarantee (rank error ≤ n / accuracy) of the
-    exact ranks, and the winsorized means must track the exact mode
-    closely (the clamp only moves the extreme 2% of mass)."""
-    import pyspark.sql.functions as F
-
-    from collimate_spark.catalog import load_table
-    from collimate_spark.operators.dataeng import (
-        APPROX_PCT_ACCURACY,
-        winsorize_stats,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir)
-    n = li.count()
-    pct = (
-        f"approx_percentile(l_extendedprice, array(0.01, 0.99), {APPROX_PCT_ACCURACY})"
-    )
-    p01, p99 = li.agg(F.expr(pct)).first()[0]
-    # exact rank of each approx bound; GK: |rank/n - q| ≤ 1/accuracy
-    # (+1 row of slack for duplicate-value rank plateaus)
-    tol = 1.0 / APPROX_PCT_ACCURACY + 1.0 / n
-    for q, b in ((0.01, p01), (0.99, p99)):
-        rank = li.filter(F.col("l_extendedprice") <= b).count()
-        assert abs(rank / n - q) <= tol, (q, b, rank / n)
-
-    exact = {r.l_returnflag: r.avg_wins for r in winsorize_stats(spark, sf_dir).collect()}
-    approx = {
-        r.l_returnflag: r.avg_wins
-        for r in winsorize_stats(spark, sf_dir, approx=True).collect()
-    }
-    assert exact.keys() == approx.keys()
-    for k in exact:
-        assert abs(exact[k] - approx[k]) / abs(exact[k]) < 1e-3
-
-
-def test_encoding_advisor_approx_mode_same_recommendations(spark, sf_dir):
-    """approx=True (GK sketch over the full delta stream + HLL distinct)
-    must reproduce the exact mode's encoding recommendation per column —
-    the advisor's decisions sit far from the thresholds."""
-    from collimate_spark.operators.dataeng import encoding_advisor_lineitem
-
-    exact = {
-        r.col_name: r.encoding
-        for r in encoding_advisor_lineitem(spark, sf_dir).collect()
-    }
-    approx = {
-        r.col_name: r.encoding
-        for r in encoding_advisor_lineitem(spark, sf_dir, approx=True).collect()
-    }
-    assert exact == approx
 
 
 def test_weighted_sample_is_take_ordered(spark, sf_dir):
@@ -721,136 +672,6 @@ def test_gdpr_shuffle_fallback_identical(spark, sf_dir):
     assert fallback == baseline
 
 
-def test_mad_outliers_approx_mode_within_gk_bound(spark, sf_dir):
-    """approx=True swaps both grouped medians for GK sketches.
-    approx_percentile returns an actual data value (no interpolation),
-    so the guarantee to pin is RANK, not value: each approx median's
-    rank within its group must sit within the GK bound of 0.5, the MAD
-    likewise over residuals against that median, and the fence count may
-    differ from exact only marginally."""
-    import pandas as pd
-
-    from collimate_spark.catalog import load_table
-    from collimate_spark.operators.dataeng import APPROX_PCT_ACCURACY
-    from collimate_spark.operators.stats import mad_outliers
-
-    spark.catalog.clearCache()
-    exact = {r.event_type: r for r in mad_outliers(spark, sf_dir).collect()}
-    approx = {
-        r.event_type: r for r in mad_outliers(spark, sf_dir, approx=True).collect()
-    }
-    assert exact.keys() == approx.keys()
-
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .select("event_type", "value")
-        .toPandas()
-    )
-    for k, grp in ev.groupby("event_type"):
-        vals = grp["value"].dropna().to_numpy()
-        n = len(vals)
-        tol = 1.0 / APPROX_PCT_ACCURACY + 1.0 / n  # GK + rounding slack
-        med = approx[k].median_value  # rounded to 4dp; ranks unaffected
-        assert abs((vals <= med + 1e-4).sum() / n - 0.5) <= tol + 0.5 / n, k
-        absdev = abs(vals - med)
-        mad = approx[k].mad
-        assert abs((absdev <= mad + 1e-3).sum() / n - 0.5) <= tol + 1.0 / n, k
-        assert exact[k].n == approx[k].n
-        # a rank-bounded median shift can only flip rows hugging the fence
-        assert abs(exact[k].n_outliers - approx[k].n_outliers) <= max(
-            2, int(0.01 * exact[k].n)
-        )
-
-
-def test_agg_percentile_disc_approx_rank_bound(spark, sf_dir):
-    """approx=True swaps both percentile_disc buffers for GK sketches
-    (O(accuracy) state per group instead of every value). GK returns an
-    actual data value — the *disc* contract survives — so pin (1) that
-    each approx result IS a member of its group, and (2) that its rank
-    interval overlaps [q - ε, q + ε] for ε = 1/accuracy. With ties a
-    value occupies a rank SPAN [#(<v)/n, #(≤v)/n]; the bound holds when
-    that span intersects the tolerance band, not when the max rank does."""
-    from collimate_spark.catalog import load_table
-    from collimate_spark.operators.dataeng import APPROX_PCT_ACCURACY
-    from collimate_spark.operators.grouped import agg_percentile_disc
-
-    exact = {r.l_returnflag: r for r in agg_percentile_disc(spark, sf_dir).collect()}
-    approx = {
-        r.l_returnflag: r
-        for r in agg_percentile_disc(spark, sf_dir, approx=True).collect()
-    }
-    assert exact.keys() == approx.keys()
-
-    li = (
-        load_table(spark, "lineitem", sf_dir)
-        .select("l_returnflag", "l_quantity", "l_extendedprice")
-        .toPandas()
-    )
-    for k, grp in li.groupby("l_returnflag"):
-        for col, field, q in (
-            ("l_quantity", "p50_qty_disc", 0.5),
-            ("l_extendedprice", "p90_price_disc", 0.9),
-        ):
-            vals = grp[col].dropna().to_numpy()
-            n = len(vals)
-            v = float(getattr(approx[k], field))
-            assert (abs(vals - v) < 1e-9).any(), (k, field, "not a data value")
-            tol = 1.0 / APPROX_PCT_ACCURACY + 1.0 / n
-            lo_rank = (vals < v - 1e-9).sum() / n
-            hi_rank = (vals <= v + 1e-9).sum() / n
-            assert lo_rank <= q + tol and hi_rank >= q - tol, (k, field)
-
-
-def test_conversion_time_quantiles_approx_mode_within_gk_bound(spark, sf_dir):
-    """approx=True swaps p50/p90 for GK sketches. Recompute the per-user
-    click→next-purchase delays in pandas (the oracle recurrence) and pin
-    each approx quantile's RANK within its bucket to the GK bound —
-    approx_percentile returns a real delay value, not an interpolation,
-    so value-equality with exact mode is not the contract."""
-    from collimate_spark.catalog import load_table
-    from collimate_spark.operators.dataeng import APPROX_PCT_ACCURACY
-    from collimate_spark.operators.events import conversion_time_quantiles
-
-    exact = {
-        r.user_bucket: r for r in conversion_time_quantiles(spark, sf_dir).collect()
-    }
-    approx = {
-        r.user_bucket: r
-        for r in conversion_time_quantiles(spark, sf_dir, approx=True).collect()
-    }
-    assert exact.keys() == approx.keys()
-    for k in exact:
-        assert exact[k].n_conversions == approx[k].n_conversions
-        assert exact[k].max_s == approx[k].max_s
-
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .select("user_id", "ts", "event_id", "event_type")
-        .toPandas()
-    )
-    ev = ev[ev.event_type.isin(["click", "purchase"])].sort_values(
-        ["user_id", "ts", "event_id"]
-    )
-    delays: dict[int, list[float]] = {}
-    for uid, grp in ev.groupby("user_id"):
-        nxt = None
-        for row in grp.iloc[::-1].itertuples():
-            if row.event_type == "purchase":
-                nxt = row.ts
-            elif nxt is not None:
-                delays.setdefault(int(uid) % 5, []).append(
-                    (nxt - row.ts).total_seconds()
-                )
-    for k, ds in delays.items():
-        n = len(ds)
-        assert approx[k].n_conversions == n
-        tol = 1.0 / APPROX_PCT_ACCURACY + 1.0 / n
-        for q, field in ((0.5, "p50_s"), (0.9, "p90_s")):
-            a = getattr(approx[k], field)  # rounded to 2dp
-            rank = sum(1 for d in ds if d <= a + 0.006) / n
-            assert abs(rank - q) <= tol + 1.0 / n, (k, field, a, rank)
-
-
 @pytest.mark.parametrize(
     "name",
     [
@@ -974,11 +795,9 @@ def test_window_range_frame_auto_gate(spark, sf_dir, monkeypatch):
     the two-level path and produce the identical result."""
     from collimate_spark.operators import windows as W
 
-    auto_df = W.window_range_frame(spark, sf_dir)
-    single = W.window_range_frame(spark, sf_dir, two_level=False)
-    # bench-scale auto = single-level: plans match feature-for-feature
-    assert auto_df.schema == single.schema
-    assert "unionbyname" not in auto_df._jdf.queryExecution().analyzed().toString().lower()
+    # bench-scale auto = single-level: no two-level union in the plan
+    single = W.window_range_frame(spark, sf_dir)
+    assert "Union" not in single._jdf.queryExecution().analyzed().toString()
 
     monkeypatch.setattr(W, "_TWO_LEVEL_MIN_BYTES", 1)
     monkeypatch.setattr(W, "_TWO_LEVEL_ROWS_PER_PARTITION", 10)

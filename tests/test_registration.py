@@ -44,3 +44,17 @@ def test_bench_set_is_the_registry():
     assert len(bench_set) == len(set(bench_set)), "query benched twice"
     assert set(bench_set) == registered
     assert set(bench.BENCH_QUERIES) <= registered
+
+
+def test_every_query_takes_exactly_spark_and_sf_dir():
+    """The driver calls every query as ``(spark, sf_dir)``: a query with a
+    further parameter has a second plan no caller reaches and no oracle
+    checks."""
+    import inspect
+
+    extra = sorted(
+        name
+        for name, f in all_queries().items()
+        if list(inspect.signature(f).parameters) != ["spark", "sf_dir"]
+    )
+    assert not extra, f"queries with parameters beyond (spark, sf_dir): {extra}"

@@ -74,3 +74,21 @@ def test_baseline_holds_each_sweep_marker_pair_once():
     known = {v for n, v in vars(scale_sweep).items() if n.endswith(("MARK_BEGIN", "MARK_END"))}
     in_doc = set(re.findall(r"<!-- [\w-]*-sweep:(?:begin|end) -->", text))
     assert in_doc <= known, sorted(in_doc - known)
+
+
+def test_unknown_flag_exits_before_any_work(monkeypatch):
+    """An unknown flag is a usage error (exit 2) raised before any slice
+    is built or cell subprocess started — a mistyped option must never
+    let ``--update-baseline`` run a default sweep and rewrite
+    BASELINE.md."""
+    import pytest
+
+    def no_work(*a, **k):
+        raise AssertionError("sweep work started on a usage error")
+
+    monkeypatch.setattr(scale_sweep, "_ensure_scaled", no_work)
+    monkeypatch.setattr(scale_sweep, "_cell", no_work)
+    monkeypatch.setattr(scale_sweep.subprocess, "Popen", no_work)
+    with pytest.raises(SystemExit) as exc:
+        scale_sweep.main(["--decade", "3"])
+    assert exc.value.code == 2

@@ -5,14 +5,12 @@ Misra-Gries superset guarantee under adversarial skew."""
 from __future__ import annotations
 
 import os
-import tempfile
 from datetime import datetime
 
 import pyspark.sql.functions as F
 
 
-def _write_events(spark, rows):
-    d = tempfile.mkdtemp()
+def _write_events(spark, d, rows):
     rows = [
         (eid, datetime.fromisoformat(ts), uid, et, v, p)
         for eid, ts, uid, et, v, p in rows
@@ -25,7 +23,7 @@ def _write_events(spark, rows):
     return d
 
 
-def test_pit_join_boundary_belongs_to_newer_segment(spark):
+def test_pit_join_boundary_belongs_to_newer_segment(spark, tmp_path):
     """A probe landing EXACTLY on a segment's valid_from must resolve to
     that (newer) segment — the [valid_from, valid_to) rule. Events at
     :00 and :20; with the +10-minute probe shift, event 1's probe lands
@@ -34,6 +32,7 @@ def test_pit_join_boundary_belongs_to_newer_segment(spark):
 
     d = _write_events(
         spark,
+        str(tmp_path),
         [
             (1, "2024-01-01 00:00:00", 7, "A", 1.0, "{}"),
             (2, "2024-01-01 00:10:00", 7, "B", 1.0, "{}"),
@@ -49,13 +48,14 @@ def test_pit_join_boundary_belongs_to_newer_segment(spark):
     assert got[3] == "B"
 
 
-def test_pit_join_probe_before_later_segment_keeps_older(spark):
+def test_pit_join_probe_before_later_segment_keeps_older(spark, tmp_path):
     """A probe strictly inside the FIRST segment stays with it even when
     a later segment exists."""
     from collimate_spark.operators.dataeng import pit_join_scd2
 
     d = _write_events(
         spark,
+        str(tmp_path),
         [
             (1, "2024-01-01 00:00:00", 3, "A", 1.0, "{}"),
             (2, "2024-01-01 00:25:00", 3, "C", 1.0, "{}"),
@@ -142,7 +142,7 @@ def test_fifo_allocation_conserves_stock(spark, sf_dir):
         assert r.n_short <= 1, "FIFO with one lot can split at most one line"
 
 
-def test_kaplan_meier_crafted_curve(spark):
+def test_kaplan_meier_crafted_curve(spark, tmp_path):
     """Hand-computed KM curve on crafted lifetimes, covering the edge
     the real data may miss: censored-only durations, where the risk set
     shrinks but the survival curve must stay flat. Corpus max = day 40,
@@ -150,8 +150,6 @@ def test_kaplan_meier_crafted_curve(spark):
     churn events; 35 and 40 are right-censored."""
     import datetime as dt
     import math
-    import os
-    import tempfile
 
     from collimate_spark.operators.stats import kaplan_meier_retention
 
@@ -170,7 +168,7 @@ def test_kaplan_meier_crafted_curve(spark):
     user(3, 0, 20)   # churned, duration 20
     user(4, 0, 35)   # censored, duration 35
     user(5, 0, 40)   # censored, duration 40
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     spark.createDataFrame(
         rows,
         "event_id: long, ts: timestamp_ntz, user_id: long, "
@@ -189,12 +187,10 @@ def test_kaplan_meier_crafted_curve(spark):
     assert math.isclose(got[40].survival, 0.4)
 
 
-def test_kaplan_meier_terminal_death_hits_zero(spark):
+def test_kaplan_meier_terminal_death_hits_zero(spark, tmp_path):
     """When the largest duration's subjects all churn, 1 - d/n = 0 and
     the survival curve must end at exactly 0.0 (the LN(0) guard)."""
     import datetime as dt
-    import os
-    import tempfile
 
     from collimate_spark.operators.stats import kaplan_meier_retention
 
@@ -206,7 +202,7 @@ def test_kaplan_meier_terminal_death_hits_zero(spark):
     # corpus max must exceed both lasts by >7d so both are churn events
     rows.append((99, base + dt.timedelta(days=30), 3, "view", 1.0, "{}"))
     rows.append((100, base + dt.timedelta(days=30), 3, "view", 1.0, "{}"))
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     spark.createDataFrame(
         rows,
         "event_id: long, ts: timestamp_ntz, user_id: long, "

@@ -7,7 +7,6 @@ and leaves the other's per-file range at ~the full domain."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 
@@ -32,7 +31,7 @@ def _file_ranges(spark, path):
     return agg["rx"], agg["ry"]
 
 
-def test_zorder_layout_bounds_both_dims(spark, sf_dir):
+def test_zorder_layout_bounds_both_dims(spark, sf_dir, tmp_path):
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     pts = li.select(
         (F.col("l_orderkey") % DOMAIN).cast("int").alias("x"),
@@ -40,9 +39,8 @@ def test_zorder_layout_bounds_both_dims(spark, sf_dir):
     )
     zed = pts.withColumn("z", zorder_value(F.col("x"), F.col("y")))
 
-    base = tempfile.mkdtemp()
-    z_path = os.path.join(base, "byz")
-    x_path = os.path.join(base, "byx")
+    z_path = str(tmp_path / "byz")
+    x_path = str(tmp_path / "byx")
     (
         zed.repartitionByRange(N_FILES, "z")
         .sortWithinPartitions("z")
