@@ -25,11 +25,10 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from collimate_spark.catalog import DEFAULT_SF_DIR as SF_DIR  # noqa: E402
 from collimate_spark.operators import all_queries  # noqa: E402
 from collimate_spark.scratch import clear_scratch  # noqa: E402
 from collimate_spark.session import get_session  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline set: covers scan/agg/join/window/dedup/similarity/text/events.
 BENCH_QUERIES = [

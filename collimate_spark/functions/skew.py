@@ -1,4 +1,4 @@
-"""Skew-handling join utilities.
+"""Skew-handling and join-strategy utilities.
 
 AQE's skew-join splitting (on by default in session.py) handles most skew
 at runtime by splitting oversized shuffle partitions. ``salted_join``
@@ -10,12 +10,25 @@ Mechanics: left rows get a random salt in [0, n_salts); right rows are
 replicated once per salt value; the join key becomes (key, salt), so a hot
 key's rows spread over n_salts tasks. Cost: right side inflates n_salts× —
 use only when the right side is the smaller (but not broadcastable) one.
+
+``fits_broadcast`` is the size gate for the other lever: hint a broadcast
+for a measured, data-sized side only while it fits under the session's
+broadcast threshold, and leave the shuffle join beyond it.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+
+def fits_broadcast(spark: SparkSession, n_rows: int, row_bytes: int) -> bool:
+    """True when ``n_rows`` rows of about ``row_bytes`` each fit under
+    spark.sql.autoBroadcastJoinThreshold — Spark's own parsed value, so
+    every form the conf accepts ('10485760', '10MB', '1g') reads the
+    same; -1 (broadcast disabled) counts as 0 bytes."""
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return n_rows * row_bytes <= max(threshold, 0)
 
 
 def salted_join(

@@ -602,95 +602,24 @@ def ingest(
     return apply_manifest(df, manifest), manifest
 
 
-def dict_encode(
-    df: DataFrame, columns: list[str]
-) -> tuple[DataFrame, dict[str, list]]:
-    """Explicit first-seen-order dictionary codes — the parity mode for
-    the reference's `.k8/.k16` code buffers + `.key` JSON decoders
-    (index.js:615-622; codes assigned in order of first encounter,
-    index.js:330-334). By default we do NOT hand-roll code columns
-    (Parquet dictionary pages already give the storage win — SURVEY
-    §1.4); this opt-in exists for byte-level interop with consumers of
-    the reference's layout.
-
-    Distributed first-seen order: tag rows with
-    ``monotonically_increasing_id`` (increasing along the scan's
-    partition order, i.e. file order for a deterministic file layout),
-    take min(rowid) per value, rank ascending → code. The decoder
-    (index = code → value) is collected to the driver — bounded by the
-    categorical threshold (≤ 65536 entries by definition), so this is
-    metadata, not data. NULL is a real dictionary entry (null-safe
-    join), matching the reference's behavior of encoding the null token
-    like any other value.
-
-    Returns (df + one ``<col>__code`` int column per input column,
-    {col: decoder list}).
-    """
-    from pyspark.sql import Window
-
-    out = df.withColumn("__rowid", F.monotonically_increasing_id())
-    decoders: dict[str, list] = {}
-    for c in columns:
-        # dictionary build: one agg over the data; the rank window runs
-        # on ≤ threshold rows (driver-broadcast scale, not data scale)
-        d = (
-            out.groupBy(F.col(c).alias("__val"))
-            .agg(F.min("__rowid").alias("__first"))
-            .withColumn("__code", F.row_number().over(Window.orderBy("__first")) - 1)
-            .select("__val", "__code")
-        )
-        decoders[c] = [r["__val"] for r in d.orderBy("__code").collect()]
-        out = (
-            out.join(F.broadcast(d), out[c].eqNullSafe(d["__val"]), "left")
-            .withColumn(f"{c}__code", F.col("__code").cast("int"))
-            .drop("__val", "__code")
-        )
-    return out.drop("__rowid"), decoders
-
-
-def code_width(n_values: int) -> str:
-    """k8 vs k16 decoder-width rule (the reference's *intent*: 8-bit
-    codes until overflow, then 16-bit — its actual promotion guard is
-    latently broken, SURVEY §1.4; we implement the clean rule)."""
-    return "k8" if n_values <= 256 else "k16"
-
-
 def to_columnar(
     df: DataFrame,
     outdir: str,
     manifest: Manifest | None = None,
     write_manifest: bool = False,
     partition_cols: list[str] | None = None,
-    dict_codes: bool = False,
 ) -> None:
     """Write the typed columnar store: Parquet (typed, dictionary-encoded
     per column chunk, splittable, compressed — the role of the reference's
     per-column TypedArray dumps + .key decoders). Optional manifest.json
     plays the index.json role; ``partition_cols`` adds hive partitioning
-    (the scan-pruning lever at 100 TB — see DEPLOY.md); ``dict_codes``
-    additionally materializes first-seen-order ``<col>__code`` columns
-    for the manifest's categorical string columns plus a ``_dicts.json``
-    decoder file (the `.key` role)."""
-    dicts: dict[str, list] | None = None
-    if dict_codes and manifest is not None:
-        cat_cols = [
-            p.sane_name
-            for p in manifest.columns
-            if p.categorical and p.logical_type == "str"
-        ]
-        if cat_cols:
-            df, dicts = dict_encode(df, cat_cols)
+    (the scan-pruning lever at 100 TB — see DEPLOY.md). The reference's
+    own `.k8/.k16/.key` layout is written by
+    ``sources.legacy_store.write_legacy_store``."""
     writer = df.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(outdir)
-    if dicts is not None:
-        with open(os.path.join(outdir, "_dicts.json"), "w") as fh:
-            json.dump(
-                {c: {"width": code_width(len(v)), "values": v} for c, v in dicts.items()},
-                fh,
-                indent=1,
-            )
     if write_manifest and manifest is not None:
         # underscore prefix: ignored by Spark/Hadoop file discovery (like
         # _SUCCESS), so the store dir stays readable as plain Parquet
@@ -727,14 +656,6 @@ def main(argv: list[str] | None = None) -> None:
         "by (narrow per-file min/max ranges -> footer-stats file skipping)",
     )
     ap.add_argument(
-        "-k",
-        "--dict-codes",
-        action="store_true",
-        help="materialize first-seen-order dictionary code columns + "
-        "_dicts.json decoders for categorical string columns (the "
-        "reference's .k8/.k16/.key parity mode)",
-    )
-    ap.add_argument(
         "-s",
         "--sample",
         type=float,
@@ -759,17 +680,14 @@ def main(argv: list[str] | None = None) -> None:
     if args.cluster_by:
         from collimate_spark.sources.storage import write_range_clustered
 
-        if parts or args.dict_codes:
-            ap.error("--cluster-by cannot combine with --partition-by/--dict-codes")
+        if parts:
+            ap.error("--cluster-by cannot combine with --partition-by")
         write_range_clustered(typed, outdir, args.cluster_by.split(","))
         if args.index:
             with open(os.path.join(outdir, "_manifest.json"), "w") as fh:
                 json.dump(manifest.to_dict(), fh, indent=1)
     else:
-        to_columnar(
-            typed, outdir, manifest,
-            write_manifest=args.index, partition_cols=parts, dict_codes=args.dict_codes,
-        )
+        to_columnar(typed, outdir, manifest, write_manifest=args.index, partition_cols=parts)
     if args.verbose:
         phases = {
             "read_raw_s": round(t1 - t0, 3),

@@ -28,13 +28,13 @@ from collimate_spark.scratch import scache
 from collimate_spark.functions import fast_text
 from collimate_spark.functions import text as X
 from collimate_spark.functions import vectors as V
-from collimate_spark.functions.pairs import blocked_pair_cosines, bounded_self_pairs
+from collimate_spark.functions.pairs import blocked_pair_cosines, bucket_pairs
+from collimate_spark.functions.skew import fits_broadcast
 
 JACCARD_THRESHOLD = 0.8
 MINHASH_K = 128
 LSH_BANDS = 32
 LSH_ROWS = 4  # 32 bands × 4 rows = 128 hashes; P(miss | j=0.8) ≈ 5e-8
-BUCKET_CAP = 1024  # max members whose pairs one task may generate
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,8 +177,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     as 64-bit hashes (see _shingle_sets)."""
     from pyspark.sql import Window
 
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
     shingled = _shingle_sets(spark, sf_dir).transform(scache)
     exploded = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
     # freq is deliberately NOT cached: caching it defeats the cache
@@ -190,11 +188,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and at runtime freq computes once inside its single exchange.
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
     # 8-byte hash + 8-byte count ≈ 48 B/row in a broadcast hashed relation
-    freq_side = (
-        F.broadcast(freq)
-        if freq.count() * 48 <= _broadcast_threshold_bytes(spark)
-        else freq
-    )
+    freq_side = F.broadcast(freq) if fits_broadcast(spark, freq.count(), 48) else freq
     w = Window.partitionBy("doc_id").orderBy(F.col("freq").asc(), F.col("shingle").asc())
     prefix = (
         exploded.join(freq_side, "shingle")
@@ -247,149 +241,11 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(scache)
     )
     banded = merged.select("doc_id", F.posexplode("bh").alias("band", "band_hash"))
-    candidates = _bucket_pairs(banded, "band", "band_hash")
+    candidates = bucket_pairs(banded, "band", "band_hash")
     # passing `merged` itself (extra bh column projected away inside)
     # lets _verified_jaccard_pairs' scache hit the SAME plan — one
     # cached copy feeds both the band and the verify branches
     return _verified_jaccard_pairs(candidates, merged)
-
-
-def _bucket_pairs(
-    banded: DataFrame,
-    *bucket_cols: str,
-    cap: int = BUCKET_CAP,
-    payload: str | None = None,
-) -> DataFrame:
-    """Candidate pairs from bucket membership, with bounded per-task work,
-    in ONE pipeline (no plan branch re-executes the upstream kernel).
-
-    Buckets with ≤ cap members get one (ci=0, cj=0) group — the classic
-    collect-members-and-emit-pairs aggregation. A bucket with s > cap
-    members (a degenerate hot band: thousands of near-empty docs sharing
-    a signature) is split into nch = ⌈s/cap⌉ hash chunks, and each member
-    is emitted to its chunk-pair groups — side 'a' of (c, j≥c), side 'b'
-    of (i<c, c) — so the same groupBy produces every unordered pair
-    exactly once with ≤ ~cap² candidates per group, instead of one
-    executor-resident s-member array emitting s² pairs. Exact: no
-    candidates are dropped, only the task shape changes.
-
-    Cost shape: one window count over the bucket key + one grouped
-    aggregation; replication factor is nch per member — 1 for every
-    non-degenerate bucket. Input must be unique per (bucket key, doc_id).
-
-    ``payload`` optionally rides along: pairs come back with
-    (<payload>_a, <payload>_b) columns, sparing the caller a re-join
-    against a possibly expensive-to-recompute source relation (the
-    verify data travels with the candidate).
-
-    Callers needing a verification predicate pushed before the final
-    distinct should fuse it as a streamed equi-join instead (the
-    dedup_simhash shape): when band buckets saturate the candidate
-    multiset dwarfs the survivor set (measured: 217M candidates → 24k
-    survivors at 500k docs, 134s mostly in the distinct's exchange), and
-    a streamed codegen join with the fused predicate measured ~10×
-    faster than filtering these interpreted HOF pair structs."""
-    from pyspark.sql import Window
-
-    wb = Window.partitionBy(*bucket_cols)
-    cols = [*bucket_cols, "doc_id"] + ([payload] if payload else [])
-    sized = (
-        banded.select(*cols)
-        .withColumn("__n", F.count(F.lit(1)).over(wb))
-        .filter(F.col("__n") > 1)  # singleton buckets pair with nothing
-        .withColumn(
-            "__nch",
-            F.greatest(F.lit(1), F.ceil(F.col("__n") / F.lit(cap))).cast("int"),
-        )
-        .withColumn("__c", F.pmod(F.xxhash64("doc_id"), F.col("__nch")).cast("int"))
-    )
-    # tagged chunk-pair replicas: side 0 = 'a' rows of groups (c, j≥c),
-    # side 1 = 'b' rows of groups (i<c, c); nch=1 → a single (0,0) emit
-    a_part = F.transform(
-        F.sequence(F.col("__c"), F.col("__nch") - 1),
-        lambda j: F.struct(
-            F.col("__c").alias("ci"), j.cast("int").alias("cj"), F.lit(0).alias("side")
-        ),
-    )
-    b_part = F.filter(
-        F.transform(
-            F.sequence(F.lit(0), F.col("__c")),
-            lambda i: F.struct(
-                i.cast("int").alias("ci"), F.col("__c").alias("cj"), F.lit(1).alias("side")
-            ),
-        ),
-        lambda s: s.getField("ci") < F.col("__c"),
-    )
-    # fast path for the overwhelmingly common nch=1 row: a literal
-    # one-element (0,0,side=0) array instead of the interpreted
-    # sequence/transform/filter/concat pipeline (HOFs don't codegen;
-    # at sf0.1 every bucket is under cap, so this is every row)
-    single = F.array(
-        F.struct(
-            F.lit(0).alias("ci"), F.lit(0).alias("cj"), F.lit(0).alias("side")
-        )
-    )
-    emit_arr = F.when(F.col("__nch") == 1, single).otherwise(F.concat(a_part, b_part))
-    emits = sized.select(*cols, F.explode(emit_arr).alias("t")).select(
-        *cols, F.col("t.ci").alias("ci"), F.col("t.cj").alias("cj"), F.col("t.side").alias("side")
-    )
-
-    member = F.struct(
-        F.col("side"), F.col("doc_id"), *([F.col(payload)] if payload else [])
-    )
-
-    def _pair(x, y):
-        # orient (doc_a < doc_b); payloads follow their ids
-        xid, yid = x.getField("doc_id"), y.getField("doc_id")
-        fields = [
-            F.least(xid, yid).alias("doc_a"),
-            F.greatest(xid, yid).alias("doc_b"),
-        ]
-        if payload:
-            xp, yp = x.getField(payload), y.getField(payload)
-            fields += [
-                F.when(xid < yid, xp).otherwise(yp).alias("__pa"),
-                F.when(xid < yid, yp).otherwise(xp).alias("__pb"),
-            ]
-        return F.struct(*fields)
-
-    # hoist the side splits into a Project so each is evaluated ONCE per
-    # group — referencing filter(ms, ...) inline inside the nested pair
-    # lambdas re-evaluates the O(s) filter per inner element (O(s³) per
-    # bucket on the interpreted HOF path; measured 1.4s → 0.6s at sf0.1
-    # for dedup_simhash's 365-member hot bucket)
-    a_side, b_side = F.col("__aside"), F.col("__bside")
-    # diagonal group (ci==cj): within-list pairs of the sorted a-side;
-    # off-diagonal: full a×b cross product
-    diag = F.flatten(
-        F.transform(
-            a_side,
-            lambda x, i: F.transform(
-                F.slice(a_side, i + 2, F.size(a_side)), lambda y: _pair(x, y)
-            ),
-        )
-    )
-    cross = F.flatten(F.transform(a_side, lambda x: F.transform(b_side, lambda y: _pair(x, y))))
-    out = (
-        # no array_sort: pair orientation (least/greatest) + the final
-        # distinct make the output deterministic regardless of set order
-        emits.groupBy(*bucket_cols, "ci", "cj")
-        .agg(F.collect_set(member).alias("ms"))
-        .select(
-            "ci",
-            "cj",
-            F.filter(F.col("ms"), lambda s: s.getField("side") == 0).alias("__aside"),
-            F.filter(F.col("ms"), lambda s: s.getField("side") == 1).alias("__bside"),
-        )
-        .select(
-            F.explode(F.when(F.col("ci") == F.col("cj"), diag).otherwise(cross)).alias("p")
-        )
-        .select("p.*")
-    )
-    out = out.distinct()
-    if payload:
-        out = out.withColumnsRenamed({"__pa": f"{payload}_a", "__pb": f"{payload}_b"})
-    return out
 
 
 def dedup_minhash_lsh_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -499,7 +355,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Candidate generation is a STREAMED self equi-join on (band, key)
     # with the hamming predicate fused into whole-stage codegen — r8
     # measured this shape at ~10× the interpreted HOF pair-struct path
-    # (_bucket_pairs remains the right shape only when the pair set must
+    # (pairs.bucket_pairs remains the right shape only when the pair set must
     # be materialized). The banded frame is cached: it feeds both join
     # sides (one fingerprint kernel pass, not two).
     banded = banded.transform(scache)
@@ -587,7 +443,6 @@ ORDER BY doc_a, doc_b
 
 
 EMB_COSINE_THRESHOLD = 0.4
-EMB_BLOCK_CAP = 1024  # max cluster members whose pairs one task generates
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -595,16 +450,14 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``label`` cluster id (IVF-style partition pruning: only same-cluster
     pairs are compared — the 100 TB answer to all-pairs cosine).
 
-    Within-cluster pairing goes through the chunked self-join
-    (functions/pairs.bounded_self_pairs), so a cluster larger than
-    ``EMB_BLOCK_CAP`` is split into hash chunks and its pairs spread over
+    Within-cluster pairing goes through the chunk grid of
+    functions/pairs (``blocked_pair_cosines``), so a cluster larger than
+    ``pairs.PAIR_CAP`` is split into hash chunks and its pairs spread over
     ⌈s/cap⌉² bounded tasks instead of one quadratic straggler — output is
     identical (the chunk grid covers every unordered pair exactly once);
     only the task shape changes. Cluster sizes come from a broadcast
     10-row count."""
     emb = load_table(spark, "embeddings", sf_dir)
-    sizes = emb.groupBy("label").agg(F.count(F.lit(1)).alias("__n"))
-    sized = emb.join(F.broadcast(sizes), "label")
     # r13 (guide §8): pair cosines via the blocked Gram kernel — only
     # VECTOR rows are shuffled (⌈s/cap⌉+1-way replication, the same as
     # the old join's two exploded sides) and the ≤ cap×cap pair
@@ -616,9 +469,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float64 left folds — pinned in test_skew.py), so the 6dp filter
     # and 4dp output are unchanged. Measured 4.93 s → see
     # OPTIMIZATION_r13.md; the win grows with cluster size.
-    scored = blocked_pair_cosines(
-        sized, ["label"], "vec_id", "embedding", "__n", cap=EMB_BLOCK_CAP
-    )
+    scored = blocked_pair_cosines(emb, ["label"], "vec_id", "embedding")
     return (
         scored.filter(F.round(F.col("cos_raw"), 6) >= EMB_COSINE_THRESHOLD)
         .select(
@@ -663,7 +514,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     other member is the prune list.
 
     Composition of the in-tree scale machinery, all stages 100 TB-shaped:
-    cluster-blocked pair generation via bounded_self_pairs (IVF-style
+    cluster-blocked pair generation via blocked_pair_cosines (IVF-style
     pruning — only same-label pairs, hash-chunked above the cap so no
     quadratic straggler), pointer-doubling connected components
     (propagate_components, O(log d) rounds), and a 10×64 centroid table
@@ -688,16 +539,12 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         )
     )
-    sizes = emb.groupBy("label").agg(F.count(F.lit(1)).alias("__n"))
-    sized = emb.join(F.broadcast(sizes), "label")
     # r13: same blocked Gram kernel as dedup_embedding_cosine (guide §8)
     # — vectors shuffle once to their chunk-pair blocks instead of every
     # pair carrying both embeddings through the join, and the kernel's
     # folds are bit-identical to the old per-pair V.dot/V.norm (which
     # re-folded BOTH norms for every pair).
-    scored = blocked_pair_cosines(
-        sized, ["label"], "vec_id", "v", "__n", cap=EMB_BLOCK_CAP
-    )
+    scored = blocked_pair_cosines(emb, ["label"], "vec_id", "v")
     dup_pairs = (
         scored.filter(F.round(F.col("cos_raw"), 6) >= SEMDEDUP_TAU)
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
@@ -1046,16 +893,13 @@ def set_overlap_join_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq")).transform(scache)
     from pyspark.sql import Window
 
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
     # freq is VOCABULARY-sized (Heaps-law growth with the corpus —
     # unbounded at 100 TB), so its broadcast is SIZE-GATED (gdpr/kcore
     # pattern): cached, counted, hinted only under the session
     # threshold; beyond it the join degrades to a token-partitioned
     # shuffle (co-keyed already). ~16-char token + long ≈ 64 bytes/row
     # in a broadcast hashed relation.
-    freq_fits = freq.count() * 64 <= _broadcast_threshold_bytes(spark)
-    freq_side = F.broadcast(freq) if freq_fits else freq
+    freq_side = F.broadcast(freq) if fits_broadcast(spark, freq.count(), 64) else freq
 
     w = Window.partitionBy("doc_id").orderBy(F.col("freq").asc(), F.col("token").asc())
     prefix = (
@@ -1166,17 +1010,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (UnsafeRow shuffle cost is per FIELD — 8 B each plus header — so
     4→3 fields cuts the billion-row postings shuffle ~25%), and
     dst-side prunes unpack them with two codegen'd bitwise ops."""
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
     shingled = _shingle_sets(spark, sf_dir).transform(scache)
     exploded = shingled.select("doc_id", F.explode("shingles").alias("shingle"))
     freq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("freq"))
     # 8-byte hash + 8-byte count ≈ 48 B/row in a broadcast hashed relation
-    freq_side = (
-        F.broadcast(freq)
-        if freq.count() * 48 <= _broadcast_threshold_bytes(spark)
-        else freq
-    )
+    freq_side = F.broadcast(freq) if fits_broadcast(spark, freq.count(), 48) else freq
     # ONE doc-grained ranked index serves both join sides (cached: the
     # freq join and per-doc ordering run once). The rarest-first order is
     # computed row-locally — sort_array over one doc's (freq, shingle)

@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from collimate_spark.catalog import load_table
+from collimate_spark.functions.skew import fits_broadcast
 from collimate_spark.scratch import scache
 
 _DAMP = 0.85
@@ -208,7 +209,7 @@ def market_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # (long k, long c) row in a broadcast hashed relation ≈ 16 data
     # bytes + overhead; same conservative 48 B/row as asof_join_forward
-    fits = item_c.count() * 48 <= _broadcast_threshold_bytes(spark)
+    fits = fits_broadcast(spark, item_c.count(), 48)
     cx = item_c.select(F.col("k").alias("x"), F.col("c").alias("c_x"))
     cy = item_c.select(F.col("k").alias("y"), F.col("c").alias("c_y"))
     if fits:
@@ -312,34 +313,15 @@ KCORE_MAX_ROUNDS = 20
 _KCORE_ROW_BYTES = 16
 
 
-def _broadcast_threshold_bytes(spark: SparkSession) -> int:
-    """Parse spark.sql.autoBroadcastJoinThreshold ('10485760', '10MB',
-    '-1', ...) into bytes; -1 (broadcast disabled) maps to 0."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                      ("b", 1)):
-        if raw.endswith(suffix):
-            raw, mult = raw[: -len(suffix)], m
-            break
-    try:
-        n = int(float(raw)) * mult
-    except ValueError:
-        n = 10 << 20
-    return max(n, 0)
-
-
-def _semi_join_survivors(sym: DataFrame, alive: DataFrame, n_alive: int,
-                         threshold_bytes: int) -> DataFrame:
+def _semi_join_survivors(
+    spark: SparkSession, sym: DataFrame, alive: DataFrame, n_alive: int
+) -> DataFrame:
     """Edges with BOTH endpoints in the survivor set. Broadcasts the
-    survivor set only while it plausibly fits under the session's
+    survivor set only while its ``n_alive`` rows fit under the session's
     broadcast threshold; past that, plain left-semi joins (shuffle /
     sort-merge) — same semantics, no driver or executor broadcast
     ceiling at 100 TB vertex cardinalities."""
-    if n_alive * _KCORE_ROW_BYTES <= threshold_bytes:
+    if fits_broadcast(spark, n_alive, _KCORE_ROW_BYTES):
         return sym.join(F.broadcast(alive), "x", "left_semi").join(
             F.broadcast(alive.withColumnRenamed("x", "y")), "y", "left_semi"
         )
@@ -386,12 +368,11 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e.unionByName(
         e.select(F.col("y").alias("x"), F.col("x").alias("y"))
     ).transform(scache)  # columnar cache: localCheckpoint's RDD round-trip costs 2×
-    threshold = _broadcast_threshold_bytes(spark)
     alive = sym.select("x").distinct().localCheckpoint()
     n_prev = alive.count()  # bounded metadata: one long per round
     converged = False
     for _ in range(KCORE_MAX_ROUNDS):
-        live_edges = _semi_join_survivors(sym, alive, n_prev, threshold)
+        live_edges = _semi_join_survivors(spark, sym, alive, n_prev)
         keep = (
             live_edges.groupBy("x")
             .agg(F.count(F.lit(1)).alias("d"))
@@ -413,7 +394,7 @@ def kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             RuntimeWarning,
             stacklevel=2,
         )
-    final_edges = _semi_join_survivors(sym, alive, n_prev, threshold)
+    final_edges = _semi_join_survivors(spark, sym, alive, n_prev)
     return (
         final_edges.groupBy(F.col("x").alias("node"))
         .agg(F.count(F.lit(1)).alias("core_degree"))

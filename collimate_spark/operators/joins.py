@@ -16,6 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from collimate_spark.catalog import load_table
+from collimate_spark.functions.skew import fits_broadcast
 from collimate_spark.scratch import scache
 
 
@@ -430,11 +431,9 @@ def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "day", "carry_ts")
         .transform(scache)  # measured once for the gate, reused by the join
     )
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
     # (long, date, ts) row in a broadcast hashed relation ≈ 20 data
     # bytes + overhead
-    fits = carry.count() * 48 <= _broadcast_threshold_bytes(spark)
+    fits = fits_broadcast(spark, carry.count(), 48)
     carry_side = F.broadcast(carry) if fits else carry
     nxt = F.coalesce(F.col("asof_within"), F.col("carry_ts"))
     return (

@@ -19,6 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from collimate_spark.catalog import load_table
+from collimate_spark.functions.skew import fits_broadcast
 from collimate_spark.scratch import scache
 
 # (check_name, table, violation predicate as a Spark Column factory) — the
@@ -667,8 +668,6 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured key count vs the session broadcast threshold (same pattern
     as graph._semi_join_survivors); past the ceiling the join degrades
     to a shuffle instead of failing."""
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
     cohort = (
         load_table(spark, "customer", sf_dir)
         .filter(F.col("c_custkey") % 97 == 0)
@@ -722,7 +721,7 @@ def gdpr_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(scache)
     )
     n_keys = erased_order_keys.count()
-    fits = n_keys * _ERASE_KEY_ROW_BYTES <= _broadcast_threshold_bytes(spark)
+    fits = fits_broadcast(spark, n_keys, _ERASE_KEY_ROW_BYTES)
     report = (
         _audit(customer, "c_custkey", "customer")
         .unionByName(_audit(orders, "o_custkey", "orders"))

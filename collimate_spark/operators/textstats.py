@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from collimate_spark.catalog import load_table
 from collimate_spark.scratch import scache
 from collimate_spark.functions import text as X
+from collimate_spark.functions.skew import fits_broadcast
 
 # BPE-ish pre-tokenization: word pieces OR single non-word-non-space marks.
 BPE_REGEX = r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"
@@ -897,12 +898,9 @@ def lm_perplexity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table instead of re-exploding the corpus (guide §2.4: one fewer
     # full pass; values identical, sums of the same longs)
     left_c = pair_c.groupBy("w1").agg(F.sum("c12").alias("c1")).transform(scache)
-    from collimate_spark.operators.graph import _broadcast_threshold_bytes
-
-    threshold = _broadcast_threshold_bytes(spark)
     # two short strings + a long ≈ 40 data bytes + hashed-relation overhead
-    pair_side = F.broadcast(pair_c) if pair_c.count() * 80 <= threshold else pair_c
-    left_side = F.broadcast(left_c) if left_c.count() * 64 <= threshold else left_c
+    pair_side = F.broadcast(pair_c) if fits_broadcast(spark, pair_c.count(), 80) else pair_c
+    left_side = F.broadcast(left_c) if fits_broadcast(spark, left_c.count(), 64) else left_c
     return (
         grams.join(pair_side, ["w1", "w2"])
         .join(left_side, "w1")

@@ -255,7 +255,7 @@ def near_dup_candidates_batch(
     import os
 
     from collimate_spark.functions import fast_text
-    from collimate_spark.operators.dedup import _bucket_pairs
+    from collimate_spark.functions.pairs import bucket_pairs
 
     spark = batch.sparkSession
     bands = (
@@ -263,7 +263,7 @@ def near_dup_candidates_batch(
         .mapInPandas(fast_text.minhash_bands, fast_text.BAND_SCHEMA)
         .localCheckpoint(eager=True)  # probe + append + pair-gen reuse it
     )
-    within = _bucket_pairs(bands, "band", "band_hash").select(
+    within = bucket_pairs(bands, "band", "band_hash").select(
         "doc_a", "doc_b", F.lit("within_batch").alias("kind")
     )
     prior_exists = os.path.isdir(index_dir) and any(

@@ -51,6 +51,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from collimate_spark.catalog import DEFAULT_SF_DIR  # noqa: E402
+
 # The pair-emitting / candidate-join family. Multimodal pair ops are
 # excluded by construction: their asset universe is capped (asset_id <
 # 200) so corpus replication doesn't change their input. The embedding
@@ -93,7 +95,6 @@ SURFACE_OPS = [
     "ingest_csv_to_columnar",
 ]
 N_RUNS = 2
-BASE_DEFAULT = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCALED_DEFAULT = "/tmp/sf1m"
 SURFACE_BASE_DEFAULT = "/tmp/sf1m"
 SURFACE_SCALED_DEFAULT = "/tmp/sf10m"
@@ -306,7 +307,7 @@ def main(argv: list[str] | None = None) -> None:
     if args.surface:
         base, scaled, ops = SURFACE_BASE_DEFAULT, SURFACE_SCALED_DEFAULT, list(SURFACE_OPS)
     else:
-        base, scaled, ops = BASE_DEFAULT, SCALED_DEFAULT, list(OPS)
+        base, scaled, ops = DEFAULT_SF_DIR, SCALED_DEFAULT, list(OPS)
     base = args.base or base
     scaled = args.scaled or scaled
     if args.ops:

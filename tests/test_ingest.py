@@ -303,55 +303,6 @@ def test_small_input_skips_sampling(spark, tmp_path):
     assert m.n_rows == 3 and m.n_scanned == 3
 
 
-# --- F10: explicit dictionary-code parity mode (.k8/.k16/.key analog) ---
-def test_dict_codes_first_seen_order(spark, tmp_path):
-    """Codes must follow FIRST-SEEN order (reference index.js:330-334),
-    null is a real dictionary entry, and the decoder round-trips."""
-    import pyspark.sql.functions as F
-
-    from collimate_spark.ingest import code_width, dict_encode
-
-    rows = ["id,color"]
-    seq = ["blue", "red", "blue", "green", "-", "red", "amber", "green"]
-    for i, v in enumerate(seq):
-        rows.append(f"{i},{v}")
-    path = _write(tmp_path, "dc.csv", "\n".join(rows) + "\n")
-    typed, manifest = ingest(spark, path)
-    encoded, decoders = dict_encode(typed, ["color"])
-    # first-seen order over the typed column ('-' is a null token -> None)
-    assert decoders["color"] == ["blue", "red", "green", None, "amber"]
-    got = {r.id: r for r in encoded.collect()}
-    for i, v in enumerate(seq):
-        expect = None if v == "-" else v
-        assert decoders["color"][got[i].color__code] == expect
-    assert code_width(len(decoders["color"])) == "k8"
-    assert code_width(300) == "k16"
-
-
-def test_to_columnar_dict_codes_roundtrip(spark, tmp_path):
-    import json as _json
-
-    import pyspark.sql.functions as F
-
-    from collimate_spark.ingest import to_columnar
-
-    rows = ["k,grp"] + [f"{i},g{i % 5}" for i in range(50)]
-    path = _write(tmp_path, "dcs.csv", "\n".join(rows) + "\n")
-    typed, manifest = ingest(spark, path)
-    out = str(tmp_path / "store")
-    to_columnar(typed, out, manifest, write_manifest=True, dict_codes=True)
-    back = spark.read.parquet(out)
-    assert "grp__code" in back.columns
-    dicts = _json.load(open(f"{out}/_dicts.json"))
-    values = dicts["grp"]["values"]
-    assert dicts["grp"]["width"] == "k8"
-    # decode(code) == original for every row
-    decoded = [
-        (r.grp, values[r.grp__code]) for r in back.collect()
-    ]
-    assert all(orig == dec for orig, dec in decoded)
-
-
 # --- F11: incremental manifest merge (append-only feeds) ---
 def test_merge_manifests_widens_like_union_profile(spark, tmp_path):
     """Profiling two batches separately and merging must infer the same
