@@ -163,10 +163,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     return {name: load_table(spark, name, sf_dir) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so spark.sql() works over the
-    catalog — the engine's SQL front door."""
-    for name in TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)

@@ -446,7 +446,6 @@ ORDER BY doc_id, chunk_idx
 # ---------------------------------------------------------------------------
 # Temperature-scaled domain mixing
 
-MIX_TEMPERATURE = 0.5  # tau: c_s^tau re-weighting (tau<1 upweights small domains)
 MIX_TARGET_FRACTION = 0.5  # overall corpus fraction to keep
 
 
@@ -454,7 +453,8 @@ def domain_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled domain (source) re-sampling — the multilingual /
     multi-domain mixing rule (sample domain s with probability
     proportional to ``c_s^tau``, tau < 1 flattening the distribution so
-    small domains are not drowned out). Per-source keep-rate
+    small domains are not drowned out; here τ = ½, written as sqrt in
+    the query and its oracle). Per-source keep-rate
     ``p_s = min(1, (c_s^tau / sum c^tau) * N_target / c_s)`` is computed
     from the data in one tiny agg (|sources| rows), broadcast back, and
     each row keeps deterministically via an md5(doc_id) uniform — the

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from collimate_spark.catalog import load_table
 from collimate_spark.functions.quantiles import group_percentiles
 from collimate_spark.scratch import scache
+from collimate_spark.sources.storage import morton_interleave
 
 
 def scd2_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -418,17 +419,6 @@ ORDER BY p.event_id
 _Z_BITS = 10  # 10 bits per dimension → 20-bit z-values
 
 
-def zorder_value(x: F.Column, y: F.Column) -> F.Column:
-    """Interleave the low 10 bits of two non-negative ints into a Morton
-    z-value — pure shift/mask codegen, no UDF: bit i of x lands at 2i,
-    bit i of y at 2i+1."""
-    z = F.lit(0)
-    for i in range(_Z_BITS):
-        z = z + F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i)
-        z = z + F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1)
-    return z
-
-
 def zorder_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Morton-curve locality audit: z-order lineitem on
     (l_orderkey mod 1024, l_partkey mod 1024) and, per top-6-bit z range
@@ -447,7 +437,7 @@ def zorder_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
     x = (F.col("l_orderkey") % 1024).cast("int")
     y = (F.col("l_partkey") % 1024).cast("int")
-    seg = F.shiftright(zorder_value(x, y), 2 * _Z_BITS - 6)
+    seg = F.shiftright(morton_interleave([x, y], _Z_BITS), 2 * _Z_BITS - 6)
     return (
         li.select(x.alias("x"), y.alias("y"), seg.alias("z_segment"))
         .groupBy("z_segment")

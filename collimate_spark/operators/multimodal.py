@@ -353,7 +353,6 @@ _AFP_FRAME, _AFP_HOP = 512, 256  # → 15 frames → 14 delta rows
 _AFP_BANDS = 8  # spectral bands per frame
 # HK kernel emits (frames-1) x (bands-1) = 14 x 7 = 98 fingerprint bits
 # (adjacent-band differences drop one band; temporal delta drops one frame)
-AFP_BITS = 14 * (_AFP_BANDS - 1)
 _AFP_JOIN_BANDS = 14  # 7-bit join bands: pigeonhole-complete to hamming ≤ 13
 _AFP_MAX_HAM = 12
 

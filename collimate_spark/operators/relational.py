@@ -541,10 +541,10 @@ def union_by_name_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution union: two order 'snapshots' whose column sets
     drifted (the newer adds o_orderpriority, the older lacks it) combine
     via ``unionByName(allowMissingColumns=True)`` — position-independent,
-    missing columns null-filled. The query-level twin of
-    sources.storage.read_evolving (which does the same at the Parquet
-    footer level); both are how append-only pipelines survive additive
-    schema change without rewriting history."""
+    missing columns null-filled. The query-level twin of a
+    ``mergeSchema`` Parquet read (which does the same at the footer
+    level); both are how append-only pipelines survive additive schema
+    change without rewriting history."""
     orders = load_table(spark, "orders", sf_dir)
     old_snap = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"

@@ -1,55 +1,34 @@
-"""Storage layout for the columnar store: partitioned and bucketed writes.
+"""Storage layout for the columnar store: the layouts Spark's writer
+does not give in one call.
 
 At 100 TB the dominant costs are scan volume and shuffle volume; the
-storage layout is where both are won:
+storage layout is where both are won. Hive partitioning is
+``ingest.to_columnar(partition_cols=)`` and bucketing is
+``DataFrameWriter.bucketBy`` (tests/test_storage.py pins the pruned scan
+and the Exchange-free bucketed join); this module adds:
 
-- ``write_partitioned``: hive-style partition directories (e.g. by date) →
-  partition pruning eliminates scan volume for time-ranged queries.
-- ``write_bucketed`` / ``read_bucketed``: pre-shuffle the table once at
-  write time into N hash buckets on the join key; every subsequent join or
-  aggregation on that key runs WITHOUT an Exchange (verified by
-  tests/test_storage.py asserting the join plan is shuffle-free). This is
-  the Spark-native answer to the co-located join problem — pay the shuffle
-  once, reuse it forever.
+- ``write_range_clustered`` / ``write_zorder_clustered``: one range
+  shuffle at write so per-file min/max footer stats prune selective
+  scans, on one key or on the Morton interleave (``morton_interleave``)
+  of several.
+- ``replace_directory``: write a frame into a sibling directory, then
+  swap it in — the rewrite step of ``compact_small_files`` and the
+  streaming CDC apply.
+- ``write_versioned`` / ``read_versioned``: manifest-committed snapshots
+  with time travel.
 """
 
 from __future__ import annotations
 
+import json
+import math
+import os
+import shutil
+import uuid
+from functools import reduce
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Hive-partitioned Parquet: one directory per partition value.
-    Readers filtering on partition_cols scan only matching directories
-    (partition pruning — visible as 'PartitionFilters' in explain)."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Bucketed external table: hash-partitioned into n_buckets files on
-    bucket_cols (+ optionally sorted within buckets, enabling sort-merge
-    joins with neither shuffle nor sort)."""
-    writer = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
+from pyspark.sql import Column, DataFrame, SparkSession
 
 
 def write_range_clustered(
@@ -76,52 +55,24 @@ def write_range_clustered(
     )
 
 
-# Interchange formats the engine reads/writes natively. Parquet is the
-# canonical store (the reference's typed-binary-columnar analog); ORC is
-# the second columnar citizen (same pushdown/stats story, different
-# ecosystem); json/csv are row-interchange only — no pushdown, no stats —
-# kept for export paths. Avro needs the external spark-avro jar, which is
-# deliberately not assumed (import-gated in tests).
-INTERCHANGE_FORMATS = ("parquet", "orc", "json", "csv")
+def replace_directory(df: DataFrame, path: str) -> None:
+    """Write ``df`` as Parquet into a sibling of ``path``, then rename it
+    into place; ``path`` need not exist yet. ``df`` may read ``path``
+    itself: the sibling is complete before the old directory moves.
 
-
-def write_format(df: DataFrame, path: str, fmt: str, **options: str) -> None:
-    """Write ``df`` at ``path`` in any supported interchange format.
-    Columnar formats keep column stats + predicate pushdown; csv gets a
-    header by default so the reference's converter can round-trip it."""
-    if fmt not in INTERCHANGE_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {INTERCHANGE_FORMATS}")
-    writer = df.write.mode("overwrite").format(fmt)
-    if fmt == "csv":
-        writer = writer.option("header", True)
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    writer.save(path)
-
-
-def read_format(spark: SparkSession, path: str, fmt: str, schema=None) -> DataFrame:
-    """Read ``path`` back. Columnar formats carry their schema; csv/json
-    accept an explicit schema (ALWAYS pass one in production — schema
-    inference is an extra full scan)."""
-    if fmt not in INTERCHANGE_FORMATS:
-        raise ValueError(f"unsupported format {fmt!r}; one of {INTERCHANGE_FORMATS}")
-    reader = spark.read.format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    elif fmt in ("csv", "json"):
-        reader = reader.option("inferSchema", True)
-    return reader.load(path)
-
-
-def read_evolving(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Read Parquet batches whose schemas drifted (columns added over
-    time) as ONE DataFrame: mergeSchema unions the footer schemas and
-    back-fills missing columns with NULLs — the append-only ingest
-    pattern where new feeds gain columns without rewriting history.
-    Pair with ingest.merge_manifests for the profile-side story."""
-    return spark.read.option("mergeSchema", True).parquet(*paths)
+    Local-FS note: the swap uses two renames (not atomic vs readers); on
+    object stores you'd write to a new prefix and flip a manifest/pointer.
+    """
+    base = path.rstrip("/")
+    tmp = f"{base}__stage_{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(base):
+        old = f"{base}__old_{uuid.uuid4().hex[:8]}"
+        os.rename(base, old)
+        os.rename(tmp, base)
+        shutil.rmtree(old)
+    else:
+        os.rename(tmp, base)
 
 
 def compact_small_files(
@@ -138,18 +89,10 @@ def compact_small_files(
     appends routinely leave thousands of KB-sized files. Compaction sizes
     the output count off the directory's actual byte size (not row
     counts), rewrites once via coalesce — a shuffle-FREE narrow repack —
-    and atomically swaps directories. With ``sort_within_by`` it instead
-    range-repartitions on those columns (one shuffle) so the rewrite also
-    re-establishes clustering (min/max pruning) while compacting.
-
-    Local-FS note: the swap uses two renames (not atomic vs readers); on
-    object stores you'd write to a new prefix and flip a manifest/pointer.
-    """
-    import math
-    import os
-    import shutil
-    import uuid
-
+    and swaps directories (``replace_directory``). With ``sort_within_by``
+    it instead range-repartitions on those columns (one shuffle) so the
+    rewrite also re-establishes clustering (min/max pruning) while
+    compacting."""
     size = 0
     n_before = 0
     for root, _dirs, files in os.walk(path):
@@ -163,12 +106,7 @@ def compact_small_files(
         df = df.repartitionByRange(n_out, *[F.col(c) for c in sort_within_by])
     else:
         df = df.coalesce(n_out)
-    tmp = f"{path.rstrip('/')}__compact_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    old = f"{path.rstrip('/')}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    replace_directory(df, path)
     n_after = sum(
         1
         for root, _dirs, files in os.walk(path)
@@ -178,21 +116,23 @@ def compact_small_files(
     return n_before, n_after
 
 
-def read_binary_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Ingest a directory of raw media/blob files via Spark's binaryFile
-    source: one row per file with (path, modificationTime, length,
-    content) — the standard on-ramp for multimodal corpora stored as
-    loose files rather than parquet-packed binary columns. Column
-    pruning applies: a query over (path, length) never reads content
-    bytes. Feed the result to operators/multimodal.extract_features after
-    renaming content -> payload."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
 ZORDER_BITS = 16
+
+
+def morton_interleave(cols: list[Column], bits: int) -> Column:
+    """The Morton (z-order) interleave of the low ``bits`` bits of
+    non-negative integer columns: bit ``b`` of input ``i`` of ``n`` lands
+    at position ``b·n + i``. Pure shift/mask codegen, no UDF; the result
+    has the inputs' integer type, so ``bits · n`` must fit it."""
+    n = len(cols)
+    return reduce(
+        Column.bitwiseOR,
+        (
+            F.shiftleft(F.shiftright(c, b).bitwiseAND(F.lit(1)), b * n + i)
+            for b in range(bits)
+            for i, c in enumerate(cols)
+        ),
+    )
 
 
 def zorder_value(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS) -> DataFrame:
@@ -219,11 +159,7 @@ def zorder_value(df: DataFrame, cols: list[str], bits: int = ZORDER_BITS) -> Dat
             F.floor((F.col(c).cast("double") - lo) / span * (1 << bits)).cast("long"),
         )
         scaled.append(q)
-    z = F.lit(0).cast("long")
-    n = len(cols)
-    for b in range(bits):
-        for i, q in enumerate(scaled):
-            z = z.bitwiseOR(F.shiftleft(F.shiftright(q, b).bitwiseAND(F.lit(1)), b * n + i))
+    z = morton_interleave(scaled, bits)
     return out.withColumn("_z", z).drop(*[f"__min_{c}" for c in cols], *[f"__max_{c}" for c in cols])
 
 
@@ -247,9 +183,6 @@ def write_versioned(df: DataFrame, table_dir: str, note: str = "") -> int:
     point; on object stores use a conditional put). Returns the new
     version number. Old versions stay readable -> time travel, audit,
     and safe concurrent readers during rewrites."""
-    import json
-    import os
-
     os.makedirs(table_dir, exist_ok=True)
     manifest_path = os.path.join(table_dir, "_versions.json")
     versions = []
@@ -272,9 +205,6 @@ def read_versioned(spark: SparkSession, table_dir: str, version: int | None = No
     """Time-travel read: latest version by default, or any retained
     ``version`` — resolved through the manifest, never by listing data
     directories (half-written snapshots are invisible)."""
-    import json
-    import os
-
     with open(os.path.join(table_dir, "_versions.json")) as f:
         versions = json.load(f)
     if version is None:

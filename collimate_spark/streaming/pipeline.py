@@ -24,33 +24,34 @@ non-negotiable at production scale.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from collimate_spark.ingest import _null_normalized, exact_col, sanitize
+from collimate_spark.sources.storage import replace_directory
 
 
-def stream_ingest(
-    spark: SparkSession,
-    indir: str,
-    schema: T.StructType,
-    fmt: str = "csv",
-) -> DataFrame:
-    """File-source streaming read with a frozen schema + batch-identical
-    normalization. Returns the streaming DataFrame; attach a sink with
-    ``to_parquet_sink``."""
-    reader = spark.readStream.schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    raw = reader.format(fmt).load(indir)
+def _frozen_projection(schema: T.StructType) -> list:
+    """The batch path's normalization over a frozen schema: null tokens
+    → NULL in string columns, sanitized names."""
     cols = []
     for f_ in schema.fields:
         c = exact_col(f_.name)
         if isinstance(f_.dataType, T.StringType):
             c = _null_normalized(c)
         cols.append(c.alias(sanitize(f_.name)))
-    return raw.select(*cols)
+    return cols
+
+
+def stream_ingest(spark: SparkSession, indir: str, schema: T.StructType) -> DataFrame:
+    """CSV file-source streaming read with a frozen schema +
+    batch-identical normalization. Returns the streaming DataFrame;
+    attach a sink with ``to_parquet_sink``."""
+    raw = spark.readStream.schema(schema).option("header", True).csv(indir)
+    return raw.select(*_frozen_projection(schema))
 
 
 def stream_ingest_with_quarantine(
@@ -75,28 +76,50 @@ def stream_ingest_with_quarantine(
         .option("columnNameOfCorruptRecord", "_quarantine")
         .csv(indir)
     )
-    cols = []
-    for f_ in schema.fields:
-        c = exact_col(f_.name)
-        if isinstance(f_.dataType, T.StringType):
-            c = _null_normalized(c)
-        cols.append(c.alias(sanitize(f_.name)))
-    cols.append(F.col("_quarantine"))
-    return raw.select(*cols)
+    return raw.select(*_frozen_projection(schema), F.col("_quarantine"))
 
 
-def to_parquet_sink(df: DataFrame, outdir: str, checkpoint: str, trigger_available_now: bool = True):
+def to_parquet_sink(df: DataFrame, outdir: str, checkpoint: str):
     """Attach the columnar-store sink: exactly-once Parquet append via
-    checkpointed file sink."""
-    writer = (
+    checkpointed file sink, draining what is available now."""
+    return (
         df.writeStream.format("parquet")
         .option("path", outdir)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _start_batches(stream: DataFrame, body, checkpoint: str):
+    """Run ``body(batch, epoch_id)`` on each micro-batch of ``stream``,
+    checkpointed at ``checkpoint``, draining what is available now."""
+    return (
+        stream.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _write_epoch(df: DataFrame, base: str, epoch_id: int) -> None:
+    """Write one micro-batch's output to ``base/epoch=N`` with overwrite:
+    a replayed epoch replaces its own directory, never duplicates it."""
+    df.write.mode("overwrite").parquet(os.path.join(base, f"epoch={epoch_id}"))
+
+
+def _read_epochs(spark: SparkSession, base: str, last: int) -> DataFrame | None:
+    """The ``base/epoch=N`` directories with N ≤ ``last`` as one frame
+    carrying an ``epoch`` column; None when there is no such epoch."""
+    if not os.path.isdir(base) or not any(
+        e.startswith("epoch=") and int(e.split("=", 1)[1]) <= last
+        for e in os.listdir(base)
+    ):
+        return None
+    return (
+        spark.read.option("basePath", base).parquet(base).filter(F.col("epoch") <= last)
+    )
 
 
 def windowed_counts(
@@ -252,12 +275,9 @@ def near_dup_candidates_batch(
     ALL history, not a watermark horizon; at scale store it bucketed by
     (band, band_hash) so each probe is a bucket-local join, and compact
     epochs periodically."""
-    import os
-
     from collimate_spark.functions import fast_text
     from collimate_spark.functions.pairs import bucket_pairs
 
-    spark = batch.sparkSession
     bands = (
         batch.select("doc_id", "text")
         .mapInPandas(fast_text.minhash_bands, fast_text.BAND_SCHEMA)
@@ -266,16 +286,8 @@ def near_dup_candidates_batch(
     within = bucket_pairs(bands, "band", "band_hash").select(
         "doc_a", "doc_b", F.lit("within_batch").alias("kind")
     )
-    prior_exists = os.path.isdir(index_dir) and any(
-        e.startswith("epoch=") and int(e.split("=", 1)[1]) < epoch_id
-        for e in os.listdir(index_dir)
-    )
-    if prior_exists:
-        prior = (
-            spark.read.option("basePath", index_dir)
-            .parquet(index_dir)
-            .filter(F.col("epoch") < epoch_id)
-        )
+    prior = _read_epochs(batch.sparkSession, index_dir, epoch_id - 1)
+    if prior is not None:
         cross = (
             bands.join(
                 prior.select(
@@ -294,7 +306,7 @@ def near_dup_candidates_batch(
         out = within.unionByName(cross)
     else:
         out = within
-    bands.write.mode("overwrite").parquet(os.path.join(index_dir, f"epoch={epoch_id}"))
+    _write_epoch(bands, index_dir, epoch_id)
     return out
 
 
@@ -310,20 +322,11 @@ def near_dup_stream(
     test pins this). The band index accumulates under ``index_dir``.
     The streaming twin of ``dedup_minhash_lsh`` — same kernel, same
     banding, same bucket cap."""
-    import os
 
     def _body(batch: DataFrame, epoch_id: int) -> None:
-        flags = near_dup_candidates_batch(batch, index_dir, epoch_id)
-        flags.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={epoch_id}")
-        )
+        _write_epoch(near_dup_candidates_batch(batch, index_dir, epoch_id), out_dir, epoch_id)
 
-    return (
-        docs.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs, _body, checkpoint)
 
 
 def rate_source_events(
@@ -372,24 +375,16 @@ def heavy_hitter_counts_batch(
     partitions. The streaming twin of operators/stats.heavy_hitters_words
     (which adds the in-task Misra-Gries bound; here the per-epoch agg
     plays that role since a micro-batch IS a bounded slice)."""
-    import os
-
-    spark = batch.sparkSession
     words = batch.select(
         F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("word")
     ).filter(F.col("word") != "")
     epoch_counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-    epoch_counts.write.mode("overwrite").parquet(
-        os.path.join(counts_dir, f"epoch={epoch_id}")
-    )
-    merged = (
-        spark.read.option("basePath", counts_dir)
-        .parquet(counts_dir)
-        .filter(F.col("epoch") <= epoch_id)
+    _write_epoch(epoch_counts, counts_dir, epoch_id)
+    return (
+        _read_epochs(batch.sparkSession, counts_dir, epoch_id)
         .groupBy("word")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    return merged
 
 
 def heavy_hitters_stream(
@@ -397,27 +392,22 @@ def heavy_hitters_stream(
 ):
     """Streaming phi-heavy-hitters: after each micro-batch, emit the words
     whose cumulative frequency exceeds phi of the cumulative total, tagged
-    with the epoch — a per-epoch snapshot of the hot vocabulary. Restarts
-    resume from the persisted epoch partitions; replayed epochs overwrite
-    their own partition and recompute the same snapshot."""
+    with the epoch — a per-epoch snapshot of the hot vocabulary under
+    ``out_dir/epoch=N``. Restarts resume from the persisted epoch
+    partitions; a replayed epoch overwrites its own counts and snapshot
+    partitions, so the snapshot is never duplicated."""
 
     def _body(batch: DataFrame, epoch_id: int) -> None:
         merged = heavy_hitter_counts_batch(batch, counts_dir, epoch_id)
         total = merged.agg(F.sum("cnt").alias("n_total"))
-        (
+        hot = (
             merged.crossJoin(F.broadcast(total))
             .filter(F.col("cnt") > phi * F.col("n_total"))
-            .select("word", "cnt", F.lit(epoch_id).alias("epoch"))
-            .write.mode("append")
-            .parquet(out_dir)
+            .select("word", "cnt")
         )
+        _write_epoch(hot, out_dir, epoch_id)
 
-    return (
-        docs.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs, _body, checkpoint)
 
 
 def user_lifetime_stats(events: DataFrame) -> DataFrame:
@@ -486,7 +476,8 @@ def cdc_apply_stream(changes: DataFrame, table_dir: str, checkpoint: str):
     the streaming twin of dataeng.merge_upsert_orders. Per micro-batch:
     collapse the batch to its LAST change per key (max seq — a batch may
     carry several changes for one key), full-outer-join onto the current
-    table, apply upserts/deletes, atomically swap the table directory.
+    table, apply upserts/deletes, swap the table directory in
+    (``storage.replace_directory``).
 
     Idempotent under replay: applying the same collapsed batch to the
     post-merge table is a fixpoint (upserts re-write identical rows,
@@ -500,9 +491,6 @@ def cdc_apply_stream(changes: DataFrame, table_dir: str, checkpoint: str):
     real deployment the swap is a MERGE INTO on an ACID table format;
     the join shape — one co-partitioned merge on the table's key — is
     identical."""
-    import os
-    import shutil
-    import uuid
 
     def _body(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -525,22 +513,9 @@ def cdc_apply_stream(changes: DataFrame, table_dir: str, checkpoint: str):
                 F.coalesce(F.col("c.value"), F.col("t.value")).alias("value"),
             )
         )
-        tmp = f"{table_dir}__stage_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(table_dir):
-            old = f"{table_dir}__old_{uuid.uuid4().hex[:8]}"
-            os.rename(table_dir, old)
-            os.rename(tmp, table_dir)
-            shutil.rmtree(old)
-        else:
-            os.rename(tmp, table_dir)
+        replace_directory(merged, table_dir)
 
-    return (
-        changes.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(changes, _body, checkpoint)
 
 
 def ivf_index_stream(
@@ -594,9 +569,4 @@ def ivf_index_stream(
             .parquet(index_dir)
         )
 
-    return (
-        vectors.writeStream.foreachBatch(_assign)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(vectors, _assign, checkpoint)

@@ -28,10 +28,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from collimate_spark.catalog import TABLES  # noqa: E402
 
 
 def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -105,22 +105,25 @@ def test_sweepline_carry_equals_bruteforce_peak(spark, ivs):
 
 
 @given(
-    st.integers(min_value=0, max_value=1023), st.integers(min_value=0, max_value=1023)
+    st.integers(min_value=0, max_value=65535), st.integers(min_value=0, max_value=65535)
 )
 @settings(max_examples=30, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 def test_morton_interleave_matches_reference(spark, x, y):
-    from collimate_spark.operators.dataeng import zorder_value
+    """The shared builder at 10 bits on ints (``zorder_cluster_stats``)
+    and at 16 bits on longs (``storage.zorder_value``): bit b of input i
+    lands at 2b + i."""
+    from collimate_spark.sources.storage import ZORDER_BITS, morton_interleave
 
-    got = (
-        spark.range(1)
-        .select(zorder_value(F.lit(x), F.lit(y)).alias("z"))
-        .collect()[0]["z"]
-    )
-    ref = 0
-    for i in range(10):
-        ref |= ((x >> i) & 1) << (2 * i)
-        ref |= ((y >> i) & 1) << (2 * i + 1)
-    assert got == ref
+    for bits, dtype in ((10, "int"), (ZORDER_BITS, "bigint")):
+        z = morton_interleave([F.lit(x).cast(dtype), F.lit(y).cast(dtype)], bits)
+        df = spark.range(1).select(z.alias("z"))
+        assert df.dtypes == [("z", dtype)]
+        got = df.collect()[0]["z"]
+        ref = 0
+        for b in range(bits):
+            ref |= ((x >> b) & 1) << (2 * b)
+            ref |= ((y >> b) & 1) << (2 * b + 1)
+        assert got == ref, (bits, x, y)
 
 
 def test_range_frame_two_level_equals_single_level(spark, monkeypatch):

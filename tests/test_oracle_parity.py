@@ -19,12 +19,9 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from collimate_spark.catalog import TABLES  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.001")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
 
 
 def _duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -43,10 +43,12 @@ from collimate_spark.sources.legacy_store import (
 NODE = shutil.which("node")
 REF = "/root/reference/index.js"
 
-pytestmark = pytest.mark.skipif(
-    NODE is None or not os.path.exists(REF),
-    reason="reference binary or node unavailable",
-)
+pytestmark = [
+    pytest.mark.skipif(NODE is None, reason="node is not on PATH"),
+    pytest.mark.skipif(
+        not os.path.exists(REF), reason=f"reference converter {REF} is absent"
+    ),
+]
 
 N = 1000
 COLORS = ["red", "green", "blue", "black"]

@@ -9,11 +9,6 @@ import pyspark.sql.functions as F
 
 from collimate_spark.catalog import load_table
 from collimate_spark.plans import executed_plan, formatted_plan
-from collimate_spark.sources.storage import (
-    read_bucketed,
-    write_bucketed,
-    write_partitioned,
-)
 
 
 def _final_plan(df) -> str:
@@ -24,11 +19,18 @@ def _final_plan(df) -> str:
 def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
     li = load_table(spark, "lineitem", sf_dir)
     orders = load_table(spark, "orders", sf_dir)
-    write_bucketed(li, "li_b", str(tmp_path / "li_b"), ["l_orderkey"], 8, ["l_orderkey"])
-    write_bucketed(orders, "ord_b", str(tmp_path / "ord_b"), ["o_orderkey"], 8, ["o_orderkey"])
+    for df, table, key in ((li, "li_b", "l_orderkey"), (orders, "ord_b", "o_orderkey")):
+        (
+            df.write.mode("overwrite")
+            .format("parquet")
+            .option("path", str(tmp_path / table))
+            .bucketBy(8, key)
+            .sortBy(key)
+            .saveAsTable(table)
+        )
     try:
-        a = read_bucketed(spark, "li_b")
-        b = read_bucketed(spark, "ord_b")
+        a = spark.table("li_b")
+        b = spark.table("ord_b")
         joined = (
             a.join(b, a.l_orderkey == b.o_orderkey)
             .groupBy("o_orderpriority")
@@ -50,7 +52,7 @@ def test_partitioned_write_prunes(spark, sf_dir, tmp_path):
         "order_year", F.year("o_orderdate")
     )
     path = str(tmp_path / "orders_part")
-    write_partitioned(orders, path, ["order_year"])
+    orders.write.mode("overwrite").partitionBy("order_year").parquet(path)
     back = spark.read.parquet(path).filter(F.col("order_year") == 1995)
     plan = formatted_plan(back)
     assert "PartitionFilters: [isnotnull(order_year" in plan
@@ -95,28 +97,24 @@ def test_range_clustered_files_have_narrow_key_ranges(spark, sf_dir, tmp_path):
 
 
 def test_read_evolving_merges_schemas(spark, tmp_path):
-    """Schema evolution: a later batch adds a column; the merged read
-    exposes the union schema with NULLs for the old batch's rows."""
-    from collimate_spark.sources.storage import read_evolving
-
+    """Schema evolution: a later batch adds a column; the mergeSchema
+    read exposes the union schema with NULLs for the old batch's rows."""
     p1, p2 = str(tmp_path / "b1"), str(tmp_path / "b2")
     spark.createDataFrame([(1, "a")], "id: long, v: string").write.parquet(p1)
     spark.createDataFrame(
         [(2, "b", 9.5)], "id: long, v: string, score: double"
     ).write.parquet(p2)
-    got = read_evolving(spark, [p1, p2])
+    got = spark.read.option("mergeSchema", True).parquet(p1, p2)
     assert set(got.columns) == {"id", "v", "score"}
     rows = {r.id: r for r in got.collect()}
     assert rows[1].score is None and rows[2].score == 9.5
 
 
 def test_orc_roundtrip_pushes_filters(spark, sf_dir, tmp_path):
-    from collimate_spark.sources.storage import read_format, write_format
-
     orders = load_table(spark, "orders", sf_dir)
     path = str(tmp_path / "orders_orc")
-    write_format(orders, path, "orc")
-    back = read_format(spark, path, "orc").filter(F.col("o_orderkey") < 100).select(
+    orders.write.mode("overwrite").orc(path)
+    back = spark.read.orc(path).filter(F.col("o_orderkey") < 100).select(
         "o_orderkey", "o_totalprice"
     )
     plan = formatted_plan(back)
@@ -127,26 +125,14 @@ def test_orc_roundtrip_pushes_filters(spark, sf_dir, tmp_path):
 
 
 def test_csv_json_roundtrip_counts(spark, sf_dir, tmp_path):
-    from collimate_spark.sources.storage import read_format, write_format
-
     nation = load_table(spark, "nation", sf_dir)
     n = nation.count()
     for fmt in ("csv", "json"):
         path = str(tmp_path / f"nation_{fmt}")
-        write_format(nation, path, fmt)
-        back = read_format(spark, path, fmt, schema=nation.schema)
+        nation.write.mode("overwrite").format(fmt).option("header", True).save(path)
+        back = spark.read.format(fmt).option("header", True).schema(nation.schema).load(path)
         assert back.count() == n
         assert set(back.columns) == set(nation.columns)
-
-
-def test_write_format_rejects_unknown(spark, sf_dir, tmp_path):
-    import pytest as _pytest
-
-    from collimate_spark.sources.storage import write_format
-
-    nation = load_table(spark, "nation", sf_dir)
-    with _pytest.raises(ValueError):
-        write_format(nation, str(tmp_path / "x"), "xml")
 
 
 def test_dynamic_partition_pruning_on_dim_filter(spark, sf_dir, tmp_path):
@@ -158,7 +144,7 @@ def test_dynamic_partition_pruning_on_dim_filter(spark, sf_dir, tmp_path):
         "order_year", F.year("o_orderdate")
     )
     path = str(tmp_path / "orders_by_year")
-    write_partitioned(orders, path, ["order_year"])
+    orders.write.mode("overwrite").partitionBy("order_year").parquet(path)
     fact = spark.read.parquet(path)
     # dim must be an INDEPENDENT table with a filter Catalyst cannot fold
     # into a static partition predicate, else static pruning wins instead
@@ -227,13 +213,11 @@ def test_compact_with_clustering_restores_pruning(spark, sf_dir, tmp_path):
 def test_read_binary_dir_prunes_content(spark, tmp_path):
     """binaryFile source reads loose blobs; a metadata-only projection
     must not read content bytes (ReadSchema excludes it)."""
-    from collimate_spark.sources.storage import read_binary_dir
-
     d = tmp_path / "blobs"
     d.mkdir()
     for i in range(5):
         (d / f"img_{i}.bin").write_bytes(bytes([i]) * (100 + i))
-    df = read_binary_dir(spark, str(d), glob="*.bin")
+    df = spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(str(d))
     rows = df.select("path", "length").orderBy("length").collect()
     assert [r.length for r in rows] == [100, 101, 102, 103, 104]
     meta_only = df.select("path", "length")

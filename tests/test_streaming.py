@@ -462,6 +462,47 @@ def test_heavy_hitters_stream_cumulative_and_idempotent(spark, tmp_path):
     assert merged1["hot"] == 14
 
 
+def test_heavy_hitters_stream_replayed_epoch_keeps_one_snapshot(spark, tmp_path):
+    """Deleting the checkpoint's last commit makes the restarted stream
+    re-run that epoch; its snapshot must replace, not duplicate, the one
+    already in ``out_dir``."""
+    import json
+
+    from collimate_spark.streaming.pipeline import heavy_hitters_stream
+
+    indir = str(tmp_path / "hh_in")
+    counts_dir = str(tmp_path / "hh_counts")
+    out_dir = str(tmp_path / "hh_out")
+    ckpt = str(tmp_path / "hh_ckpt")
+    os.makedirs(indir)
+    for name, docs in (
+        ("b1.jsonl", [(1, "hot hot hot hot cold"), (2, "hot hot hot warm warm")]),
+        ("b2.jsonl", [(3, "hot hot hot hot hot warm")]),
+    ):
+        with open(os.path.join(indir, name), "w") as fh:
+            for i, t in docs:
+                fh.write(json.dumps({"doc_id": i, "text": t}) + "\n")
+
+    def _run():
+        docs = spark.readStream.schema(DOC_SCHEMA).option("maxFilesPerTrigger", 1).json(indir)
+        q = heavy_hitters_stream(docs, counts_dir, out_dir, ckpt, phi=0.30)
+        assert q.awaitTermination(180), "drain did not finish"
+        assert q.exception() is None
+
+    _run()
+    commits = os.path.join(ckpt, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    _run()
+
+    rows = [(r.epoch, r.word, r.cnt) for r in spark.read.parquet(out_dir).collect()]
+    keys = [(e, w) for e, w, _ in rows]
+    assert len(keys) == len(set(keys)), f"replayed epoch duplicated snapshot rows: {sorted(rows)}"
+    assert {w: c for e, w, c in rows if e == last}["hot"] == 12
+
+
 def test_transform_with_state_lifetime_stats(spark, tmp_path):
     """Spark 4 StatefulProcessor: per-user lifetime (n, total) must
     accumulate ACROSS micro-batches via the value state.

@@ -10,7 +10,7 @@ import os
 
 import pyspark.sql.functions as F
 
-from collimate_spark.operators.dataeng import zorder_value
+from collimate_spark.sources.storage import morton_interleave
 
 N_FILES = 16
 DOMAIN = 64  # small enough that every sf fills both dims uniformly
@@ -37,7 +37,7 @@ def test_zorder_layout_bounds_both_dims(spark, sf_dir, tmp_path):
         (F.col("l_orderkey") % DOMAIN).cast("int").alias("x"),
         (F.col("l_partkey") % DOMAIN).cast("int").alias("y"),
     )
-    zed = pts.withColumn("z", zorder_value(F.col("x"), F.col("y")))
+    zed = pts.withColumn("z", morton_interleave([F.col("x"), F.col("y")], 10))
 
     z_path = str(tmp_path / "byz")
     x_path = str(tmp_path / "byx")
