@@ -5,7 +5,7 @@
 
 PY ?= python3
 
-.PHONY: test pre-driver mirror-sf001 mirror-sf01 mirror-scale-mode bench bench-wide calibrate plans perfbench perfbench-test scale-sweep
+.PHONY: test pre-driver mirror-sf001 mirror-sf01 bench bench-wide calibrate plans perfbench perfbench-test scale-sweep
 
 # The tier-1 suite exactly as ROADMAP.md states it: one Spark core per
 # schedulable host core and no early exit.
@@ -24,15 +24,6 @@ mirror-sf001:
 
 mirror-sf01:
 	$(PY) -m pytest tests/test_oracle_parity.py -m sf01 -q
-
-# Full sf0.01 oracle mirror under the DEPLOY.md cluster confs
-# (SPARK_GRAFT_SCALE_MODE=1: initialPartitionNum=1024 + zstd). The scale
-# confs change shuffle widths and therefore float-sum orders; the
-# 6dp/audit-bit oracle contracts must be INVARIANT to that — this target
-# proves the cluster config is hash-safe, not assumed (VERDICT r10 #3).
-# Run once per round.
-mirror-scale-mode:
-	SPARK_GRAFT_SCALE_MODE=1 $(PY) -m pytest tests/test_oracle_parity.py -m sf001 -q
 
 bench:
 	$(PY) bench.py

@@ -199,7 +199,7 @@ def bench_ingest(spark, runs_out: list | None = None) -> float:
         manifest = profile(spark, raw, parse_dates=True)
         typed = apply_manifest(raw, manifest)
         out = os.path.join(tempfile.gettempdir(), f"bench_ingest_out_{sf_tag}")
-        to_columnar(typed, out, manifest, write_manifest=True)
+        to_columnar(typed, out, manifest)
         times.append(time.time() - t0)
     if runs_out is not None:
         runs_out.extend(times)

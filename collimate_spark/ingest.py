@@ -44,6 +44,8 @@ import re
 import shutil
 import sys
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
@@ -89,6 +91,8 @@ INT32_MIN, INT32_MAX = -(2**31), 2**31 - 1
 AUTO_SAMPLE_MIN_BYTES = 16 << 20
 PROFILE_SAMPLE_FRACTION = MIN_SCAN_FRACTION
 PROFILE_SAMPLE_SEED = 4251
+
+_SPLIT_CONF = "spark.sql.files.maxPartitionBytes"
 
 _INT_RE = r"^[+-]?\d+$"
 _INT_PAT = re.compile(_INT_RE)
@@ -248,24 +252,38 @@ def _local_input_bytes(df: DataFrame) -> int:
     return total
 
 
-def _tune_split_size(spark: SparkSession, total_bytes: int) -> None:
-    """Right-size file splits for the ingest passes: target ~3 splits
-    per core so a SMALL input still uses the whole cluster instead of
-    the handful of tasks the 128 MiB default yields (an 80 MiB 8-file
-    CSV on 32 cores planned 10 tasks — 1/3 of the machine idle through
-    both the profile and the write pass; measured 2.7s → 2.1s at bench
-    scale). Clamped to [1 MiB, 128 MiB]: at real scale input >> cores ×
-    128 MiB and the clamp leaves Spark's default untouched, so this is
-    purely a small-input/dev-loop fix, not a tuned-for-the-benchmark
-    constant. No-op when file sizes are unknowable (non-file sources).
-    The runtime conf intentionally persists past profile(): the
-    apply/normalize/write pass re-reads the SAME input and needs the
-    same split sizing."""
-    if total_bytes <= 0:
+@contextmanager
+def _ingest_splits(df: DataFrame) -> Iterator[int]:
+    """Right-size file splits for one ingest pass over ``df``'s input, and
+    restore the caller's value on exit. Yields the input's byte size.
+
+    Targets ~3 splits per core so a SMALL input still uses the whole
+    cluster instead of the handful of tasks the 128 MiB default yields
+    (an 80 MiB 8-file CSV on 32 cores planned 10 tasks — 1/3 of the
+    machine idle through both the profile and the write pass; measured
+    2.7s → 2.1s at bench scale). Clamped to [1 MiB, 128 MiB]: at real
+    scale input >> cores × 128 MiB and the clamp leaves Spark's default
+    untouched, so this is purely a small-input/dev-loop fix, not a
+    tuned-for-the-benchmark constant. No-op when file sizes are
+    unknowable (non-file sources). Scoped because the conf is
+    session-wide: left set, one profile of a 3.7 MB CSV put every later
+    scan of the session at 1 MiB splits."""
+    total = _local_input_bytes(df)
+    if total <= 0:
+        yield total
         return
+    spark = df.sparkSession
     cores = max(1, spark.sparkContext.defaultParallelism)
-    target = max(1 << 20, min(128 << 20, total_bytes // (3 * cores)))
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
+    target = max(1 << 20, min(128 << 20, total // (3 * cores)))
+    prev = spark.conf.get(_SPLIT_CONF, None)
+    spark.conf.set(_SPLIT_CONF, str(target))
+    try:
+        yield total
+    finally:
+        if prev is None:
+            spark.conf.unset(_SPLIT_CONF)
+        else:
+            spark.conf.set(_SPLIT_CONF, prev)
 
 
 def date_probe(v: F.Column, fmt: str) -> F.Column:
@@ -388,41 +406,40 @@ def profile(
     """
     if not df.columns:
         return Manifest()
-    input_bytes = _local_input_bytes(df)
-    _tune_split_size(spark, input_bytes)
-    n_total: int | None = None
-    if scan_rows is not None:
-        n = df.count()
-        manifest = Manifest(n_rows=n)
-        if n == 0:
-            manifest.columns = [
-                ColumnProfile(c, sanitize(c), "int32", False, 0) for c in df.columns
-            ]
-            return manifest
-        scanned = scan_rows if scan_rows > 0 else scan_budget(n)
-        scanned = min(scanned, n)
-        manifest.n_scanned = scanned
-        manifest.categorical_threshold = categorical_threshold(n, scanned)
-        window = df.limit(scanned) if scanned < n else df
-    else:
-        if sample_fraction is None and input_bytes >= AUTO_SAMPLE_MIN_BYTES:
-            sample_fraction = PROFILE_SAMPLE_FRACTION
-        if sample_fraction is not None and 0 < sample_fraction < 1:
-            n_total = df.count()
-            manifest = Manifest(n_rows=n_total)
-            if n_total == 0:
+    with _ingest_splits(df) as input_bytes:
+        n_total: int | None = None
+        if scan_rows is not None:
+            n = df.count()
+            manifest = Manifest(n_rows=n)
+            if n == 0:
                 manifest.columns = [
                     ColumnProfile(c, sanitize(c), "int32", False, 0) for c in df.columns
                 ]
                 return manifest
-            window = df.sample(fraction=sample_fraction, seed=PROFILE_SAMPLE_SEED)
+            scanned = scan_rows if scan_rows > 0 else scan_budget(n)
+            scanned = min(scanned, n)
+            manifest.n_scanned = scanned
+            manifest.categorical_threshold = categorical_threshold(n, scanned)
+            window = df.limit(scanned) if scanned < n else df
         else:
-            sample_fraction = None
-            manifest = Manifest()
-            window = df  # full-data profile; n comes out of the same agg job
+            if sample_fraction is None and input_bytes >= AUTO_SAMPLE_MIN_BYTES:
+                sample_fraction = PROFILE_SAMPLE_FRACTION
+            if sample_fraction is not None and 0 < sample_fraction < 1:
+                n_total = df.count()
+                manifest = Manifest(n_rows=n_total)
+                if n_total == 0:
+                    manifest.columns = [
+                        ColumnProfile(c, sanitize(c), "int32", False, 0) for c in df.columns
+                    ]
+                    return manifest
+                window = df.sample(fraction=sample_fraction, seed=PROFILE_SAMPLE_SEED)
+            else:
+                sample_fraction = None
+                manifest = Manifest()
+                window = df  # full-data profile; n comes out of the same agg job
 
-    seeds = _first_record_seeds(df)
-    stats = {r["i"]: r for r in inference_stats(window, seeds, parse_dates).collect()}
+        seeds = _first_record_seeds(df)
+        stats = {r["i"]: r for r in inference_stats(window, seeds, parse_dates).collect()}
     # every column groups the same rows, so any group's count is the
     # window's; an empty window yields no groups at all
     n_window = next(iter(stats.values()))["rows"] if stats else 0
@@ -606,25 +623,30 @@ def to_columnar(
     df: DataFrame,
     outdir: str,
     manifest: Manifest | None = None,
-    write_manifest: bool = False,
     partition_cols: list[str] | None = None,
 ) -> None:
     """Write the typed columnar store: Parquet (typed, dictionary-encoded
     per column chunk, splittable, compressed — the role of the reference's
-    per-column TypedArray dumps + .key decoders). Optional manifest.json
-    plays the index.json role; ``partition_cols`` adds hive partitioning
-    (the scan-pruning lever at 100 TB — see DEPLOY.md). The reference's
-    own `.k8/.k16/.key` layout is written by
-    ``sources.legacy_store.write_legacy_store``."""
+    per-column TypedArray dumps + .key decoders), plus ``_manifest.json``
+    (the index.json role) when a ``manifest`` is given.
+    ``partition_cols`` adds hive partitioning (the scan-pruning lever at
+    100 TB — see DEPLOY.md). The reference's own `.k8/.k16/.key` layout
+    is written by ``sources.legacy_store.write_legacy_store``."""
     writer = df.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
-    writer.parquet(outdir)
-    if write_manifest and manifest is not None:
-        # underscore prefix: ignored by Spark/Hadoop file discovery (like
-        # _SUCCESS), so the store dir stays readable as plain Parquet
-        with open(os.path.join(outdir, "_manifest.json"), "w") as fh:
-            json.dump(manifest.to_dict(), fh, indent=1)
+    with _ingest_splits(df):
+        writer.parquet(outdir)
+    _write_manifest(outdir, manifest)
+
+
+def _write_manifest(outdir: str, manifest: Manifest | None) -> None:
+    if manifest is None:
+        return
+    # underscore prefix: ignored by Spark/Hadoop file discovery (like
+    # _SUCCESS), so the store dir stays readable as plain Parquet
+    with open(os.path.join(outdir, "_manifest.json"), "w") as fh:
+        json.dump(manifest.to_dict(), fh, indent=1)
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -677,17 +699,17 @@ def main(argv: list[str] | None = None) -> None:
     typed = apply_manifest(raw, manifest)
     outdir = args.output or os.path.splitext(os.path.basename(args.file))[0]
     parts = args.partition_by.split(",") if args.partition_by else None
+    index = manifest if args.index else None
     if args.cluster_by:
         from collimate_spark.sources.storage import write_range_clustered
 
         if parts:
             ap.error("--cluster-by cannot combine with --partition-by")
-        write_range_clustered(typed, outdir, args.cluster_by.split(","))
-        if args.index:
-            with open(os.path.join(outdir, "_manifest.json"), "w") as fh:
-                json.dump(manifest.to_dict(), fh, indent=1)
+        with _ingest_splits(typed):
+            write_range_clustered(typed, outdir, args.cluster_by.split(","))
+        _write_manifest(outdir, index)
     else:
-        to_columnar(typed, outdir, manifest, write_manifest=args.index, partition_cols=parts)
+        to_columnar(typed, outdir, index, partition_cols=parts)
     if args.verbose:
         phases = {
             "read_raw_s": round(t1 - t0, 3),

@@ -225,11 +225,6 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_duck_score = ", ".join(
-    f"(len(list_filter(toks, t -> t IN {markers!r})), '{lang}')"
-    for lang, markers in sorted(LANG_MARKERS.items())
-)
-
 LANG_ID_SQL = f"""
 WITH d AS (
   SELECT doc_id, lang,

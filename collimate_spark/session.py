@@ -6,30 +6,7 @@ the driver entry point all run the same way. Sessions run local[N], N =
 the one you would set on a cluster: AQE (runtime coalescing + skew-join
 handling), Arrow for the few pandas-UDF paths, and shuffle partitions
 sized to cores locally (on a real cluster AQE coalesces from a high
-initial number).
-
-Scale mode (``SPARK_GRAFT_SCALE_MODE=1``): the cluster shuffle confs of
-DEPLOY.md, MEASURED net-negative at bench scale, so they gate on the
-workload instead of riding every session — the same measure-then-pick
-policy as the operator-level size gates:
-
-- ``initialPartitionNum=1024`` — start every shuffle wide and let AQE
-  coalesce. Two decades up this is the difference between a 2.3M-row
-  in-memory sort per task and a 26M-row spilling one (the r9 third-decade
-  sweep measured constant-32 going superlinear on every exploded-shuffle
-  op: ngram_jaccard 15.7x, simhash 16.8x, dup_span 10.5x, range_frame
-  15.2x, tfidf 13.8x per 10x — all flattened by this conf). But the
-  map-side fanout is NOT free at MB-scale shuffles: r10 A/B measured
-  window_running_sum 0.50->0.63s and asof 0.92->1.13s at sf0.1 from this
-  conf alone — the exact "host band" drift VERDICT r9 flagged.
-- ``spark.io.compression.codec=zstd`` — ~35% smaller shuffle/spill/cache
-  blocks than lz4; saved the decade containment cell from ENOSPC and cuts
-  network at cluster scale, but costs measurable CPU on small shuffles
-  (doc_fingerprint 0.58->0.74s at sf0.1).
-
-``make mirror-scale-mode`` runs the oracle mirror with the gate
-on; on a real cluster both belong in cluster conf unconditionally
-(shuffles there are never MB-sized).
+initial number; DEPLOY.md lists the cluster-only confs).
 
 Stream checkpoints: ``get_session`` always runs ``local[N]``, so every
 checkpoint and state store sits on local disk, and they are written through
@@ -56,11 +33,7 @@ import os
 from pyspark.sql import SparkSession
 
 
-def scale_mode_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_SCALE_MODE", "") == "1"
-
-
-def session_confs(shuffle_partitions: int, scale_mode: bool) -> dict[str, str]:
+def session_confs(shuffle_partitions: int) -> dict[str, str]:
     """The engine conf set, as data — unit-testable without a JVM."""
     confs = {
         # AQE: runtime partition coalescing, skew-join splitting, dynamic
@@ -90,22 +63,6 @@ def session_confs(shuffle_partitions: int, scale_mode: bool) -> dict[str, str]:
             "FileSystemBasedCheckpointFileManager"
         ),
     }
-    if scale_mode:
-        # Size shuffles by DATA, not by a constant (see module docstring
-        # for the measured decade-scale wins and bench-scale costs that
-        # put these behind the gate).
-        confs["spark.sql.adaptive.coalescePartitions.initialPartitionNum"] = "1024"
-        confs["spark.io.compression.codec"] = "zstd"
-        # Parquet OUTPUT codec (guide §6): 20% smaller files (8.6 vs
-        # 10.8 MB for sf0.1 lineitem), which at cluster scale compounds
-        # into scan/network wins for every downstream reader. Gated on
-        # scale mode because the WRITE is measurably (~7%) slower on
-        # this box (interleaved min-of-3: zstd 1.571 s vs snappy
-        # 1.464 s for the same lineitem rewrite) — at bench scale the
-        # byte savings buy nothing back, so the local default stays
-        # snappy to keep the bench r1-comparable. Read side is
-        # codec-agnostic; results are unaffected either way (r13).
-        confs["spark.sql.parquet.compression.codec"] = "zstd"
     return confs
 
 
@@ -113,13 +70,12 @@ def get_session(app_name: str = "collimate_spark", shuffle_partitions: int | Non
     """Build (or fetch) the engine SparkSession.
 
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism (driver contract;
-    the host's core count when unset) and ``SPARK_GRAFT_SCALE_MODE=1`` for
-    the cluster shuffle confs.
+    the host's core count when unset).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if cpus.isdigit() else os.cpu_count()
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    for k, v in session_confs(shuffle_partitions, scale_mode_enabled()).items():
+    for k, v in session_confs(shuffle_partitions).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -410,66 +410,6 @@ def heavy_hitters_stream(
     return _start_batches(docs, _body, checkpoint)
 
 
-def user_lifetime_stats(events: DataFrame) -> DataFrame:
-    """Arbitrary stateful processing on the MODERN API:
-    ``transformWithStateInPandas`` with a ``StatefulProcessor`` holding a
-    per-user ValueState of (n_events, total_value) — the Spark 4
-    replacement for applyInPandasWithState (which stays in this module
-    for coverage of the older surface). Emits one updated lifetime row
-    per user per micro-batch. State is per-key and store-backed
-    (RocksDB), so a 100 TB keyspace shards across executors; TTL/eviction
-    hooks are where a production pipeline bounds it."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total", DoubleType())]
-    )
-
-    class LifetimeProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("lifetime", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = 0, 0.0
-            if self._state.exists():
-                prev = self._state.get()
-                n, total = int(prev[0]), float(prev[1])
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.groupBy("user_id")
-        .transformWithStateInPandas(
-            LifetimeProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def cdc_apply_stream(changes: DataFrame, table_dir: str, checkpoint: str):
     """Streaming CDC apply: a change stream of (op ∈ {upsert, delete},
     key, value, seq) folds into a keyed table via foreachBatch MERGE —

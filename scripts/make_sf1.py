@@ -1,37 +1,34 @@
-"""Generate a local sf1 slice (10× the sf0.1 bench scale) for the
-exact-vs-approx scale measurements (VERDICT r6 directive #5).
+"""Build a mutated 10x replication slice of a scale-factor directory,
+the input of the scale sweep (``scripts/scale_sweep.py``).
 
-Replicates sf0.1's fact tables 10× with shifted ENTITY keys — more
+Replicates the source's fact tables 10x with shifted ENTITY keys — more
 orders / users / documents at the same per-entity row counts, which is
 how the real corpus grows (window partition sizes stay constant; only
-cardinality scales). Row values are otherwise untouched so the value
-distributions (and therefore percentile work) are realistic. Dimension
-tables are identical views of the sf0.1 parquet.
+cardinality scales). Dimension tables are symlinks to the source
+parquet.
 
-Output: /tmp/sf1/{table}.parquet — NOT committed, regenerate on demand:
-    python scripts/make_sf1.py [src_sf_dir] [out_dir]
-Each level is 10 copies of its source; chain for the next decade:
-    python scripts/make_sf1.py /tmp/sf1 /tmp/sf10   # 100x bench scale
+Every NON-base replica is perturbed so replicas are NOT near-dups of
+their source or of each other: every 4th document token (phase i%4)
+gets a replica-specific suffix, so any cross-replica doc pair shares
+<= ~25% of its trigram shingles (Jaccard <= ~0.15, containment <= ~0.25
+— below every operator threshold), while ~75% of tokens stay original,
+so SHARED-VOCABULARY shingle frequencies keep growing ~linearly with the
+corpus the way a real crawl's do (the growth that makes naive
+shared-shingle joins quadratic). WITHIN a replica the base corpus's
+near-dup pairs survive verbatim (aligned positions get identical
+suffixes), so the TRUE pair output grows ~linearly in the replication
+factor — pair-emitting ops can be swept for WORK growth. Embeddings get
+a per-replica sign flip per dimension (see ``SCALED``).
 
-SF_MUTATE=1 (VERDICT r7 directive #2) perturbs every NON-base replica's
-document text so replicas are NOT near-dups of their source or of each
-other: every 4th token (phase i%4) gets a replica-specific suffix, so
-any cross-replica doc pair shares ≤ ~25% of its trigram shingles
-(Jaccard ≤ ~0.15, containment ≤ ~0.25 — below every operator threshold;
-chain with a DIFFERENT SF_SALT per level — see SALT below)
-while ~75% of tokens stay original, so SHARED-VOCABULARY shingle
-frequencies keep growing ~linearly with the corpus the way a real
-crawl's do (the growth that makes naive shared-shingle joins
-quadratic). WITHIN a replica the base corpus's near-dup pairs survive
-verbatim (aligned positions get identical suffixes), so the TRUE pair
-output grows ~linearly in the replication factor instead of the exact
-replication's quadratic artifact — pair-emitting ops can be swept for
-WORK growth:
-    SF_MUTATE=1 python scripts/make_sf1.py /root/testdata/sf0.1 /tmp/sf1m
+Output is not committed; regenerate on demand. Each chained level takes
+its own salt (see ``main``):
+    python scripts/make_sf1.py /root/testdata/sf0.1 /tmp/sf1m q
+    python scripts/make_sf1.py /tmp/sf1m /tmp/sf10m r
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import shutil
 import sys
@@ -39,13 +36,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 COPIES = 10
-MUTATE = os.environ.get("SF_MUTATE", "") not in ("", "0")
-# Distinct salt per CHAINED invocation (SF_SALT=q, r, ...): composing two
-# mutation levels with the same salt is commutative — copy (j=1 then i=2)
-# equals copy (j=2 then i=1) — which mints cross-level EXACT duplicates
-# (~40% of a 100x slice, measured). A per-level salt letter breaks the
-# commutation, keeping chained slices linear-output too.
-SALT = os.environ.get("SF_SALT", "q")
 SCALED = {
     # table -> columns to shift by i * (max+1) per replica
     "lineitem": ["l_orderkey"],
@@ -57,9 +47,9 @@ SCALED = {
     # VERDICT r13 #1). vec_id shifts like the other facts; ``label`` is
     # deliberately NOT shifted, so cluster SIZE grows with the corpus —
     # the axis the label-blocked pair operators must survive (real
-    # corpora grow clusters, not just cluster counts). Under SF_MUTATE
-    # every non-base replica's vectors get a per-replica deterministic
-    # SIGN FLIP per dimension (see _flip_signs): a sign flip is an exact
+    # corpora grow clusters, not just cluster counts). Every non-base
+    # replica's vectors get a per-replica deterministic SIGN FLIP per
+    # dimension (the embeddings branch of main): a sign flip is an exact
     # isometry (products x_k*y_k are unchanged within a replica, so
     # within-replica cosines — and the base corpus's true near-dup pairs
     # — survive bit-identically), while cross-replica cosines become
@@ -72,13 +62,23 @@ SCALED = {
 PASSTHROUGH = ["region", "nation", "customer", "supplier", "part"]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("src", help="source scale-factor directory")
+    ap.add_argument("out", help="output directory")
+    # Distinct salt per CHAINED invocation (q, r, ...): composing two
+    # mutation levels with the same salt is commutative — copy (j=1 then
+    # i=2) equals copy (j=2 then i=1) — which mints cross-level EXACT
+    # duplicates (~40% of a 100x slice, measured). A per-level salt
+    # breaks the commutation, keeping chained slices linear-output too.
+    ap.add_argument("salt", help="per-level mutation salt")
+    args = ap.parse_args(argv)
+    src, out, salt = args.src, args.out, args.salt
+
     import pyspark.sql.functions as F
 
     from collimate_spark.session import get_session
 
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf1"
     os.makedirs(out, exist_ok=True)
     spark = get_session("make-sf1")
 
@@ -102,22 +102,22 @@ def main() -> None:
             p = df
             for k, stride in strides.items():
                 p = p.withColumn(k, (F.col(k) + F.lit(i * stride)).cast(df.schema[k].dataType))
-            if MUTATE and t == "documents" and i > 0:
+            if t == "documents" and i > 0:
                 toks = F.split(F.col("text"), " ")
                 salted = F.transform(
                     toks,
                     lambda tok, j: F.when(
-                        j % 4 == F.lit(i % 4), F.concat(tok, F.lit(f"{SALT}{i}"))
+                        j % 4 == F.lit(i % 4), F.concat(tok, F.lit(f"{salt}{i}"))
                     ).otherwise(tok),
                 )
                 p = p.withColumn("text", F.array_join(salted, " "))
-            if MUTATE and t == "embeddings" and i > 0:
+            if t == "embeddings" and i > 0:
                 # Deterministic per-(replica, dimension) sign flip — an
                 # exact isometry within the replica (see SCALED comment).
                 # The salt rides the hash so chained levels compose into
                 # distinct patterns (no cross-level collisions minting
-                # exact duplicates, same reason as the SALT doc above).
-                seed = f"{SALT}{i}:"
+                # exact duplicates, same reason as the salt argument).
+                seed = f"{salt}{i}:"
                 p = p.withColumn(
                     "embedding",
                     F.transform(

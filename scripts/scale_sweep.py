@@ -1,7 +1,7 @@
 """Repeatable dedup-family scale sweep (VERDICT r7 directives #2/#8):
 measure WORK growth of every pair-emitting / candidate-generating text
 op at 10× corpus, on the MUTATED replication slice where the true pair
-output grows ~linearly (see scripts/make_sf1.py SF_MUTATE) — so a
+output grows ~linearly (see scripts/make_sf1.py) — so a
 superlinear runtime ratio means a superlinear candidate step, not an
 output artifact. This is the screen that caught dedup_ngram_jaccard's
 frequency-quadratic candidate join in round 7; run it against every new
@@ -114,6 +114,16 @@ SLICE_CHAIN = {
     "/tmp/sf1m": ("/root/testdata/sf0.1", "q"),
     "/tmp/sf10m": ("/tmp/sf1m", "r"),
 }
+# The cluster shuffle confs of DEPLOY.md, passed to the chained-slice
+# cells only (through spark-submit's --conf): the r10 A/B measured them
+# net-negative at sf0.1 (asof 0.92->1.13 s, doc_fingerprint 0.58->0.74 s),
+# so the bench-scale base cell keeps the session defaults and its times
+# do not inflate the decade ratios.
+CLUSTER_CONFS = {
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "1024",
+    "spark.io.compression.codec": "zstd",
+    "spark.sql.parquet.compression.codec": "zstd",
+}
 
 
 def run_single(name: str, sf_dir: str) -> None:
@@ -175,25 +185,18 @@ def _ensure_scaled(scaled: str) -> None:
     src, salt = SLICE_CHAIN[scaled]
     _ensure_scaled(src) if src in SLICE_CHAIN else None
     print(f"building mutated {STEP}x slice at {scaled} (salt {salt}) ...", file=sys.stderr)
-    env = dict(os.environ, SF_MUTATE="1", SF_SALT=salt)
     subprocess.run(
-        [sys.executable, os.path.join(REPO, "scripts", "make_sf1.py"), src, scaled],
+        [sys.executable, os.path.join(REPO, "scripts", "make_sf1.py"), src, scaled, salt],
         check=True,
-        env=env,
     )
 
 
 def _cell(name: str, sf_dir: str) -> dict:
-    # Only the chained /tmp/sf* mutated slices get the
-    # scale confs (wide initial shuffles + zstd) that session.py
-    # deliberately keeps OFF at bench scale — the r10 A/B measured them
-    # net-negative at sf0.1 (asof 0.92→1.13s, doc_fingerprint
-    # 0.58→0.74s), so injecting them into the default sweep's bench-
-    # scale base cell would inflate base times and flatten decade
-    # ratios (ADVICE r10).
     env = dict(os.environ)
     if sf_dir in SLICE_CHAIN:
-        env["SPARK_GRAFT_SCALE_MODE"] = "1"
+        env["PYSPARK_SUBMIT_ARGS"] = " ".join(
+            [f"--conf {k}={v}" for k, v in CLUSTER_CONFS.items()] + ["pyspark-shell"]
+        )
     # start_new_session: the cell gets its own process GROUP so a timeout
     # can kill the Spark JVM grandchild too (ADVICE r11: SIGKILLing only
     # the direct Python child leaves the JVM holding the capture pipes —

@@ -240,7 +240,7 @@ def test_to_columnar_roundtrip(spark, tmp_path):
     path = _write(tmp_path, "rt.csv", "K 1,v\n1,a\n2,b\n3,-\n")
     typed, manifest = ingest(spark, path)
     outdir = str(tmp_path / "store")
-    to_columnar(typed, outdir, manifest, write_manifest=True)
+    to_columnar(typed, outdir, manifest)
     back = spark.read.parquet(outdir)
     assert back.columns == ["k_1", "v"]
     assert back.count() == 3
@@ -262,6 +262,26 @@ def test_to_columnar_partitioned(spark, tmp_path):
     back = spark.read.parquet(outdir)
     assert back.count() == 30
     assert back.filter("grp = 1").count() == 10
+
+
+def test_ingest_passes_leave_the_callers_split_size(spark, tmp_path):
+    """profile and to_columnar size file splits for their own scans only:
+    afterwards the session reads the caller's split size, while the write
+    still runs on the tuned splits (at the 128 MiB default this file is
+    one split, so one part file)."""
+    key = "spark.sql.files.maxPartitionBytes"
+    path = tmp_path / "wide.csv"
+    with open(path, "w") as fh:
+        fh.write("k,v,s\n")
+        fh.writelines(f"{i},{i * 0.5},{'x' * 20}\n" for i in range(100_000))
+    assert os.path.getsize(path) >= 3 << 20
+    spark.conf.unset(key)  # a caller that never set it
+    typed, manifest = ingest(spark, str(path))
+    outdir = str(tmp_path / "store")
+    to_columnar(typed, outdir, manifest)
+    assert spark.conf.get(key, None) is None
+    parts = [f for f in os.listdir(outdir) if f.startswith("part-")]
+    assert len(parts) > 1, parts
 
 
 def test_scan_budget_rule():

@@ -1,7 +1,8 @@
-"""Pure-Python guards for the sweep harness's table rendering (ADVICE
-r11): a timed-out cell must render the timeout label and an em-dash for
-its missing rows count — never the literal Python ``None`` — and the
-superlinear flag must be judged against the sweep's step factor."""
+"""Pure-Python guards for the sweep harness (ADVICE r11): a timed-out
+cell must render the timeout label and an em-dash for its missing rows
+count — never the literal Python ``None`` — the superlinear flag must be
+judged against the sweep's step factor, and the cells and slice builds
+must launch with the confs and salts the sweep names."""
 
 from __future__ import annotations
 
@@ -9,13 +10,22 @@ import importlib.util
 import os
 import re
 
-_SPEC = importlib.util.spec_from_file_location(
-    "scale_sweep",
-    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                 "scripts", "scale_sweep.py"),
-)
-scale_sweep = importlib.util.module_from_spec(_SPEC)
-_SPEC.loader.exec_module(scale_sweep)
+import pytest
+
+
+def _load_script(name):
+    spec = importlib.util.spec_from_file_location(
+        name,
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "scripts", f"{name}.py"),
+    )
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+scale_sweep = _load_script("scale_sweep")
+make_sf1 = _load_script("make_sf1")
 
 
 def test_timeout_row_renders_dash_not_none():
@@ -81,8 +91,6 @@ def test_unknown_flag_exits_before_any_work(monkeypatch):
     is built or cell subprocess started — a mistyped option must never
     let ``--update-baseline`` run a default sweep and rewrite
     BASELINE.md."""
-    import pytest
-
     def no_work(*a, **k):
         raise AssertionError("sweep work started on a usage error")
 
@@ -91,4 +99,63 @@ def test_unknown_flag_exits_before_any_work(monkeypatch):
     monkeypatch.setattr(scale_sweep.subprocess, "Popen", no_work)
     with pytest.raises(SystemExit) as exc:
         scale_sweep.main(["--decade", "3"])
+    assert exc.value.code == 2
+
+
+def test_cells_and_slice_builds_launch_with_the_named_confs_and_salts(monkeypatch, tmp_path):
+    """A chained-slice cell starts its JVM with every ``CLUSTER_CONFS``
+    entry through spark-submit's ``--conf``, a bench-slice cell with none
+    of them; each slice build gets its level's salt on argv and no
+    ``SF_*`` environment switch."""
+    envs = []
+
+    class RecordingPopen:
+        pid = 0
+
+        def __init__(self, argv, **kw):
+            envs.append(kw["env"])
+
+        def communicate(self, timeout=None):
+            return '{"t": 1.0, "rows": 1}\n', ""
+
+    monkeypatch.delenv("PYSPARK_SUBMIT_ARGS", raising=False)
+    monkeypatch.setattr(scale_sweep.subprocess, "Popen", RecordingPopen)
+    scale_sweep._cell("dedup_exact", "/tmp/sf1m")
+    scale_sweep._cell("dedup_exact", "/root/testdata/sf0.1")
+    scaled, base = (env.get("PYSPARK_SUBMIT_ARGS", "") for env in envs)
+    for k, v in scale_sweep.CLUSTER_CONFS.items():
+        assert f"--conf {k}={v}" in scaled, scaled
+        assert k not in base, base
+    assert scaled.endswith(" pyspark-shell")
+
+    # the real chain, moved under tmp_path so no level exists yet
+    real = scale_sweep.SLICE_CHAIN
+    moved = {d: str(tmp_path / os.path.basename(d)) for d in real}
+    monkeypatch.setattr(
+        scale_sweep,
+        "SLICE_CHAIN",
+        {moved[d]: (moved.get(src, src), salt) for d, (src, salt) in real.items()},
+    )
+    runs = []
+    monkeypatch.setattr(scale_sweep.subprocess, "run", lambda argv, **kw: runs.append((argv, kw)))
+    scale_sweep._ensure_scaled(moved["/tmp/sf10m"])
+    assert [argv[-3:] for argv, _ in runs] == [
+        ["/root/testdata/sf0.1", moved["/tmp/sf1m"], "q"],
+        [moved["/tmp/sf1m"], moved["/tmp/sf10m"], "r"],
+    ]
+    for _, kw in runs:
+        assert not [k for k in kw.get("env", os.environ) if k.startswith("SF_")], kw
+
+
+def test_make_sf1_without_salt_exits_before_any_session(monkeypatch):
+    """The salt is a required argument: leaving it out is a usage error
+    (exit 2) before a session starts."""
+    import collimate_spark.session
+
+    def no_session(*a, **k):
+        raise AssertionError("session started on a usage error")
+
+    monkeypatch.setattr(collimate_spark.session, "get_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        make_sf1.main(["/root/testdata/sf0.1", "/tmp/sf1m"])
     assert exc.value.code == 2

@@ -1,12 +1,13 @@
-"""Session confs: the scale-mode gate and the local core count.
+"""Session confs: no cluster-only conf in any session, and the local core
+count.
 
 `initialPartitionNum=1024` and the zstd codecs are the cluster confs of
-DEPLOY.md, and the r10 A/B measured them costing real time at bench
-scale (window_running_sum 0.50->0.63s, asof 0.92->1.13s, doc_fingerprint
-0.58->0.74s at sf0.1). They gate on SPARK_GRAFT_SCALE_MODE; these tests
-pin the gate so the bench/driver sessions and the driver's own vanilla
-session keep identical shuffle behavior at bench scale. Without
-SPARK_GRAFT_CPUS a session runs one Spark core per host core.
+DEPLOY.md; the r10 A/B measured them costing real time at bench scale
+(window_running_sum 0.50->0.63s, asof 0.92->1.13s, doc_fingerprint
+0.58->0.74s at sf0.1). No session sets them, so the bench/driver
+sessions and the driver's own vanilla session keep identical shuffle
+behavior. Without SPARK_GRAFT_CPUS a session runs one Spark core per
+host core.
 """
 
 from __future__ import annotations
@@ -22,18 +23,11 @@ _CODEC = "spark.io.compression.codec"
 _PQ_CODEC = "spark.sql.parquet.compression.codec"
 
 
-def test_scale_confs_absent_by_default():
-    confs = session_confs(32, scale_mode=False)
+def test_no_session_sets_the_cluster_confs():
+    confs = session_confs(32)
     assert _IPN not in confs, "wide initial shuffles leaked into bench-scale sessions"
     assert _CODEC not in confs, "zstd codec leaked into bench-scale sessions"
     assert _PQ_CODEC not in confs, "zstd parquet output leaked into bench-scale sessions"
-
-
-def test_scale_mode_adds_decade_knobs():
-    confs = session_confs(32, scale_mode=True)
-    assert confs[_IPN] == "1024"
-    assert confs[_CODEC] == "zstd"
-    assert confs[_PQ_CODEC] == "zstd"
 
 
 def test_default_master_uses_host_core_count():
@@ -59,8 +53,8 @@ def test_default_master_uses_host_core_count():
 
 
 def test_live_test_session_has_no_wide_initial_shuffles(spark):
-    """The shared test session was built without scale mode: no stage may
-    fan out to 1024 map partitions at bench scale."""
+    """The shared test session carries no cluster conf: no stage may fan
+    out to 1024 map partitions at bench scale."""
     assert spark.conf.get(_IPN, None) in (None, spark.conf.get("spark.sql.shuffle.partitions"))
 
 
@@ -71,10 +65,9 @@ _FS_CKPT_MANAGER = (
 
 
 def test_checkpoint_manager_is_the_filesystem_one():
-    """Local checkpoints rename through the FileSystem manager in every
-    mode: every session runs local[N]."""
-    for scale_mode in (False, True):
-        assert session_confs(32, scale_mode=scale_mode)[_CKPT_MANAGER] == _FS_CKPT_MANAGER
+    """Local checkpoints rename through the FileSystem manager: every
+    session runs local[N]."""
+    assert session_confs(32)[_CKPT_MANAGER] == _FS_CKPT_MANAGER
 
 
 def test_checkpoint_manager_class_resolves_on_the_running_jvm(spark):

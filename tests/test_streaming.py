@@ -9,7 +9,6 @@ import time
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-import pytest
 from pyspark.sql.window import Window
 
 from collimate_spark.plans import executed_plan
@@ -501,71 +500,6 @@ def test_heavy_hitters_stream_replayed_epoch_keeps_one_snapshot(spark, tmp_path)
     keys = [(e, w) for e, w, _ in rows]
     assert len(keys) == len(set(keys)), f"replayed epoch duplicated snapshot rows: {sorted(rows)}"
     assert {w: c for e, w, c in rows if e == last}["hot"] == 12
-
-
-def test_transform_with_state_lifetime_stats(spark, tmp_path):
-    """Spark 4 StatefulProcessor: per-user lifetime (n, total) must
-    accumulate ACROSS micro-batches via the value state.
-
-    Environment gate: the transformWithState driver worker speaks
-    protobuf to the JVM state server; this container ships no
-    `google.protobuf`, so the test skips where the dependency is absent
-    (the operator itself imports lazily and documents the requirement)."""
-    import json
-
-    pytest.importorskip("google.protobuf")
-
-    from collimate_spark.streaming.pipeline import user_lifetime_stats
-
-    indir = str(tmp_path / "tws_in")
-    out_dir = str(tmp_path / "tws_out")
-    ckpt = str(tmp_path / "tws_ckpt")
-    os.makedirs(indir)
-    ev_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    with open(os.path.join(indir, "b1.jsonl"), "w") as fh:
-        fh.write(json.dumps({"user_id": 1, "value": 10.0}) + "\n")
-        fh.write(json.dumps({"user_id": 1, "value": 5.0}) + "\n")
-        fh.write(json.dumps({"user_id": 2, "value": 7.0}) + "\n")
-    with open(os.path.join(indir, "b2.jsonl"), "w") as fh:
-        fh.write(json.dumps({"user_id": 1, "value": 2.5}) + "\n")
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        events = (
-            spark.readStream.schema(ev_schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(indir)
-        )
-        q = (
-            user_lifetime_stats(events)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-        rows = spark.read.parquet(out_dir).collect()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    latest = {}
-    for r in sorted(rows, key=lambda r: r.n_events):
-        latest[r.user_id] = r
-    assert latest[1].n_events == 3 and abs(latest[1].total_value - 17.5) < 1e-9
-    assert latest[2].n_events == 1 and abs(latest[2].total_value - 7.0) < 1e-9
 
 
 def test_cdc_apply_stream_merges_upserts_and_deletes(spark, tmp_path):
